@@ -143,16 +143,16 @@ def run_analytics(spark) -> dict[str, float]:
                  "q_cosine_topk", "q_exact_dup_groups",
                  "q_pii_redact", "q_contamination",
                  "q_bm25_topk", "q_webtext_prep", "q_kcore",
-                 "q_crawl_plan", "q_phrase_match", "q_pps_sample",
+                 "q_phrase_match", "q_pps_sample",
                  "q_link_pred", "q_quality_clf", "q_tfidf_keywords",
-                 "q_kn_bigrams", "q_heavy_hitters", "q_discovery_plan",
+                 "q_kn_bigrams", "q_heavy_hitters",
                  "q_fuzzy_join", "q_temperature_mix", "q_pub_dates",
                  "q_ktruss", "q_lpa_communities", "q_random_walks",
-                 "q_burst_terms", "q_trap_hosts", "q_priority_sample",
+                 "q_burst_terms", "q_priority_sample",
                  "q_funnel", "q_cocitation", "q_hyperball",
                  "q_pagerank_inc", "q_kmv_jaccard",
-                 "q_redirects", "q_textrank", "q_jsonld", "q_salsa",
-                 "q_webarchive_rank", "q_ams_join", "q_warc_pipeline"):
+                 "q_textrank", "q_jsonld", "q_salsa",
+                 "q_ams_join", "q_warc_pipeline"):
         fn = qmap[name]
         walls = []
         for _ in range(repeats):
@@ -242,21 +242,15 @@ def default_bench() -> dict:
                 out["scaling"] = json.load(f)
         except (OSError, json.JSONDecodeError):
             pass
-    # Further recorded datapoints, each written once by its script:
-    # SPANS_SCALING.json (bench_spans_scaling.py — second north-rule
-    # point), FRONTIER_SCALING.json (bench_frontier_skew.py — the
-    # hot-host politeness cut under 90%-one-host skew), and
-    # STREAM_CRAWL_RECORDED.json (bench_stream_crawl.py — 3-batch
-    # streaming scheduler walls + seen growth).
+    # Further recorded datapoints, each written once by its script
+    # (e.g. SPANS_SCALING.json from bench_spans_scaling.py — second
+    # north-rule point).
     for key, fname in (
         ("spans_scaling", "SPANS_SCALING.json"),
-        ("frontier_scaling", "FRONTIER_SCALING.json"),
-        ("stream_crawl", "STREAM_CRAWL_RECORDED.json"),
         ("kn_scaling", "KN_SCALING.json"),
         ("neardup_stream", "NEARDUP_STREAM_RECORDED.json"),
         ("fuzzy_scaling", "FUZZY_SCALING.json"),
         ("suffix_scaling", "SUFFIX_SCALING.json"),
-        ("redirects_scaling", "REDIRECTS_SCALING.json"),
     ):
         p = os.path.join(REPO, fname)
         if os.path.isfile(p):

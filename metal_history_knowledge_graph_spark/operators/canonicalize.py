@@ -227,7 +227,8 @@ def connected_components(
     job, zero shuffle iterations. If the pair set ever exceeds
     ``driver_pair_limit`` the distributed min-label-propagation loop
     takes over (one shuffle per iteration, localCheckpoint lineage
-    cuts)."""
+    cuts); it raises ``RuntimeError`` rather than return a component
+    split across labels when ``max_iter`` rounds do not converge."""
     # ONE action decides the path AND fetches the pairs: limit+1 rows
     # collected — if fewer come back than the cap, that IS the complete
     # pair set (the LSH join + verify UDF lineage runs once, not once
@@ -285,6 +286,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     labels = paired.withColumn("label", F.col("form_norm"))
+    changed = 1
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(
@@ -311,6 +313,12 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    if changed != 0:
+        raise RuntimeError(
+            f"label propagation did not converge in {max_iter} rounds "
+            "(a component's diameter exceeds max_iter) — re-run with a "
+            "larger max_iter"
+        )
     return (
         forms.select("entity_type", "form_norm")
         .join(labels, ["entity_type", "form_norm"], "left")

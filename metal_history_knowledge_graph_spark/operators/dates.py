@@ -1,8 +1,6 @@
 """Publication-date extraction from page text — the freshness signal
-feeding recrawl scheduling (`operators/frontier.advertised_recrawl`
-consumes sitemap-advertised lastmod; this operator recovers the same
-signal from the page BODY when no sitemap exists, which at web scale
-is most hosts).
+feeding recrawl scheduling, recovered from the page BODY (most hosts
+at web scale advertise no sitemap lastmod).
 
 Reference tie-in: the reference stores release dates/years parsed from
 crawled text (src/extraction/schema.py date fields) via its LLM pass;

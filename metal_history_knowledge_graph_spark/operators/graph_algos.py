@@ -1053,9 +1053,8 @@ def pagerank_personalized(
     """Personalized (topic-sensitive) PageRank: teleport mass returns
     ONLY to the ``seeds`` node set, so rank measures proximity to the
     seeds — the focused-crawl scorer (seed the hosts you trust, rank
-    every host by how reachable it is from them, feed the scores to
-    frontier_priorities) and the related-entity ranker the global
-    pagerank cannot express.
+    every host by how reachable it is from them) and the related-entity
+    ranker the global pagerank cannot express.
 
     Same fixed-point BIGINT trajectory as :func:`pagerank` (floor
     divides, dangling mass dropped), with the teleport term gated to

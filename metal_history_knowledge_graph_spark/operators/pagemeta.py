@@ -1,8 +1,7 @@
 """In-page crawl directives: ``<meta name="robots">``, per-anchor
 ``rel`` attributes, and ``<link rel>`` alternates — the page-level
-half of the politeness/selection stack (operators/robots.py is the
-host-level half; RFC 9309 governs FETCHING, these govern INDEXING and
-LINK ENDORSEMENT).
+directives that govern INDEXING and LINK ENDORSEMENT (robots.txt,
+RFC 9309, governs fetching and is out of scope here).
 
 Why a training-data / KG pipeline needs them:
   * ``noindex`` pages must not enter the corpus or the KG — the
@@ -16,8 +15,6 @@ Why a training-data / KG pipeline needs them:
     translation sets — the highest-precision bitext candidates there
     are (cf. operators/bitext.py's URL-template mining, which these
     confirm or seed).
-  * ``<link rel="canonical">`` feeds operators/redirects.py's
-    functional graph alongside 3xx edges.
 
 Parsing: two-stage native regex — explode whole tags first
 (``<meta …>`` / ``<a …>`` / ``<link …>``), then extract attributes
@@ -155,35 +152,6 @@ def hreflang_alternates(
             (F.col("rel") == "alternate")
             & (F.col("hreflang") != "")
             & (F.col("href") != "")
-        )
-        .drop("rel")
-    )
-
-
-def canonical_declarations(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """(src, dst): ``<link rel="canonical">`` edges, ready to union
-    with 3xx redirect edges into operators/redirects.resolve_redirects
-    (the page's declared alias-of pointer). Self-canonicals ("this
-    page IS the canonical") are dropped — they declare identity, not
-    an alias, and as functional-graph self-loops they would read as
-    unresolvable cycles to the resolver."""
-    tags = df.select(
-        F.col(url_col).alias("src"),
-        F.explode(_tags(F.col(html_col), LINK_TAG_RE)).alias("tag"),
-    )
-    rel = F.lower(F.regexp_extract("tag", _REL_ATTR_RE, 1))
-    return (
-        tags.select(
-            "src",
-            rel.alias("rel"),
-            F.regexp_extract("tag", _HREF_ATTR_RE, 1).alias("dst"),
-        )
-        .filter(
-            (F.col("rel") == "canonical")
-            & (F.col("dst") != "")
-            & (F.col("dst") != F.col("src"))
         )
         .drop("rel")
     )

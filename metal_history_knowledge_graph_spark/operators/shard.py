@@ -26,9 +26,7 @@ replays assignments bit-exactly; ties (2⁻⁶⁰) break by shard name.
 
 Reference parity note: the reference is a single-process pipeline
 (src/pipeline/*) with no sharding surface; this family is part of the
-beyond-reference crawl-infrastructure tier (SURVEY §6) next to
-frontier scheduling (operators/frontier.py) and crawl-trap detection
-(operators/traps.py).
+beyond-reference crawl-infrastructure tier (SURVEY §6).
 """
 
 from __future__ import annotations

@@ -5,8 +5,7 @@ tier); allocation is ``min(demand, λ·weight)`` at the common water
 level λ that spends the budget. Hosts with little demand are served
 fully; the rest share the remainder proportionally to weight — the
 max-min-fair allocator of networking (RFC 970 lineage), applied to
-politeness budgets (frontier.py's per-host budget dim is the fixed
-version; this computes the dim).
+politeness budgets.
 
 Determinism / oracle: λ is found as the LARGEST INTEGER micro-level
 with ``Σ min(d, λ·w div 10⁶) ≤ B`` by bisection on integers — the

@@ -107,34 +107,14 @@ def run(
         return n, {}
 
     def do_entities():
-        extracted = store.read("extracted")
-        mentions = mentions_of(extracted)
-        entities, resolution, provenance = canonicalize_core(
-            mentions, spark, pair_strategy=pair_strategy
-        )
-        store.write(resolution, "resolution")
-        # provenance pair table commits FIRST (the narrow mention-scale
-        # pass executes exactly once, into this write); the n_sources /
-        # sample attach then aggregates the committed two-column table
-        store.write(provenance, "entity_provenance")
-        write_entities(store, attach_provenance_sample(
-            entities, store.read("entity_provenance")))
+        _write_entities_tail(spark, store, store.read("extracted"), pair_strategy)
         n, _ = commit_partition_lineage(store, partition_lineage(
             store.read("entities"), run_id, "entities", key_col="canonical_name"
         ))
         return n, {"forms": store.read("resolution").count()}
 
     def do_edges():
-        extracted = store.read("extracted")
-        rels = relationships_of(extracted)
-        rep, edge_prov = build_triples(
-            rels, store.read("entities"), store.read("resolution")
-        )
-        # provenance pair table commits FIRST (the mention-scale pass
-        # executes exactly once, into this write); the edge pools then
-        # aggregate the committed two-column table
-        store.write(edge_prov, "edge_provenance")
-        write_edges(store, finalize_edges(rep, store.read("edge_provenance")))
+        _write_edges_tail(store, store.read("extracted"))
         n, _ = commit_partition_lineage(store, partition_lineage(
             store.read("edges"), run_id, "edges", key_col="edge_key"
         ))
@@ -145,6 +125,40 @@ def run(
     timed("entities", do_entities)
     timed("edges", do_edges)
     return metrics
+
+
+def _write_entities_tail(
+    spark: SparkSession, store: TableStore, extracted: DataFrame,
+    pair_strategy: str,
+) -> None:
+    """canonicalize → resolution, entity_provenance, entities: the writes
+    ``run``'s entities stage and ``run_incremental`` share (lineage
+    commits stay with the callers)."""
+    mentions = mentions_of(extracted)
+    entities, resolution, provenance = canonicalize_core(
+        mentions, spark, pair_strategy=pair_strategy
+    )
+    store.write(resolution, "resolution")
+    # provenance pair table commits FIRST (the narrow mention-scale
+    # pass executes exactly once, into this write); the n_sources /
+    # sample attach then aggregates the committed two-column table
+    store.write(provenance, "entity_provenance")
+    write_entities(store, attach_provenance_sample(
+        entities, store.read("entity_provenance")))
+
+
+def _write_edges_tail(store: TableStore, extracted: DataFrame) -> None:
+    """build triples → edge_provenance, edges (shared like
+    :func:`_write_entities_tail`)."""
+    rels = relationships_of(extracted)
+    rep, edge_prov = build_triples(
+        rels, store.read("entities"), store.read("resolution")
+    )
+    # provenance pair table commits FIRST (the mention-scale pass
+    # executes exactly once, into this write); the edge pools then
+    # aggregate the committed two-column table
+    store.write(edge_prov, "edge_provenance")
+    write_edges(store, finalize_edges(rep, store.read("edge_provenance")))
 
 
 def processed_urls(store: TableStore) -> DataFrame:
@@ -189,17 +203,8 @@ def _rebuild_downstream(
     metrics: dict[str, float] = {}
     t0 = time.time()
     extracted = store.read("extracted")
-    mentions = mentions_of(extracted)
-    entities, resolution, provenance = canonicalize_core(
-        mentions, spark, pair_strategy=pair_strategy)
-    store.write(resolution, "resolution")
-    store.write(provenance, "entity_provenance")
-    write_entities(store, attach_provenance_sample(
-        entities, store.read("entity_provenance")))
-    rels = relationships_of(extracted)
-    rep, edge_prov = build_triples(rels, store.read("entities"), store.read("resolution"))
-    store.write(edge_prov, "edge_provenance")
-    write_edges(store, finalize_edges(rep, store.read("edge_provenance")))
+    _write_entities_tail(spark, store, extracted, pair_strategy)
+    _write_edges_tail(store, extracted)
     metrics["incremental_secs"] = time.time() - t0
     metrics["entities_rows"] = store.read("entities").count()
     metrics["edges_rows"] = store.read("edges").count()

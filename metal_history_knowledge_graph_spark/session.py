@@ -45,6 +45,12 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+#: Directory that holds this package. Python workers import the package
+#: by name, and a local-mode worker's own ``sys.path`` only covers its
+#: working directory, so this goes first on the executors' PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(
     app_name: str = "metal-history-kg",
     master: str | None = None,
@@ -70,6 +76,10 @@ def get_spark(
     confs.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     if extra_confs:
         confs.update(extra_confs)
+    paths = confs.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    confs["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        dict.fromkeys(p for p in [_PACKAGE_PARENT, *paths] if p)
+    )
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -246,93 +246,6 @@ def interval_join_attribution(
     )
 
 
-def stream_crawl_scheduler(
-    spark: SparkSession,
-    candidates: DataFrame,
-    robots_rules: DataFrame,
-    host_scores: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    per_host_budget: int = 10,
-    host_budgets: DataFrame | None = None,
-):
-    """Continuous frontier: a STREAM of discovered URLs → per-micro-
-    batch polite fetch batches, with a persistent seen-set so a URL
-    scheduled in batch N is never rescheduled in batch N+k (the
-    streaming twin of plans/crawl.crawl_schedule, same operators).
-
-    foreachBatch runs the full batch plan (canonicalize → collapse →
-    seen anti-join → robots → priority → politeness budget) and
-    appends BOTH the schedule (``schedule/`` — batch_id-partitioned)
-    and the scheduled canonical urls (``seen/`` — the compact
-    url-only table, the ``processed_urls`` pattern). Crash-replay
-    safety, stated precisely: the schedule is EXACTLY-once per
-    (url, batch). The commit point is an atomic ``_COMMITTED`` marker
-    touched inside the ``batch_id=`` partition AFTER the schedule
-    write completes (a bare directory probe would mistake a
-    crash-mid-commit partial partition for a finished batch and
-    silently drop the batch's remaining urls). A replayed batch whose
-    marker exists skips recomputation (the seen state has moved under
-    it, so recomputing would produce a DIFFERENT, possibly empty,
-    batch) and only re-appends that partition's urls to ``seen``; a
-    partial partition WITHOUT the marker is scrubbed and recomputed —
-    safe because the ``seen`` append is sequenced after the marker, so
-    a crashed attempt never advanced the seen state. ``seen`` itself
-    tolerates duplicates because its only consumer is an anti-join.
-    The probe/scrub are filesystem calls — swap in the Hadoop
-    FileSystem API for object stores.
-    Robots rules and host scores are batch dims (vocabulary-sized,
-    re-read per batch at their current state — policy updates apply
-    from the next batch on).
-    """
-    import os
-
-    from ..plans.crawl import crawl_schedule
-
-    sched_dir = os.path.join(out_dir, "schedule")
-    seen_dir = os.path.join(out_dir, "seen")
-
-    def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        part = os.path.join(sched_dir, f"batch_id={batch_id}")
-        marker = os.path.join(part, "_COMMITTED")  # _-prefix: parquet-invisible
-        if os.path.exists(marker):
-            # replay after the schedule committed: just make sure the
-            # seen append happened too (duplicates are harmless);
-            # a committed-empty batch has the marker but no data files
-            if any(not f.startswith(("_", ".")) for f in os.listdir(part)):
-                spark.read.parquet(part).select("url") \
-                    .write.mode("append").parquet(seen_dir)
-            return
-        if os.path.isdir(part):
-            # crash mid-commit left a partial partition: scrub it and
-            # recompute — seen was never advanced (append is sequenced
-            # after the marker), so the recomputed batch is complete
-            shutil.rmtree(part)
-        try:
-            seen = spark.read.parquet(seen_dir)
-        except Exception:
-            seen = None
-        batch = crawl_schedule(
-            batch_df, robots_rules, host_scores, seen=seen,
-            per_host_budget=per_host_budget, host_budgets=host_budgets,
-        ).localCheckpoint(eager=True)  # freeze before the two writes
-        batch.withColumn("batch_id", F.lit(batch_id).cast("long")) \
-            .write.mode("append").partitionBy("batch_id").parquet(sched_dir)
-        os.makedirs(part, exist_ok=True)  # empty batch writes no partition dir
-        with open(marker, "a"):
-            pass  # the atomic commit point
-        batch.select("url").write.mode("append").parquet(seen_dir)
-
-    return (
-        candidates.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_neardup_ingest(
     spark: SparkSession,
     docs: DataFrame,
@@ -362,8 +275,8 @@ def stream_neardup_ingest(
 
     Outputs under ``out_dir``: ``accepted/`` (batch_id-partitioned
     admitted documents with ``group_size`` provenance) and ``index/``
-    (the growing ``minhash_band_table``). Exactly-once via the
-    ``_COMMITTED`` marker protocol of ``stream_crawl_scheduler``
+    (the growing ``minhash_band_table``). Exactly-once via an atomic
+    ``_COMMITTED`` marker inside the ``batch_id=`` partition
     (marker after the accepted write; the index append is sequenced
     after the marker and recomputed FROM the committed partition on
     replay, so a crash never admits a document twice and duplicate

@@ -9,6 +9,7 @@ from metal_history_knowledge_graph_spark.functions.gazetteer import BANDS, PEOPL
 from metal_history_knowledge_graph_spark.operators.canonicalize import (
     candidate_pairs_exact,
     candidate_pairs_lsh,
+    connected_components,
     verify_pairs,
 )
 
@@ -62,3 +63,31 @@ def test_cross_type_never_pairs(vocab_forms):
     verified = _verified(pairs)
     for etype, left, right in verified:
         assert etype in ("bands", "people")
+
+
+def _chain(spark, n=5):
+    """Forms f0..f{n-1} linked as a path f0-f1-...: diameter n-1."""
+    names = [f"f{i}" for i in range(n)]
+    forms = spark.createDataFrame(
+        [("bands", f) for f in names], "entity_type string, form_norm string"
+    )
+    edges = spark.createDataFrame(
+        [("bands", a, b) for a, b in zip(names, names[1:])],
+        "entity_type string, left string, right string",
+    )
+    return forms, edges
+
+
+def test_distributed_components_match_driver_path(spark):
+    forms, edges = _chain(spark)
+    labels = lambda df: {(r.form_norm, r.label) for r in df.collect()}  # noqa: E731
+    driver = labels(connected_components(forms, edges))
+    assert driver == {(f"f{i}", "f0") for i in range(5)}
+    assert labels(connected_components(forms, edges, driver_pair_limit=0)) == driver
+
+
+def test_distributed_components_raise_on_non_convergence(spark):
+    """A capped label propagation must not split a component silently."""
+    forms, edges = _chain(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(forms, edges, driver_pair_limit=0, max_iter=1)

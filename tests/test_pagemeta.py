@@ -1,11 +1,10 @@
 """Page-level crawl directives: robots meta union, rel-aware anchors,
-hreflang alternates, canonical edges."""
+hreflang alternates."""
 
 from pyspark.sql import functions as F
 
 from metal_history_knowledge_graph_spark.operators.pagemeta import (
     anchors_with_rel,
-    canonical_declarations,
     hreflang_alternates,
     robots_directives,
 )
@@ -28,7 +27,7 @@ P1 = (
 )
 P2 = (
     "<html><head>"
-    '<link rel="canonical" href="http://t.com/p2">'  # self -> dropped
+    '<link rel="canonical" href="http://t.com/p2">'  # not an alternate
     "</head><body>"
     '<a href="http://x.com/d">endorsed</a>'
     "</body></html>"
@@ -78,25 +77,3 @@ def test_hreflang_alternates(spark):
         for r in hreflang_alternates(_pages(spark)).collect()
     }
     assert got == {("en", "http://s.com/en"), ("de", "http://s.com/de")}
-
-
-def test_canonical_edges_drop_self(spark):
-    got = {
-        (r["src"], r["dst"])
-        for r in canonical_declarations(_pages(spark)).collect()
-    }
-    assert got == {("http://s.com/p1", "http://s.com/canon")}
-
-
-def test_feeds_redirect_resolver(spark):
-    from metal_history_knowledge_graph_spark.operators.redirects import (
-        resolve_redirects,
-    )
-
-    res = {
-        r["url"]: r["final_url"]
-        for r in resolve_redirects(
-            canonical_declarations(_pages(spark))
-        ).collect()
-    }
-    assert res == {"http://s.com/p1": "http://s.com/canon"}

@@ -266,88 +266,3 @@ def test_interval_join_attribution_streaming_matches_batch(spark, tmp_path):
     lags = {(u, int(l)) for u, _, _, l in emitted}
     assert (1, 1200) in lags and (1, 1800) in lags
     assert all(u != 3 for u, *_ in emitted)
-
-
-def test_stream_crawl_scheduler_never_reschedules(spark, tmp_path):
-    """Continuous frontier: batch 2 must not reschedule urls already
-    scheduled in batch 1 (persistent seen-set), spellings collapse,
-    robots and budgets apply per micro-batch, and a replayed batch is
-    exactly-once on the schedule table."""
-    import os
-
-    from metal_history_knowledge_graph_spark.operators.robots import parse_robots
-    from metal_history_knowledge_graph_spark.streaming.incremental import (
-        stream_crawl_scheduler,
-    )
-
-    src = str(tmp_path / "cand_stream")
-    out = str(tmp_path / "crawl_out")
-    cp = str(tmp_path / "crawl_cp")
-    rules = parse_robots(spark.createDataFrame(
-        [("a.example", "User-agent: *\nDisallow: /private/\n")],
-        "domain string, robots_txt string",
-    )).localCheckpoint(eager=True)
-    scores = spark.createDataFrame(
-        [("a.example", 1_000_000)], "host string, rank_fixed long"
-    )
-
-    def run():
-        cand = spark.readStream.schema("url string").parquet(src)
-        q = stream_crawl_scheduler(
-            spark, cand, rules, scores, out, cp, per_host_budget=10
-        )
-        q.awaitTermination(300)
-
-    spark.createDataFrame(
-        [("http://a.example/one",), ("HTTP://A.example:80/one",),
-         ("http://a.example/private/x",), ("http://a.example/two",)],
-        "url string",
-    ).write.mode("append").parquet(src)
-    run()
-    s1 = spark.read.parquet(os.path.join(out, "schedule"))
-    urls1 = {r.url for r in s1.collect()}
-    assert urls1 == {"http://a.example/one", "http://a.example/two"}
-
-    # batch 2 re-discovers old urls plus one new
-    spark.createDataFrame(
-        [("http://a.example/one",), ("http://a.example/three",)],
-        "url string",
-    ).write.mode("append").parquet(src)
-    run()
-    s2 = spark.read.parquet(os.path.join(out, "schedule"))
-    assert {r.url for r in s2.collect()} == urls1 | {"http://a.example/three"}
-    # exactly one schedule row per url across batches
-    assert s2.groupBy("url").count().filter(F.col("count") > 1).count() == 0
-    # the crash-replay guard's precondition: completed batches leave
-    # their batch_id= partition on disk, and re-appending its urls to
-    # seen (what a replay does) is harmless to the anti-join consumer
-    part0 = os.path.join(out, "schedule", "batch_id=0")
-    assert os.path.isdir(part0)
-    # the commit point is the atomic _COMMITTED marker, not the dir
-    assert os.path.exists(os.path.join(part0, "_COMMITTED"))
-    n_before = s2.count()
-    seen_before = spark.read.parquet(os.path.join(out, "seen")).count()
-    spark.read.parquet(part0).select("url").write.mode("append") \
-        .parquet(os.path.join(out, "seen"))
-    assert spark.read.parquet(os.path.join(out, "schedule")).count() == n_before
-    assert spark.read.parquet(os.path.join(out, "seen")).count() > seen_before
-
-    # crash-mid-commit replay: a partial batch_id= partition WITHOUT
-    # the marker (the schedule write died before committing) must be
-    # scrubbed and recomputed, not mistaken for a finished batch —
-    # otherwise the batch's remaining urls silently vanish
-    stray_part = os.path.join(out, "schedule", "batch_id=2")
-    spark.createDataFrame(
-        [("http://a.example/STRAY", "a.example", 1, 1, 1)],
-        "url string, host string, depth int, priority_fixed long, fetch_slot long",
-    ).coalesce(1).write.mode("overwrite").parquet(stray_part)
-    assert not os.path.exists(os.path.join(stray_part, "_COMMITTED"))
-    spark.createDataFrame(
-        [("http://a.example/four",)], "url string"
-    ).write.mode("append").parquet(src)
-    run()
-    s3 = spark.read.parquet(os.path.join(out, "schedule"))
-    urls3 = {r.url for r in s3.collect()}
-    assert "http://a.example/STRAY" not in urls3  # partial scrubbed
-    assert "http://a.example/four" in urls3  # batch recomputed in full
-    assert os.path.exists(os.path.join(stray_part, "_COMMITTED"))
