@@ -72,14 +72,11 @@ def extract_chunks(chunks: DataFrame) -> DataFrame:
             for rec in pdf.itertuples(index=False):
                 mentions, rels = extract_from_text(rec.text)
                 for m in mentions:
-                    row = dict(kind="mention", chunk_id=rec.id, url=rec.url,
-                               chunk_index=rec.chunk_index, idx=m["mention_index"],
-                               entity_type=m["entity_type"], name=m["name"],
-                               linked_name=m["linked_name"],
-                               confidence=m["confidence"])
-                    for a in _ATTR_NAMES:
-                        row[a] = m.get(a)
-                    rows.append(row)
+                    # the mention dict's keys are column names; the
+                    # DataFrame keeps only `cols` and fills absent ones
+                    rows.append({**m, "kind": "mention", "chunk_id": rec.id,
+                                 "url": rec.url, "chunk_index": rec.chunk_index,
+                                 "idx": m["mention_index"]})
                 for i, r in enumerate(rels):
                     rows.append(dict(
                         kind="rel", chunk_id=rec.id, url=rec.url,

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from ..io import TableStore
 
 LINEAGE_TABLE = "lineage"
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, status string, row_count long, "
+    "metrics map<string,double>, committed_ts double"
+)
 
 
 def stage_complete(store: TableStore, run_id: str, stage: str) -> bool:
@@ -49,15 +53,17 @@ def commit_stage(
     row_count: int,
     metrics: dict[str, float] | None = None,
 ) -> None:
-    spark = store.spark
-    metrics = {k: float(v) for k, v in (metrics or {}).items()}
-    row = [(run_id, stage, "complete", int(row_count), metrics, float(time.time()))]
-    df = spark.createDataFrame(
-        row,
-        "run_id string, stage string, status string, row_count long, "
-        "metrics map<string,double>, committed_ts double",
-    )
-    store.append(df, LINEAGE_TABLE)
+    # From pandas the row crosses via Arrow into a LocalRelation; a
+    # Python list would become a Python RDD and start worker tasks.
+    import pandas as pd
+
+    row = pd.DataFrame({
+        "run_id": [run_id], "stage": [stage], "status": ["complete"],
+        "row_count": [int(row_count)],
+        "metrics": [{k: float(v) for k, v in (metrics or {}).items()}],
+        "committed_ts": [float(time.time())],
+    })
+    store.append(store.spark.createDataFrame(row, LINEAGE_SCHEMA), LINEAGE_TABLE)
 
 
 PARTITION_LINEAGE_TABLE = "partition_lineage"
