@@ -2,17 +2,19 @@
 """Benchmark harness.
 
 Default: full KG pipeline (pages → triples) over a seeded synthetic
-corpus scaled to the sf dir, plus headline read queries, on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+corpus scaled to the sf dir, on local[$SPARK_GRAFT_CPUS]. Prints ONE
+JSON line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...per-phase/query sec...}, "sf": ...,
+    {"metric": "kg_pipeline_e2e_wall", "value": <total sec>, "unit": "sec",
+     "queries": {...per-stage sec...}, "sf": ...,
      "pages": N, "triples": M, "triples_per_sec": T}
 
-Scaling mode (the north rule's two-cluster-size evidence, sandbox
-substitution): ``python bench.py --scaling`` runs the same pipeline at
-local[8] and local[32] on identical input and reports throughput at
-both plus efficiency = (T8/T32)/(32/8).
+The KG read mix and per-layer traces live in ``perfbench/``.
+
+Scaling mode (two-cluster-size evidence on one host):
+``python bench.py --scaling --low N --high 4N`` runs the same pipeline
+at local[N] and local[4N] on identical input and reports throughput at
+both plus efficiency = (T4N/TN)/4, written to SCALING_RECORDED.json.
 """
 
 from __future__ import annotations
@@ -98,69 +100,7 @@ def run_pipeline(spark, pages_path: str, store_root: str) -> dict:
     # the distinct-fact count saturates at vocabulary size.
     observations = store.read("edge_provenance").count()
     return dict(wall=wall, triples=triples, observations=observations,
-                metrics=metrics, store=store)
-
-
-def run_read_queries(spark, store) -> dict[str, float]:
-    from pyspark.sql import functions as F
-
-    from metal_history_knowledge_graph_spark.plans import queries as Q
-
-    ents = store.read("entities")
-    edges = store.read("edges")
-    out: dict[str, float] = {}
-
-    def timed(name, fn):
-        t0 = time.time()
-        fn()
-        out[name] = round(time.time() - t0, 3)
-
-    timed("kg_degree_stats", lambda: Q.degree_stats(edges).count())
-    timed("kg_genre_popularity", lambda: Q.genre_popularity(edges).count())
-    timed("kg_bands_per_decade", lambda: Q.bands_per_decade(ents).count())
-    timed("kg_shared_members", lambda: Q.shared_members(edges).count())
-    timed("kg_influence_chains", lambda: Q.influence_chains(edges).count())
-    timed("kg_substring_search", lambda: Q.substring_search(ents, "sab").count())
-    return out
-
-
-def run_analytics(spark) -> dict[str, float]:
-    """Each analytic query runs ``SPARK_GRAFT_REPEATS`` times (default
-    2) and the MINIMUM wall is reported — the same treatment the
-    pipeline phase gets. Single-sample analytic walls on this host are
-    meaningless: BENCH_r03 recorded q_cosine_topk at 11.0 s vs r2's
-    1.05 s on byte-identical code (hypervisor throttling), which the
-    judge flagged as unusable evidence. min-of-N filters the throttle
-    spikes; the query output is deterministic so the min is pure noise
-    removal."""
-    import __spark_entry__ as e
-
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "2")))
-    out: dict[str, float] = {}
-    qmap = e.queries()
-    for name in ("q_pricing_summary", "q_join_topn", "q_window_rank",
-                 "q_hourly_events", "q_token_counts", "q_quality_scores",
-                 "q_cosine_topk", "q_exact_dup_groups",
-                 "q_pii_redact", "q_contamination",
-                 "q_bm25_topk", "q_webtext_prep", "q_kcore",
-                 "q_phrase_match", "q_pps_sample",
-                 "q_link_pred", "q_quality_clf", "q_tfidf_keywords",
-                 "q_kn_bigrams", "q_heavy_hitters",
-                 "q_fuzzy_join", "q_temperature_mix", "q_pub_dates",
-                 "q_ktruss", "q_lpa_communities", "q_random_walks",
-                 "q_burst_terms", "q_priority_sample",
-                 "q_funnel", "q_cocitation", "q_hyperball",
-                 "q_pagerank_inc", "q_kmv_jaccard",
-                 "q_textrank", "q_jsonld", "q_salsa",
-                 "q_ams_join", "q_warc_pipeline"):
-        fn = qmap[name]
-        walls = []
-        for _ in range(repeats):
-            t0 = time.time()
-            fn(spark, SF_DIR).count()
-            walls.append(time.time() - t0)
-        out[name] = round(min(walls), 3)
-    return out
+                metrics=metrics)
 
 
 def make_spark(cpus: int):
@@ -211,8 +151,6 @@ def default_bench() -> dict:
     result = min(runs, key=lambda r: r["wall"])
     queries = {f"stage_{k}": round(v, 3) for k, v in result["metrics"].items()
                if k.endswith("_secs")}
-    queries.update(run_read_queries(spark, runs[-1]["store"]))
-    queries.update(run_analytics(spark))
     spark.stop()
 
     tps = result["observations"] / result["wall"] if result["wall"] else 0.0
@@ -242,23 +180,6 @@ def default_bench() -> dict:
                 out["scaling"] = json.load(f)
         except (OSError, json.JSONDecodeError):
             pass
-    # Further recorded datapoints, each written once by its script
-    # (e.g. SPANS_SCALING.json from bench_spans_scaling.py — second
-    # north-rule point).
-    for key, fname in (
-        ("spans_scaling", "SPANS_SCALING.json"),
-        ("kn_scaling", "KN_SCALING.json"),
-        ("neardup_stream", "NEARDUP_STREAM_RECORDED.json"),
-        ("fuzzy_scaling", "FUZZY_SCALING.json"),
-        ("suffix_scaling", "SUFFIX_SCALING.json"),
-    ):
-        p = os.path.join(REPO, fname)
-        if os.path.isfile(p):
-            try:
-                with open(p) as f:
-                    out[key] = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                pass
     return out
 
 

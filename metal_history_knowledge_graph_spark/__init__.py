@@ -13,8 +13,12 @@ Architecture (Spark-first, NOT a port — see /root/repo/SURVEY.md):
       → operators.materialize  entity/edge tables + lineage checkpoints
 
     plans.queries              the reference's 30-query read catalog
-    operators.{dedup,simsearch,textstats,multimodal}
-                               training-data-pipeline operators
+    operators.{validate,embeddings,simsearch,intent,monitor}
+                               validation, hybrid search, intent dispatch,
+                               quality monitoring over the built graph
+    operators.{graph_algos,dedup,textstats}
+                               graph analytics and the exact/LSH
+                               similarity joins the reads and driver use
 
 Everything is DataFrame/SQL; Python only ever runs inside Arrow-batched
 pandas UDFs (no per-row Python).

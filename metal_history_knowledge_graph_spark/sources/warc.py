@@ -247,7 +247,11 @@ def pages_from_warc(records: DataFrame, lang: str = "en") -> DataFrame:
             ]
             # WARC-Date is ISO-8601 and usually Z-suffixed; parse as
             # UTC then drop the zone so the Arrow column matches the
-            # naive TimestampType the pages schema declares
+            # naive TimestampType the pages schema declares.
+            # format="mixed" needs pandas >= 2.0; PySpark's pandas-UDF
+            # path already refuses pandas < 2.2.0
+            # (pyspark.sql.pandas.utils.require_minimum_pandas_version),
+            # so every executor that reaches this line has it.
             ts = pd.to_datetime(
                 pdf["warc_date"], utc=True, format="mixed"
             ).dt.tz_localize(None)
