@@ -13,12 +13,8 @@ Architecture (Spark-first, NOT a port — see /root/repo/SURVEY.md):
       → operators.materialize  entity/edge tables + lineage checkpoints
 
     plans.queries              the reference's 30-query read catalog
-    operators.{validate,embeddings,simsearch,intent,monitor}
-                               validation, hybrid search, intent dispatch,
-                               quality monitoring over the built graph
-    operators.{graph_algos,dedup,textstats}
-                               graph analytics and the exact/LSH
-                               similarity joins the reads and driver use
+    operators.{dedup,simsearch,textstats,multimodal}
+                               training-data-pipeline operators
 
 Everything is DataFrame/SQL; Python only ever runs inside Arrow-batched
 pandas UDFs (no per-row Python).

@@ -1,5 +1,4 @@
 """Operators: the KG-construction stages (chunk → extract →
-canonicalize → triples → materialize) plus the read-side operators
-over the built graph (validate, embeddings, simsearch, intent,
-monitor, search_quality, graph_algos) and the similarity joins and
-text statistics they use (dedup, textstats)."""
+canonicalize → triples → materialize) plus the training-data-pipeline
+operator family (dedup, simsearch, textstats, multimodal, graph
+algorithms)."""

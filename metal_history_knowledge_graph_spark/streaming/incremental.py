@@ -11,9 +11,9 @@ module ingests it with Structured Streaming:
   from BOTH the streaming checkpoint (no batch replay) and the
   anti-join against already-chunked urls (idempotent even if a batch
   IS replayed after a crash mid-foreachBatch).
-* ``interval_join_attribution`` — a watermarked stream-stream
-  interval join (click → purchase attribution) over the driver's
-  ``events`` table schema; on batch inputs it is the same range join.
+* ``windowed_event_counts`` — watermarked sliding-window aggregation
+  (the standard late-data pattern) over an event stream, used by tests
+  against the driver's ``events`` table schema.
 
 Downstream canonicalize/triples stages are re-derived in batch after
 ingest (they are vocabulary-sized folds; see plans/pipeline.py
@@ -90,6 +90,109 @@ def stream_ingest_pages(
     return writer.start()
 
 
+def stateful_running_counts(
+    rows: DataFrame,
+    key_col: str = "entity_key",
+    url_col: str = "url",
+) -> DataFrame:
+    """Custom stateful streaming operator via ``applyInPandasWithState``:
+    running per-entity mention totals plus an additive per-batch
+    distinct-url counter (``n_batches_urls`` = sum over micro-batches
+    of that batch's distinct urls — an upper bound on all-time distinct
+    sources, exact when the upstream ingest dedups urls per batch, as
+    ``ingest_batch``'s anti-join does). The per-group state is two
+    counters, so state size is O(groups), not O(stream).
+
+    This is the streaming analogue of the pipeline's per-entity
+    aggregation (the reference's checkpointed incremental extraction,
+    batch_extraction.py:39-99, fused with the mention-count fold).
+    Emits one updated row per touched group per micro-batch; state —
+    and therefore the totals — survives checkpointed restarts."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdf_iter, state):
+        import pandas as pd
+
+        if state.exists:
+            total, n_urls = state.get
+        else:
+            total, n_urls = 0, 0
+        batch_urls = set()
+        for pdf in pdf_iter:
+            total += len(pdf)
+            # dropna: a null url must not count as a distinct source
+            batch_urls.update(pdf[url_col].dropna().unique())
+        # exact distinct within this batch, additive across batches —
+        # see docstring for the upper-bound semantics
+        n_urls += len(batch_urls)
+        state.update((total, n_urls))
+        yield pd.DataFrame(
+            {key_col: [key[0]], "n_mentions": [total], "n_batches_urls": [n_urls]}
+        )
+
+    return rows.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=f"{key_col} string, n_mentions long, n_batches_urls long",
+        stateStructType="total long, n_urls long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def streaming_dedup(
+    rows: DataFrame,
+    key_cols: list[str],
+    ts_col: str = "ts",
+    watermark: str = "30 minutes",
+) -> DataFrame:
+    """Streaming exact dedup with bounded state: emit the first row per
+    key, dropping re-arrivals within the watermark horizon
+    (``dropDuplicatesWithinWatermark``).
+
+    This is the streaming analogue of the batch pipeline's exact-dedup
+    operators (``operators/dedup.exact_duplicates``,
+    ``triples.dedup_relationships``): the state store holds one entry
+    per key seen in the last ``watermark`` of event time and is evicted
+    as the watermark advances — unlike a plain streaming
+    ``dropDuplicates``, whose state grows without bound over an
+    unbounded crawl feed. Duplicates straddling a horizon boundary are
+    the (documented) miss; the batch exact-dedup downstream remains the
+    global guarantee, this operator keeps the *stream* volume bounded
+    at the source (re-crawls and mirror bursts arrive close together,
+    which is exactly the within-horizon case).
+
+    On a batch DataFrame it degrades to plain ``dropDuplicates`` —
+    same keys, no watermark needed — so batch/stream parity tests can
+    share one call."""
+    if rows.isStreaming:
+        return rows.withWatermark(ts_col, watermark) \
+            .dropDuplicatesWithinWatermark(key_cols)
+    return rows.dropDuplicates(key_cols)
+
+
+def windowed_event_counts(
+    events: DataFrame,
+    window: str = "10 minutes",
+    slide: str | None = None,
+    watermark: str = "30 minutes",
+) -> DataFrame:
+    """Watermarked (sliding-)window counts per event_type — works on a
+    stream (late rows beyond the watermark dropped, state bounded) and
+    identically on a batch DataFrame."""
+    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+    src = events
+    if events.isStreaming:
+        src = events.withWatermark("ts", watermark)
+    return src.groupBy(win.alias("w"), "event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    ).select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        "event_type", "n", "total_value",
+    )
+
+
 def interval_join_attribution(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -140,4 +243,118 @@ def interval_join_attribution(
         (
             F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts")
         ).cast("long").alias("lag_seconds"),
+    )
+
+
+def stream_neardup_ingest(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    threshold: float = 0.9,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+):
+    """Continuous near-dup-gated corpus ingest: a STREAM of documents
+    → per-micro-batch MinHash probe of the PERSISTED band index
+    (``dedup.minhash_probe_new`` — the index is never rebuilt),
+    within-batch closure dedup, and an index append for the admitted
+    survivors only — the streaming twin of the batch dedup family and
+    the standing shape of a crawl→training-corpus pipeline (every new
+    snapshot dedups against everything ever admitted).
+
+    Admission policy, stated precisely: within a batch, near-dup
+    groups are CLOSED (``dedup.group_representatives`` — connected
+    components of the verified pair graph) and only each group's
+    min-id representative is considered; a document (representative or
+    singleton) is then admitted iff its exact-Jaccard probe against
+    the stored index clears no pair ≥ ``threshold``. A group whose
+    representative matches stored content is dropped WHOLE — its
+    members are near-dups of a near-dup of admitted content (the
+    SemDeDup-style group verdict).
+
+    Outputs under ``out_dir``: ``accepted/`` (batch_id-partitioned
+    admitted documents with ``group_size`` provenance) and ``index/``
+    (the growing ``minhash_band_table``). Exactly-once via an atomic
+    ``_COMMITTED`` marker inside the ``batch_id=`` partition
+    (marker after the accepted write; the index append is sequenced
+    after the marker and recomputed FROM the committed partition on
+    replay, so a crash never admits a document twice and duplicate
+    index rows are impossible). Scale: the probe shuffles only
+    (band, bucket) keys; state grows with ADMITTED docs only — dups
+    never enter the index.
+    """
+    import os
+
+    from ..operators.dedup import (
+        group_representatives,
+        minhash_band_table,
+        minhash_lsh_pairs,
+        minhash_probe_new,
+    )
+
+    acc_dir = os.path.join(out_dir, "accepted")
+    idx_dir = os.path.join(out_dir, "index")
+
+    def _append_index_from(part: str) -> None:
+        committed = spark.read.parquet(part).select(id_col, text_col)
+        minhash_band_table(committed, id_col, text_col) \
+            .write.mode("append").parquet(idx_dir)
+
+    def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
+        import shutil
+
+        part = os.path.join(acc_dir, f"batch_id={batch_id}")
+        marker = os.path.join(part, "_COMMITTED")
+        if os.path.exists(marker):
+            # replay after commit: the accepted partition is the
+            # truth — re-derive its index rows (idempotent only if
+            # the crashed attempt never appended; sequence below
+            # guarantees that) and never recompute the verdicts
+            if any(not f.startswith(("_", ".")) for f in os.listdir(part)):
+                _append_index_from(part)
+            return
+        if os.path.isdir(part):
+            shutil.rmtree(part)  # crash mid-commit: scrub + recompute
+        batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
+        reps = group_representatives(
+            minhash_lsh_pairs(batch, id_col, text_col,
+                              threshold=threshold),
+            docs=batch, id_col=id_col,
+        )
+        # eager checkpoints between stages: foreachBatch plans on a
+        # worker thread with a SMALLER JVM stack than the main driver
+        # thread, and the composed banding→closure→probe lineage
+        # overflows Catalyst's recursive transforms there (measured:
+        # StackOverflowError at the final checkpoint without these) —
+        # each stage's tree stays shallow and the output is frozen
+        # before the two writes anyway
+        kept = batch.join(
+            reps.filter(F.col("keep")).select(id_col, "group_size"),
+            id_col,
+        ).localCheckpoint(eager=True)
+        try:
+            index = spark.read.parquet(idx_dir)
+        except Exception:
+            index = None
+        if index is not None:
+            cross = minhash_probe_new(
+                kept, index, id_col, text_col, threshold=threshold
+            ).select(F.col("doc_new").alias(id_col)).distinct() \
+                .localCheckpoint(eager=True)
+            kept = kept.join(cross, id_col, "left_anti") \
+                .localCheckpoint(eager=True)
+        kept.withColumn("batch_id", F.lit(batch_id).cast("long")) \
+            .write.mode("append").partitionBy("batch_id").parquet(acc_dir)
+        os.makedirs(part, exist_ok=True)
+        with open(marker, "a"):
+            pass  # atomic commit point
+        if any(not f.startswith(("_", ".")) for f in os.listdir(part)):
+            _append_index_from(part)
+
+    return (
+        docs.writeStream.foreachBatch(_one_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )

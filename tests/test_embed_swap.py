@@ -5,7 +5,7 @@ a REAL external model — any ``array<double>`` column, any dimension —
 without code changes. These tests parametrize (dim, source): a
 "model" column stands in for decoder output (deterministic pseudo-
 vectors built JVM-side, the same column shape a 1024-d encoder UDF
-would append) and drives cosine / LSH / IVF end-to-end.
+would append) and drives cosine / LSH / IVF / PQ end-to-end.
 """
 
 import pytest
@@ -60,9 +60,15 @@ def test_cosine_and_ivf_take_any_model_column(spark, dim, vec_col):
 
 
 @pytest.mark.parametrize("dim,vec_col", [(16, "embedding"), (1024, "model_vec")])
-def test_lsh_takes_any_model_column(spark, dim, vec_col):
-    """LSH (dim inferred from the column itself) runs unchanged on the
-    swapped column."""
+def test_lsh_and_pq_take_any_model_column(spark, dim, vec_col):
+    """LSH (dim inferred from the column itself) and PQ (subspaces cut
+    from whatever dim arrives) run unchanged on the swapped column."""
+    from metal_history_knowledge_graph_spark.operators.pq import (
+        pq_encode,
+        pq_topk,
+        pq_train,
+    )
+
     df = _model_vectors(spark, dim, vec_col).localCheckpoint(eager=True)
     query = [r for r in df.filter(F.col("vec_id") == 3).head()[vec_col]]
 
@@ -72,3 +78,11 @@ def test_lsh_takes_any_model_column(spark, dim, vec_col):
     # the query IS a database vector: it shares its own bucket in
     # every table, so self-retrieval is guaranteed
     assert hits and hits[0].vec_id == 3 and hits[0].cosine == pytest.approx(1.0)
+
+    cb = pq_train(df, m=4, ks=8, vec_col=vec_col)
+    assert len(cb) == 4 and len(cb[0][0]) == dim // 4
+    codes = pq_encode(df, cb, vec_col=vec_col)
+    top = pq_topk(codes, cb, query, k=5).collect()
+    assert len(top) == 5
+    ids = {r.vec_id for r in df.select("vec_id").collect()}
+    assert all(r.vec_id in ids for r in top)

@@ -1,11 +1,16 @@
-"""Graph algorithms and TableStore upsert."""
+"""Graph algorithms, location synthesis, and TableStore upsert."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from metal_history_knowledge_graph_spark.operators.graph_algos import (
     betweenness_sampled,
     component_sizes,
     graph_components,
+)
+from metal_history_knowledge_graph_spark.operators.locations import (
+    merge_synthesized_locations,
+    synthesize_locations,
 )
 
 EDGE_SCHEMA = (
@@ -55,6 +60,33 @@ def test_betweenness_path_graph(spark):
     bt = {r.node_id: r.betweenness for r in betweenness_sampled(edges).collect()}
     assert bt[3] == max(bt.values())
     assert 1 not in bt or bt[1] <= bt[2]
+
+
+def test_synthesize_locations(spark):
+    ents = spark.createDataFrame(
+        [
+            ("bands", 1, "Black Sabbath", "black sabbath", "a",
+             '{"formed_year":1968,"origin_city":"Birmingham","origin_country":"England"}',
+             ["Black Sabbath"], ["black sabbath"], 5, 1, 0.5, 2, []),
+            ("bands", 2, "Judas Priest", "judas priest", "b",
+             '{"formed_year":1969,"origin_city":"Birmingham","origin_country":"England"}',
+             ["Judas Priest"], ["judas priest"], 3, 1, 0.5, 1, []),
+        ],
+        "entity_type string, canonical_id long, canonical_name string, "
+        "name_norm string, first_seen string, attrs_json string, "
+        "variations array<string>, member_forms array<string>, "
+        "n_mentions long, n_forms int, confidence double, n_sources long, "
+        "source_urls array<string>",
+    )
+    synth = synthesize_locations(ents).collect()
+    assert len(synth) == 1
+    row = synth[0]
+    assert row.canonical_name == "Birmingham"
+    import json
+    attrs = json.loads(row.attrs_json)
+    assert attrs["cultural_context"] == "Home to bands: Black Sabbath, Judas Priest"
+    merged = merge_synthesized_locations(ents)
+    assert merged.filter(F.col("entity_type") == "locations").count() == 1
 
 
 def test_merge_upsert(spark, store):

@@ -190,6 +190,58 @@ def test_pagination_keyset(graph):
     assert (p1 + p2) == win
 
 
+def test_asof_join_single_exchange(spark):
+    """asof_join must stay the single-shuffle union-and-carry-forward
+    plan: exactly one Exchange subtree family on the session key
+    feeding one Window — never a range-join (BroadcastNestedLoopJoin /
+    CartesianProduct) blowup."""
+    from metal_history_knowledge_graph_spark.operators.temporal import asof_join
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    left = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id"
+    )
+    right = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    plan = plan_of(asof_join(left, right, "user_id", "ts", "event_id", ["value"]))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan  # no join at all: union + window
+    # exactly two hash exchanges: right-side (key, ts) dedup + the
+    # carry-forward window's key partitioning; both keyed, never single
+    assert plan.count("hashpartitioning") == 2, plan
+    assert "SinglePartition" not in plan
+
+
+def test_sessionize_windows_are_partitioned(spark):
+    """Every window in the sessionize plan must be partitioned by the
+    session key — an unpartitioned Window (Exchange SinglePartition)
+    is the classic scale-killer."""
+    from metal_history_knowledge_graph_spark.operators.temporal import sessionize
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    plan = plan_of(sessionize(ev))
+    assert "Window" in plan
+    assert "SinglePartition" not in plan
+
+
+def test_latest_snapshot_partial_agg(spark):
+    """latest_snapshot must compile to a two-phase hash aggregation
+    (map-side partial max(struct) before the shuffle) — the property
+    that collapses hot urls early — and never a Window."""
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        latest_snapshot,
+    )
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    plan = plan_of(
+        latest_snapshot(ev, "user_id", "ts", "event_id", ["event_type", "value"])
+    )
+    assert "Window" not in plan
+    assert plan.count("HashAggregate") + plan.count("SortAggregate") >= 2
+
+
 def test_extracted_kind_partition_pruned(graph):
     """The extracted table is partitioned by row kind; the mention and
     relationship branches must each scan only their partition (the

@@ -1,8 +1,64 @@
-"""Hot-key defence of the pipeline: one dominant entity still
-canonicalizes to one row with exact mention counts, through partial
-aggregation and AQE alone (SURVEY §7 pt.9)."""
+"""Salted aggregation correctness on a synthetic hot key: the
+two-phase plan must equal the naive plan exactly (SURVEY §7 pt.9)."""
 
+import pytest
 from pyspark.sql import functions as F
+
+from metal_history_knowledge_graph_spark.operators.skew import (
+    salted_agg,
+    salted_collect_set,
+    salted_count_distinct,
+)
+
+
+@pytest.fixture(scope="module")
+def hot(spark):
+    """100k rows for one hot key + scattered cold keys."""
+    hot = spark.range(100_000).select(
+        F.lit("black sabbath").alias("k"),
+        (F.col("id") % 977).cast("string").alias("v"),
+    )
+    cold = spark.range(5_000).select(
+        F.concat(F.lit("band_"), (F.col("id") % 500).cast("string")).alias("k"),
+        (F.col("id") % 37).cast("string").alias("v"),
+    )
+    return hot.unionByName(cold).repartition(32).cache()
+
+
+def test_salted_count_equals_naive(hot):
+    naive = {r.k: r.n for r in hot.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
+    salted = {
+        r.k: r.n
+        for r in salted_agg(
+            hot, ["k"],
+            [F.count(F.lit(1)).alias("c")],
+            [F.sum("c").alias("n")],
+        ).collect()
+    }
+    assert salted == naive
+    assert salted["black sabbath"] == 100_000
+
+
+def test_salted_collect_set_equals_naive(hot):
+    naive = {
+        r.k: sorted(r.vs)
+        for r in hot.groupBy("k").agg(F.collect_set("v").alias("vs")).collect()
+    }
+    salted = {
+        r.k: list(r.v_set)
+        for r in salted_collect_set(hot, ["k"], "v").collect()
+    }
+    assert salted == naive
+    assert len(salted["black sabbath"]) == 977
+
+
+def test_salted_count_distinct(hot):
+    naive = {
+        r.k: r.n
+        for r in hot.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()
+    }
+    salted = {r.k: r.n_distinct for r in salted_count_distinct(hot, ["k"], "v").collect()}
+    assert salted == naive
 
 
 def test_hot_key_pipeline_end_to_end(spark, tmp_path):
@@ -27,3 +83,60 @@ def test_hot_key_pipeline_end_to_end(spark, tmp_path):
         .count()
     )
     assert sab[0].n_mentions == mentions_total
+
+
+def test_salted_join_equals_plain_join(spark):
+    from pyspark.sql import functions as F
+
+    from metal_history_knowledge_graph_spark.operators.skew import salted_join
+
+    # one hot key (90% of rows) + a long tail
+    big = spark.range(0, 100_000).select(
+        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 50)
+        .alias("k"),
+        F.col("id").alias("v"),
+    )
+    small = spark.createDataFrame(
+        [(k, f"dim{k}") for k in range(0, 40)], "k long, label string"
+    )
+    plain = big.join(small, ["k"]).select("k", "v", "label")
+    salted = salted_join(big, small, ["k"], n_salts=8).select("k", "v", "label")
+    assert salted.count() == plain.count()
+    assert salted.exceptAll(plain).count() == 0
+    assert plain.exceptAll(salted).count() == 0
+
+
+def test_salted_join_left_keeps_unmatched(spark):
+    from pyspark.sql import functions as F
+
+    from metal_history_knowledge_graph_spark.operators.skew import salted_join
+
+    big = spark.range(0, 1000).select((F.col("id") % 60).alias("k"),
+                                      F.col("id").alias("v"))
+    small = spark.createDataFrame(
+        [(k, f"dim{k}") for k in range(0, 40)], "k long, label string"
+    )
+    plain = big.join(small, ["k"], "left").select("k", "v", "label")
+    salted = salted_join(big, small, ["k"], n_salts=8, how="left") \
+        .select("k", "v", "label")
+    assert salted.count() == plain.count() == 1000
+    assert salted.exceptAll(plain).count() == 0
+
+
+def test_with_salt_spreads_hot_key_even_when_prepartitioned_by_key(spark):
+    """A hot key arriving already hash-partitioned BY THE KEY (one
+    partition holds all its rows) must still receive many distinct
+    salt values — a spark_partition_id-derived salt would collapse to
+    one and silently disable the skew treatment."""
+    from pyspark.sql import functions as F
+
+    from metal_history_knowledge_graph_spark.operators.skew import with_salt
+
+    hot = spark.range(0, 5000).select(F.lit("HOT").alias("k"), F.col("id").alias("v"))
+    prepart = hot.repartition(16, "k")  # all rows of k=HOT in ONE partition
+    n = (
+        with_salt(prepart, n_salts=8)
+        .groupBy("k").agg(F.countDistinct("_salt").alias("n"))
+        .collect()[0].n
+    )
+    assert n == 8

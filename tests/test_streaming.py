@@ -1,11 +1,13 @@
-"""Streaming ingest (foreachBatch into the batch append path) and the
-watermarked stream-stream interval join."""
+"""Streaming ingest (foreachBatch into the batch append path) and
+watermarked windowed aggregation."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from metal_history_knowledge_graph_spark.sources.corpus import generate_pages
 from metal_history_knowledge_graph_spark.streaming.incremental import (
     stream_ingest_pages,
+    windowed_event_counts,
 )
 
 
@@ -33,6 +35,88 @@ def test_stream_ingest_exactly_once(spark, store, tmp_path):
     assert dup == 0
 
 
+def test_windowed_event_counts_batch_parity(spark):
+    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    out = windowed_event_counts(events, window="1 hour").collect()
+    total = sum(r.n for r in out)
+    assert total == events.count()
+    for r in out:
+        assert r.window_start < r.window_end
+
+
+def test_windowed_event_counts_streaming(spark, tmp_path):
+    src = str(tmp_path / "ev")
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
+    # watermarks require TIMESTAMP (not NTZ): read with explicit schema
+    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
+              "value double, props string")
+    stream = spark.readStream.schema(schema).parquet(src)
+    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
+    q = (
+        agg.writeStream.format("memory").queryName("wincounts")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(300)
+    # append mode only emits windows closed by the watermark; the tail
+    # windows stay open — so we check a prefix property, not totals
+    rows = spark.sql("select * from wincounts").collect()
+    batch = {(r.window_start, r.event_type): r.n
+             for r in windowed_event_counts(
+                 spark.read.schema(schema).parquet(src), window="1 hour").collect()}
+    for r in rows:
+        assert batch[(r.window_start, r.event_type)] == r.n
+
+
+def test_stateful_running_counts_across_restarts(spark, tmp_path):
+    """applyInPandasWithState totals must accumulate within a run and
+    survive a checkpointed restart (exact resume)."""
+    from metal_history_knowledge_graph_spark.streaming.incremental import (
+        stateful_running_counts,
+    )
+
+    src = str(tmp_path / "mentions")
+    cp = str(tmp_path / "cp_state")
+    schema = "entity_key string, url string"
+
+    def drain(qname):
+        stream = spark.readStream.schema(schema) \
+            .option("maxFilesPerTrigger", 1).parquet(src)
+        out = stateful_running_counts(stream)
+        emitted = []
+
+        def sink(batch_df, batch_id):
+            emitted.extend((batch_id, tuple(r)) for r in batch_df.collect())
+
+        q = (
+            out.writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .option("checkpointLocation", cp)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(300)
+        # update mode emits one row per touched group per batch → the
+        # LAST emission per key (by batch id) is the running total
+        last = {}
+        for _, (key, n_mentions, _nu) in sorted(emitted, key=lambda t: t[0]):
+            last[key] = n_mentions
+        return last
+
+    spark.createDataFrame(
+        [("sabbath", "u1"), ("sabbath", "u2"), ("priest", "u1")], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    t1 = drain("state_run1")
+    assert t1 == {"sabbath": 2, "priest": 1}
+
+    # second drop, new stream instance, same checkpoint → state resumes
+    spark.createDataFrame(
+        [("sabbath", "u3"), ("maiden", "u9")], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    t2 = drain("state_run2")
+    assert t2["sabbath"] == 3  # 2 carried from run 1 + 1 new
+    assert t2["maiden"] == 1
+    assert "priest" not in t2  # untouched groups are not re-emitted
+
+
 def test_seen_set_is_compact_url_table(spark, store, tmp_path):
     """The per-batch anti-join must read the url-only processed_urls
     table, not re-scan the chunks table (VERDICT r01 'What's wrong' #3)."""
@@ -55,6 +139,61 @@ def test_seen_set_is_compact_url_table(spark, store, tmp_path):
     # idempotence via the compact table: replaying the same pages is a no-op
     assert ingest_batch(store, pages1, "seen", 1) == 0
     assert store.read("processed_urls").count() == 10
+
+
+def test_streaming_dedup_within_watermark(spark, tmp_path):
+    """dropDuplicatesWithinWatermark path: re-arrivals of a key within
+    the horizon are dropped across micro-batches; state is evicted as
+    the watermark advances (bounded-state contract)."""
+    from datetime import datetime
+
+    from metal_history_knowledge_graph_spark.streaming.incremental import (
+        streaming_dedup,
+    )
+
+    src = str(tmp_path / "dedup_src")
+    cp = str(tmp_path / "dedup_cp")
+    schema = "url string, ts timestamp"
+
+    def ts(minute):
+        return datetime(2024, 1, 1, 0, minute)
+
+    # batch file 1: a + duplicate of a + b; batch file 2 (later file →
+    # later micro-batch with maxFilesPerTrigger=1): duplicate of a
+    # again plus c
+    spark.createDataFrame(
+        [("a", ts(0)), ("a", ts(1)), ("b", ts(2))], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame(
+        [("a", ts(3)), ("c", ts(4))], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    stream = spark.readStream.schema(schema) \
+        .option("maxFilesPerTrigger", 1).parquet(src)
+    out = streaming_dedup(stream, ["url"], watermark="30 minutes")
+    emitted = []
+
+    def sink(batch_df, batch_id):
+        emitted.extend(r["url"] for r in batch_df.collect())
+
+    q = (
+        out.writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(300)
+    assert sorted(emitted) == ["a", "b", "c"]  # each key exactly once
+
+
+def test_streaming_dedup_batch_parity(spark):
+    from metal_history_knowledge_graph_spark.streaming.incremental import (
+        streaming_dedup,
+    )
+
+    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    out = streaming_dedup(events, ["event_type"], ts_col="ts")
+    assert out.count() == events.select("event_type").distinct().count()
 
 
 def test_interval_join_attribution_streaming_matches_batch(spark, tmp_path):

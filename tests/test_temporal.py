@@ -1,12 +1,91 @@
-"""Unit tests for the link-analysis operators of
-operators/graph_algos.py (pagerank and its personalized, weighted and
-resumed forms, HITS, harmonic centrality, link prediction) and
-textstats.repetition_stats — the driver-gate oracle parity for these
-lives in test_oracle_parity.py (q_pagerank, q_hits, q_harmonic,
-q_link_pred, q_ppr, q_pagerank_weighted, q_repetition_stats); here we
-pin the semantic corner cases the oracles can't isolate."""
+"""Unit tests for operators/temporal.py (sessionize, asof_join,
+latest_snapshot) and operators/graph_algos.pagerank — the driver-gate
+oracle parity for these lives in test_oracle_parity.py (q_sessionize,
+q_asof_join, q_latest_event, q_pagerank); here we pin the semantic
+corner cases the oracles can't isolate."""
 
 from __future__ import annotations
+
+import datetime as dt
+
+import pytest
+from pyspark.sql import functions as F
+
+from metal_history_knowledge_graph_spark.operators.temporal import (
+    asof_join,
+    latest_snapshot,
+    session_stats,
+    sessionize,
+)
+
+
+def _ts(minute, second=0):
+    return dt.datetime(2024, 1, 1, 12, minute, second)
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, value double"
+    )
+
+
+def test_sessionize_gap_splits_sessions(spark):
+    rows = [
+        (1, _ts(0), 1, 1.0),
+        (1, _ts(10), 2, 1.0),   # 10 min gap → same session
+        (1, _ts(50), 3, 1.0),   # 40 min gap → new session
+        (1, _ts(55), 4, 1.0),
+        (2, _ts(0), 5, 1.0),    # other user independent
+    ]
+    out = sessionize(_events(spark, rows), gap_minutes=30).collect()
+    by_id = {r.event_id: r.session_no for r in out}
+    assert by_id == {1: 1, 2: 1, 3: 2, 4: 2, 5: 1}
+
+
+def test_sessionize_exact_gap_is_same_session(spark):
+    # gap == threshold stays in-session (strictly-greater rule)
+    rows = [(1, _ts(0), 1, 1.0), (1, _ts(30), 2, 1.0),
+            (1, _ts(0, 1) + dt.timedelta(minutes=60), 3, 1.0)]
+    out = sessionize(_events(spark, rows), gap_minutes=30).collect()
+    by_id = {r.event_id: r.session_no for r in out}
+    assert by_id[1] == 1 and by_id[2] == 1 and by_id[3] == 2
+
+
+def test_session_stats_span_and_counts(spark):
+    rows = [(1, _ts(0), 1, 2.0), (1, _ts(10), 2, 3.0), (1, _ts(50), 3, 5.0)]
+    s = session_stats(sessionize(_events(spark, rows), gap_minutes=30))
+    got = {(r.user_id, r.session_no): (r.n_events, r.span_us, r.total_value)
+           for r in s.collect()}
+    assert got[(1, 1)] == (2, 10 * 60 * 1_000_000, 5.0)
+    assert got[(1, 2)] == (1, 0, 5.0)
+
+
+def test_asof_inclusive_and_no_match(spark):
+    left = _events(spark, [(1, _ts(10), 100, 0.0), (1, _ts(5), 101, 0.0),
+                           (2, _ts(10), 102, 0.0)]).drop("value")
+    right = _events(spark, [(1, _ts(10), 7, 7.7), (1, _ts(3), 6, 6.6)])
+    out = asof_join(left, right, "user_id", "ts", "event_id", ["value"])
+    got = {r.event_id: (r.matched_event_id, r.matched_value) for r in out.collect()}
+    assert got[100] == (7, 7.7)      # same-ts right row matches (inclusive)
+    assert got[101] == (6, 6.6)      # most recent prior
+    assert got[102] == (None, None)  # user 2 has no rights → left-join nulls
+
+
+def test_asof_right_ts_tie_keeps_greatest_id(spark):
+    left = _events(spark, [(1, _ts(20), 100, 0.0)]).drop("value")
+    right = _events(spark, [(1, _ts(10), 5, 5.5), (1, _ts(10), 9, 9.9)])
+    out = asof_join(left, right, "user_id", "ts", "event_id", ["value"]).collect()
+    assert out[0].matched_event_id == 9 and out[0].matched_value == 9.9
+
+
+def test_latest_snapshot_keeps_newest_and_breaks_ties_by_id(spark):
+    df = _events(spark, [
+        (1, _ts(0), 1, 1.0), (1, _ts(9), 3, 3.0), (1, _ts(9), 2, 2.0),
+        (2, _ts(5), 4, 4.0),
+    ])
+    out = latest_snapshot(df, "user_id", "ts", "event_id", ["value"])
+    got = {r.user_id: (r.event_id, r.value) for r in out.collect()}
+    assert got == {1: (3, 3.0), 2: (4, 4.0)}
 
 
 # --- pagerank ----------------------------------------------------------------
@@ -89,6 +168,39 @@ def test_repetition_stats_extremes(spark):
     assert not out[2].keep  # fails the diversity floor
     assert out[3].unique_word_bp == 10000 and out[3].dup_bigram_bp == 0
     assert out[3].mean_word_len_x100 == (100 * 22) // 6  # Σlen = 3+3+5+4+4+3
+
+
+def test_asof_join_ignores_null_timestamps(spark):
+    """A right row with NULL ts must never match (l.ts >= NULL is never
+    true in the ASOF rule — and nulls-first window ordering must not
+    smuggle its payload to the partition start); a left row with NULL
+    ts matches nothing."""
+    from metal_history_knowledge_graph_spark.operators.temporal import asof_join
+
+    left = spark.createDataFrame(
+        [("k", 10, 1), ("k", None, 2)], "key string, ts long, eid long")
+    right = spark.createDataFrame(
+        [("k", None, 100, "poison"), ("k", 5, 200, "real")],
+        "key string, ts long, eid long, val string")
+    out = {r["eid"]: r for r in asof_join(
+        left, right, "key", "ts", "eid", ["val"]).collect()}
+    assert (out[1]["matched_eid"], out[1]["matched_val"]) == (200, "real")
+    assert out[2]["matched_eid"] is None and out[2]["matched_val"] is None
+
+
+def test_snapshot_diff_classifies_all_states(spark):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        snapshot_diff,
+    )
+
+    old = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], ["doc_id", "fingerprint"]
+    )
+    new = spark.createDataFrame(
+        [(2, "b"), (3, "C2"), (4, "d")], ["doc_id", "fingerprint"]
+    )
+    got = {r.doc_id: r.status for r in snapshot_diff(old, new).collect()}
+    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
 # --- HITS ---------------------------------------------------------------------
@@ -325,7 +437,88 @@ def test_pagerank_weighted_degenerates_and_shifts_mass(spark):
         pagerank_weighted(bad_null)
 
 
-# --- pagerank resume ------------------------------------------------------------
+# ---- funnel analysis (funnel_steps / funnel_counts) ----
+
+
+@pytest.fixture(scope="module")
+def funnel_events(spark):
+    # user 1: full funnel; user 2: stops after click; user 3: purchase
+    # BEFORE signup (must not count); user 4: same-ts tie resolved by id.
+    rows = [
+        (1, "2024-01-01 10:00:00", 1, "view"),
+        (2, "2024-01-01 10:05:00", 1, "click"),
+        (3, "2024-01-01 10:10:00", 1, "signup"),
+        (4, "2024-01-01 12:00:00", 1, "purchase"),
+        (5, "2024-01-01 10:00:00", 2, "view"),
+        (6, "2024-01-01 10:20:00", 2, "click"),
+        (7, "2024-01-01 09:00:00", 3, "purchase"),
+        (8, "2024-01-01 10:00:00", 3, "view"),
+        (9, "2024-01-01 10:01:00", 3, "click"),
+        (10, "2024-01-01 10:02:00", 3, "signup"),
+        (11, "2024-01-01 10:00:00", 4, "view"),
+        (12, "2024-01-01 10:00:00", 4, "click"),  # same ts, id 12 > 11: counts
+        (13, "2024-01-01 09:59:59", 4, "signup"),  # before click: must not
+    ]
+    return spark.createDataFrame(
+        [(i, ts, u, t) for i, ts, u, t in rows],
+        "event_id long, ts string, user_id long, event_type string",
+    ).select("event_id", F.col("ts").cast("timestamp").alias("ts"),
+             "user_id", "event_type")
+
+
+def test_funnel_order_and_ties(spark, funnel_events):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        funnel_steps,
+    )
+
+    comp = funnel_steps(funnel_events, ["view", "click", "signup", "purchase"])
+    got = {(r.step_no, r.user_id): r.event_id for r in comp.collect()}
+    assert got == {
+        (1, 1): 1, (2, 1): 2, (3, 1): 3, (4, 1): 4,
+        (1, 2): 5, (2, 2): 6,
+        (1, 3): 8, (2, 3): 9, (3, 3): 10,  # user 3: early purchase ignored
+        (1, 4): 11, (2, 4): 12,  # same-ts click counts; early signup doesn't
+    }
+
+
+def test_funnel_counts_permille(spark, funnel_events):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        funnel_counts,
+        funnel_steps,
+    )
+
+    comp = funnel_steps(funnel_events, ["view", "click", "signup", "purchase"])
+    got = {r.step_no: (r.n_keys, r.conv_permille)
+           for r in funnel_counts(comp).collect()}
+    assert got == {1: (4, 1000), 2: (4, 1000), 3: (2, 500), 4: (1, 250)}
+
+
+def test_funnel_within_minutes(spark, funnel_events):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        funnel_steps,
+    )
+
+    comp = funnel_steps(
+        funnel_events, ["view", "click", "signup", "purchase"],
+        within_minutes=30,
+    )
+    # user 1's purchase at 12:00 falls outside 30 min of the 10:00 anchor
+    got = {(r.step_no, r.user_id) for r in comp.collect()}
+    assert (4, 1) not in got and (3, 1) in got
+
+
+def test_funnel_no_window_over_events(spark, funnel_events):
+    """The completion chain is join+partial-agg only — no window runs
+    over the event log (hot users collapse map-side)."""
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        funnel_steps,
+    )
+
+    plan = (
+        funnel_steps(funnel_events, ["view", "click"])
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Window" not in plan
 
 
 def test_pagerank_resume_continues_trajectory(spark):
@@ -371,3 +564,70 @@ def test_pagerank_resume_seeds_new_nodes(spark):
     p = {r.node_id: r.rank_fixed for r in prev.collect()}
     teleport = (15 * 10**12) // (100 * 4)
     assert out[9] == teleport + (85 * (p[2] // 2)) // 100
+
+
+def test_decayed_counts_weights_and_mergeable_rollup(spark):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        decayed_counts,
+    )
+
+    # key 'a': events at bucket 0, 7, 14 (days); now = bucket 14,
+    # half-life 7 -> weights 2^28, 2^29, 2^30
+    rows = [
+        ("a", "2024-01-01 00:00:00"),
+        ("a", "2024-01-08 00:00:00"),
+        ("a", "2024-01-15 00:00:00"),
+        ("b", "2024-01-15 12:00:00"),  # same bucket as now: full weight
+    ]
+    ev = spark.createDataFrame(rows, "k string, ts string").select(
+        "k", F.col("ts").cast("timestamp").alias("ts")
+    )
+    got = {r.key: (r.n_events, r.decayed_fixed, r.last_bucket)
+           for r in decayed_counts(ev, key_col="k").collect()}
+    base = 19723  # 2024-01-01 in days since epoch
+    assert got["a"] == (3, (1 << 28) + (1 << 29) + (1 << 30), base + 14)
+    assert got["b"] == (1, 1 << 30, base + 14)
+
+
+def test_decayed_counts_ancient_events_zero(spark):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        decayed_counts,
+    )
+
+    ev = spark.createDataFrame(
+        [("x", "1990-01-01 00:00:00"), ("x", "2024-01-01 00:00:00")],
+        "k string, ts string",
+    ).select("k", F.col("ts").cast("timestamp").alias("ts"))
+    r = decayed_counts(ev, key_col="k").collect()[0]
+    # the 1990 event is > 30 half-lives old: weight exactly 0
+    assert r.n_events == 2 and r.decayed_fixed == 1 << 30
+
+
+def test_cohort_retention_hand_and_properties(spark):
+    from metal_history_knowledge_graph_spark.operators.temporal import (
+        cohort_retention,
+    )
+
+    rows = [
+        # user, bucket; u1 cohort 0 active 0,1,2; u2 cohort 0 active 0,2;
+        # u3 cohort 1 active 1; nulls dropped; duplicate activity rows ok
+        (1, 0), (1, 0), (1, 1), (1, 2),
+        (2, 0), (2, 2),
+        (3, 1),
+        (None, 0), (4, None),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, bucket int")
+    got = {
+        (r.cohort, r.bucket): (r.cohort_size, r.n_active, r.retention_ppm)
+        for r in cohort_retention(df).collect()
+    }
+    assert got == {
+        (0, 0): (2, 2, 1_000_000),
+        (0, 1): (2, 1, 500_000),
+        (0, 2): (2, 2, 1_000_000),
+        (1, 1): (1, 1, 1_000_000),
+    }
+    # diagonal is always full retention
+    for (c, b), (_, _, ppm) in got.items():
+        if c == b:
+            assert ppm == 1_000_000

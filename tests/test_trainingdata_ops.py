@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from metal_history_knowledge_graph_spark.operators import dedup as D
 from metal_history_knowledge_graph_spark.operators import simsearch as S
 from metal_history_knowledge_graph_spark.operators import textstats as T
+from metal_history_knowledge_graph_spark.operators import multimodal as M
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -90,23 +91,6 @@ def test_dedup_exact_keeps_min_id(docs_with_dups):
     kept = D.dedup_exact(docs_with_dups)
     assert kept.count() == 23  # 20 base + 3 near (near-dups differ exactly)
     assert kept.filter((F.col("doc_id") >= 10_000) & (F.col("doc_id") < 20_000)).count() == 0
-
-
-def test_dedup_keep_best_picks_top_score(spark):
-    """Best-scoring copy survives per fingerprint, ties break by min
-    id, n_dropped counts the rest; singletons report 0."""
-    docs = spark.createDataFrame(
-        [
-            (1, "Same  Article", 10),
-            (2, "same article", 90),     # normalized-identical, best score
-            (3, "SAME ARTICLE  ", 90),   # tied score, higher id -> loses
-            (4, "unique doc", 5),
-        ],
-        "doc_id long, text string, score long",
-    )
-    out = {r.doc_id: (r.score, r.n_dropped)
-           for r in D.dedup_keep_best(docs, "score").collect()}
-    assert out == {2: (90, 2), 4: (5, 0)}
 
 
 def test_ngram_jaccard_pairs(docs_with_dups):
@@ -265,6 +249,56 @@ def test_embedding_neardup_bucketed_subset_of_exact(spark, embs):
     assert {(0, 7000), (1, 7001), (2, 7002)} <= approx
 
 
+# --- multimodal -----------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def media(spark):
+    rows = [
+        (1, "image", b"\x89PNG fake bytes" * 10, "image/png", 64, 64, None),
+        (2, "image", b"GIF89a other" * 5, "image/gif", 32, 32, None),
+        (3, "video", b"\x00\x00ftyp fake video" * 100, "video/mp4", 640, 480, 5000),
+        (4, "image", b"", "image/png", 0, 0, None),
+    ]
+    return spark.createDataFrame(rows, M.MEDIA_SCHEMA)
+
+
+def test_media_features(media):
+    out = M.extract_media_features(media).collect()
+    by_id = {r.media_id: r for r in out}
+    assert len(by_id[1].features) == 16
+    assert all(-1.0 <= v < 1.0 for v in by_id[1].features)
+    assert by_id[4].decoder == "failed" and by_id[4].features is None
+    # determinism
+    again = {r.media_id: r.features for r in M.extract_media_features(media).collect()}
+    assert again[1] == by_id[1].features
+
+
+def test_resize_images(media):
+    out = {r.media_id: r for r in M.resize_images(media, 256, 256).collect()}
+    # 64x64 image: letterbox fit of 256x256 -> exactly 256x256, payload
+    # scaled by area ratio (150 bytes * 16 = 2400)
+    assert (out[1].width, out[1].height, out[1].resize) == (256, 256, "stub-letterbox")
+    assert len(out[1].content) == len(b"\x89PNG fake bytes" * 10) * (256 * 256) // (64 * 64)
+    # aspect preserved on non-square targets
+    wide = {r.media_id: r for r in M.resize_images(media, 512, 256).collect()}
+    assert (wide[1].width, wide[1].height) == (256, 256)  # square src fits the tight axis
+    # video/non-image rows pass through byte-identical
+    assert out[3].resize == "passthrough"
+    assert bytes(out[3].content) == b"\x00\x00ftyp fake video" * 100
+    # empty payload cannot be resized -> passthrough
+    assert out[4].resize == "passthrough"
+    # determinism
+    again = {r.media_id: bytes(r.content) for r in M.resize_images(media, 256, 256).collect()}
+    assert again[1] == bytes(out[1].content)
+
+
+def test_frame_sampling(media):
+    frames = M.sample_frames(media, every_ms=1000, max_frames=8).collect()
+    assert {f.media_id for f in frames} == {3}
+    assert len(frames) == 5
+    assert [f.frame_index for f in sorted(frames, key=lambda x: x.frame_index)] == list(range(5))
+
+
 def test_lsh_indexed_equals_adhoc_and_prunes(spark, embs, tmp_path):
     """The persisted (table, bucket)-partitioned index must (a) return
     exactly what the ad-hoc full-scan path returns, and (b) read only
@@ -385,6 +419,39 @@ def test_embedding_neardup_recall_on_threshold_adjacent_pairs(spark):
     assert recall >= 0.95, f"recall {recall:.3f} < 0.95 ({len(approx)}/{len(exact)})"
 
 
+def test_media_decoder_swap_point(spark, media):
+    """Injecting a real decoder via the `decoder` parameter must leave
+    the distributed plan (narrow mapInPandas, no Exchange) and the
+    output schema byte-identical to the stub run — the 'swap one
+    function' claim, pinned."""
+
+    def fake_decode(content: bytes, dim: int = 16) -> list:
+        if not content:
+            raise ValueError("empty media payload")
+        return [float(len(content) % 7)] * dim
+
+    stub = M.extract_media_features(media)
+    injected = M.extract_media_features(media, decoder=fake_decode,
+                                        decoder_name="fake-v1")
+    assert injected.schema == stub.schema
+    plan_s = stub._jdf.queryExecution().executedPlan().toString()
+    plan_i = injected._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan_i
+    # identical operator tree shape (only the pickled lambda differs)
+    import re
+    strip = lambda p: re.sub(r"#\d+", "#", p)
+    assert strip(plan_i) == strip(plan_s)
+    rows = {r.media_id: r for r in injected.collect()}
+    # media_id 4 is the empty payload: both decoders raise -> 'failed'
+    assert rows[4].decoder == "failed" and rows[4].features is None
+    assert all(r.decoder == "fake-v1" for r in rows.values() if r.media_id != 4)
+    assert rows[1].features == [float(len(bytes(b"\x89PNG fake bytes" * 10)) % 7)] * 16
+    # metadata path (n_bytes, sha256) unchanged by the swap
+    stub_meta = {(r.media_id, r.n_bytes, r.sha256) for r in stub.collect()}
+    inj_meta = {(r.media_id, r.n_bytes, r.sha256) for r in injected.collect()}
+    assert stub_meta == inj_meta
+
+
 def test_embedding_neardup_plan_is_bucketed_join(spark, embs):
     """Scale-shape gate: the OR-banded near-dup must join on
     (table, bucket) hash keys — never a cartesian product — and the
@@ -423,6 +490,31 @@ def test_ivf_assign_new_matches_build_and_serves_probes(spark, embs):
     top = S.ivf_topk(union, centroids, [float(v) for v in row.embedding],
                      k=3, nprobe=2).collect()
     assert {r.vec_id for r in top} >= {2, 90002}
+
+
+def test_contamination_bloom_equals_exact(spark):
+    """The Bloom-prefiltered decontamination path is decision-identical
+    to the string-broadcast path (no false negatives ⇒ the exact
+    verify sees every true hit; the pre-filter only drops grams the
+    exact join rejects anyway)."""
+    from metal_history_knowledge_graph_spark.operators.contamination import (
+        contamination,
+        contamination_bloom,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 7 == 0).select(
+        "doc_id", F.col("text")
+    )
+    a = {tuple(r) for r in contamination(docs, bench, n=5).collect()}
+    b = {tuple(r) for r in contamination_bloom(docs, bench, n=5).collect()}
+    assert a == b
+    # and a tight filter (guaranteed false positives) still agrees
+    c = {
+        tuple(r)
+        for r in contamination_bloom(docs, bench, n=5, m_bits=256, k=2).collect()
+    }
+    assert a == c
 
 
 def test_simhash_probe_new_equals_rebuild(docs_with_dups):

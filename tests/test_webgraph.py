@@ -1,6 +1,263 @@
-"""Densest subgraph (graph_algos.densest_subgraph, Bahmani synchronous
-peeling): a planted clique, a regular graph, and the empty/guard
-edges."""
+"""SCC / condensation / bow-tie: hand-built macro-structure plus a
+Tarjan cross-check on a deterministic pseudo-random digraph."""
+
+import hashlib
+
+import pytest
+from pyspark.sql import functions as F
+
+from metal_history_knowledge_graph_spark.operators.webgraph import (
+    bowtie_classify,
+    scc_condensation,
+    strongly_connected_components,
+)
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(
+        [(int(a), int(b)) for a, b in pairs], "subj_id long, obj_id long"
+    )
+
+
+# core cycle {0,1,2}; 10 -> 11 -> core (IN chain); core -> 20 -> 21
+# (OUT chain); tendril 30 hanging off IN; disconnected 2-cycle {40,41}.
+BOWTIE_PAIRS = [
+    (0, 1), (1, 2), (2, 0),
+    (10, 11), (11, 0),
+    (2, 20), (20, 21),
+    (10, 30),
+    (40, 41), (41, 40),
+]
+
+
+def test_scc_hand_graph(spark):
+    got = {
+        r["node_id"]: r["scc_id"]
+        for r in strongly_connected_components(
+            _edges(spark, BOWTIE_PAIRS)
+        ).collect()
+    }
+    assert got == {
+        0: 0, 1: 0, 2: 0,
+        10: 10, 11: 11, 20: 20, 21: 21, 30: 30,
+        40: 40, 41: 40,
+    }
+
+
+def test_bowtie_hand_graph(spark):
+    got = {
+        r["node_id"]: r["cls"]
+        for r in bowtie_classify(_edges(spark, BOWTIE_PAIRS)).collect()
+    }
+    assert got == {
+        0: "CORE", 1: "CORE", 2: "CORE",
+        10: "IN", 11: "IN",
+        20: "OUT", 21: "OUT",
+        30: "OTHER", 40: "OTHER", 41: "OTHER",
+    }
+
+
+def test_condensation_hand_graph(spark):
+    e = _edges(spark, BOWTIE_PAIRS)
+    got = {
+        (r["src_scc"], r["dst_scc"]) for r in scc_condensation(e).collect()
+    }
+    assert got == {
+        (10, 11), (11, 0), (10, 30), (0, 20), (20, 21),
+    }
+
+
+def _pseudo_random_pairs(n_nodes=60, n_edges=150):
+    """Deterministic digraph: endpoints from md5 of the edge index."""
+    pairs = set()
+    for i in range(n_edges):
+        h = hashlib.md5(f"webgraph-{i}".encode()).hexdigest()
+        a = int(h[:8], 16) % n_nodes
+        b = int(h[8:16], 16) % n_nodes
+        if a != b:
+            pairs.add((a, b))
+    return sorted(pairs)
+
+
+def _tarjan_scc(pairs):
+    """Iterative Tarjan; returns {node: min id of its SCC}."""
+    adj: dict = {}
+    nodes = set()
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        nodes.update((a, b))
+    index: dict = {}
+    low: dict = {}
+    on_stack: set = set()
+    stack: list = []
+    result: dict = {}
+    counter = [0]
+
+    for root in sorted(nodes):
+        if root in index:
+            continue
+        work = [(root, 0)]
+        while work:
+            v, pi = work[-1]
+            if pi == 0:
+                index[v] = low[v] = counter[0]
+                counter[0] += 1
+                stack.append(v)
+                on_stack.add(v)
+            recurse = False
+            for j in range(pi, len(adj.get(v, []))):
+                w = adj[v][j]
+                if w not in index:
+                    work[-1] = (v, j + 1)
+                    work.append((w, 0))
+                    recurse = True
+                    break
+                if w in on_stack:
+                    low[v] = min(low[v], index[w])
+            if recurse:
+                continue
+            if low[v] == index[v]:
+                comp = []
+                while True:
+                    w = stack.pop()
+                    on_stack.discard(w)
+                    comp.append(w)
+                    if w == v:
+                        break
+                m = min(comp)
+                for w in comp:
+                    result[w] = m
+            work.pop()
+            if work:
+                p, _ = work[-1]
+                low[p] = min(low[p], low[v])
+    return result
+
+
+def test_scc_matches_tarjan_on_random_digraph(spark):
+    pairs = _pseudo_random_pairs()
+    want = _tarjan_scc(pairs)
+    got = {
+        r["node_id"]: r["scc_id"]
+        for r in strongly_connected_components(
+            _edges(spark, pairs), max_peel=40
+        ).collect()
+    }
+    assert got == want
+
+
+def test_condensation_is_acyclic(spark):
+    pairs = _pseudo_random_pairs()
+    dag = {
+        (r["src_scc"], r["dst_scc"])
+        for r in scc_condensation(_edges(spark, pairs), max_peel=40).collect()
+    }
+    # Kahn's algorithm drains iff acyclic
+    nodes = {x for p in dag for x in p}
+    indeg = {v: 0 for v in nodes}
+    for _, b in dag:
+        indeg[b] += 1
+    frontier = [v for v in nodes if indeg[v] == 0]
+    seen = 0
+    while frontier:
+        v = frontier.pop()
+        seen += 1
+        for a, b in dag:
+            if a == v:
+                indeg[b] -= 1
+                if indeg[b] == 0:
+                    frontier.append(b)
+    assert seen == len(nodes)
+
+
+def test_scc_peel_exhaustion_raises(spark):
+    # condensation chain of three singleton levels: needs 3 peel rounds
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4)])
+    with pytest.raises(ValueError, match="did not drain"):
+        strongly_connected_components(e, max_peel=1)
+
+
+def test_scc_empty_graph(spark):
+    e = _edges(spark, [(5, 5)])  # self-loop only -> filtered out
+    out = strongly_connected_components(e)
+    assert out.count() == 0
+    assert out.columns == ["node_id", "scc_id"]
+
+
+def test_bowtie_core_tiebreak_smallest_scc(spark):
+    # two 2-cycles, equal size: core must be the one with smaller scc_id
+    e = _edges(spark, [(7, 8), (8, 7), (3, 4), (4, 3)])
+    got = {r["node_id"]: r["cls"] for r in bowtie_classify(e).collect()}
+    assert got == {3: "CORE", 4: "CORE", 7: "OTHER", 8: "OTHER"}
+
+
+# ---- HyperBall neighborhood function / effective diameter ----
+
+
+def _py_hyperball(edges, n_iters, seed=0):
+    """Pure-Python replay: exact BFS balls + the integer HLL estimator."""
+    import hashlib
+
+    nodes = sorted({v for e in edges for v in e})
+    adj = {}
+    for s, d in edges:
+        if s != d:
+            adj.setdefault(s, set()).add(d)
+    h = {}
+    for v in nodes:
+        b = int(hashlib.md5(f"hbb:{seed}|{v}".encode()).hexdigest()[:8], 16) % 16
+        hv = int(hashlib.md5(f"hbr:{seed}|{v}".encode()).hexdigest()[:15], 16)
+        low = (1 << 60) if hv == 0 else hv & -hv
+        h[v] = (b, low)
+    nf = []
+    for t in range(n_iters + 1):
+        total = 0
+        for v in nodes:
+            ball, frontier = {v}, {v}
+            for _ in range(t):
+                frontier = {u for f in frontier for u in adj.get(f, ())} - ball
+                ball |= frontier
+            regs = {}
+            for u in ball:
+                b, low = h[u]
+                regs[b] = max(regs.get(b, 0), low)
+            znum = (16 - len(regs)) * (1 << 40) + sum(
+                (1 << 39) // low for low in regs.values()
+            )
+            total += (172288 * (1 << 40)) // max(znum, 1)
+        nf.append(total)
+    return nf
+
+
+def test_hyperball_matches_python_replay(spark):
+    from metal_history_knowledge_graph_spark.operators.webgraph import hyperball
+
+    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 0), (2, 7), (7, 8), (5, 6)]
+    e = spark.createDataFrame(edges, "subj_id long, obj_id long")
+    got = {r.t: r.nf_milli for r in hyperball(e, n_iters=6).collect()}
+    want = _py_hyperball(edges, 6)
+    assert got == {t: want[t] for t in range(7)}
+
+
+def test_hyperball_monotone_and_effective_diameter(spark):
+    from metal_history_knowledge_graph_spark.operators.webgraph import hyperball
+
+    # directed path 0->1->...->9: N(t) strictly grows until t=9
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "subj_id long, obj_id long"
+    )
+    rows = sorted(hyperball(e, n_iters=10).collect(), key=lambda r: r.t)
+    vals = [r.nf_milli for r in rows]
+    assert all(a <= b for a, b in zip(vals, vals[1:]))
+    assert vals[9] == vals[10]  # converged at the true diameter
+    eff = rows[0].eff_diameter
+    assert all(r.eff_diameter == eff for r in rows)
+    # eff diameter = first t reaching 90% of final
+    t90 = next(r.t for r in rows if r.growth_permille >= 900)
+    assert eff == t90 and 0 < eff <= 9
+
+
+# ---- densest subgraph (Bahmani synchronous peeling) ----
 
 
 def test_densest_recovers_planted_clique(spark):
@@ -42,3 +299,48 @@ def test_densest_empty_and_guard(spark):
     assert densest_subgraph(e).count() == 0
     with _pt.raises(ValueError, match="eps_permille"):
         densest_subgraph(e, eps_permille=0)
+
+
+def test_topo_layers_hand_dag(spark):
+    import pytest
+
+    from metal_history_knowledge_graph_spark.operators.webgraph import (
+        topo_layers,
+    )
+
+    # diamond + a long tail: longest-path depths
+    dag = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4), (5, 2)]
+    e = spark.createDataFrame(dag, "src_scc long, dst_scc long")
+    got = {r["node_id"]: r["layer"] for r in topo_layers(e).collect()}
+    assert got == {0: 0, 5: 0, 1: 1, 2: 1, 3: 2, 4: 3}
+
+    with pytest.raises(ValueError, match="cycle"):
+        topo_layers(
+            spark.createDataFrame(
+                [(0, 1), (1, 2), (2, 0)], "src_scc long, dst_scc long"
+            )
+        ).collect()
+
+    with pytest.raises(ValueError, match="max_rounds"):
+        topo_layers(
+            spark.createDataFrame(
+                [(i, i + 1) for i in range(6)], "src_scc long, dst_scc long"
+            ),
+            max_rounds=3,
+        ).collect()
+
+
+def test_topo_layers_on_condensation(spark):
+    from metal_history_knowledge_graph_spark.operators.webgraph import (
+        scc_condensation,
+        topo_layers,
+    )
+
+    # bow-tie: IN chain -> core SCC -> OUT chain; condensation is a path
+    dag = scc_condensation(_edges(spark, BOWTIE_PAIRS))
+    got = {r["node_id"]: r["layer"] for r in topo_layers(dag).collect()}
+    # condensation nodes: 10 -> 11 -> 0(core) -> 20 -> 21; 10 -> 30; 40/41 comp
+    assert got[10] == 0 and got[11] == 1 and got[0] == 2
+    assert got[20] == 3 and got[21] == 4
+    assert got[30] == 1
+    assert 40 not in got  # disconnected SCC {40,41} has no DAG edges
