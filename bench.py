@@ -2,8 +2,8 @@
 """Benchmark harness.
 
 Default: full KG pipeline (pages → triples) over a seeded synthetic
-corpus scaled to the sf dir, on local[$SPARK_GRAFT_CPUS]. Prints ONE
-JSON line:
+corpus scaled to the sf dir, on local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on). Prints ONE JSON line:
 
     {"metric": "kg_pipeline_e2e_wall", "value": <total sec>, "unit": "sec",
      "queries": {...per-stage sec...}, "sf": ...,
@@ -15,6 +15,10 @@ Scaling mode (two-cluster-size evidence on one host):
 ``python bench.py --scaling --low N --high 4N`` runs the same pipeline
 at local[N] and local[4N] on identical input and reports throughput at
 both plus efficiency = (T4N/TN)/4, written to SCALING_RECORDED.json.
+The driver heap is ``get_spark``'s default (a quarter of RAM, 2-8 GB)
+unless ``$SPARK_DRIVER_MEM`` is set; SCALING_RECORDED.json was measured
+with ``SPARK_DRIVER_MEM=48g`` (32 concurrent wide-parquet writers
+GC-thrash an 8 GB heap), so a comparable scaling run sets it too.
 """
 
 from __future__ import annotations
@@ -28,12 +32,11 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from metal_history_knowledge_graph_spark.session import local_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# generous heap: 32 concurrent wide-parquet writer tasks GC-thrash an
-# 8g heap (measured ~25% wall regression). Must be set before the JVM
-# launches, hence env (session.py reads it).
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+CPUS = local_cores()
+
 
 #: corpus size per sf tier (pages); sf0.1 is the driver's bench tier.
 PAGES_BY_SF = {"sf0.001": 200, "sf0.01": 600, "sf0.1": 2000}
@@ -111,14 +114,6 @@ def make_spark(cpus: int):
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
         extra_confs={
-            # Per-core-constant heap (2 GB/core, floor 8 GB): a real
-            # N- vs 4N-executor comparison holds per-executor memory
-            # fixed, so aggregate memory scales with the cluster. A
-            # fixed local heap would instead starve each task of
-            # execution memory exactly as cores grow — an artifact of
-            # single-JVM local mode, not a property of the engine.
-            "spark.driver.memory": os.environ.get(
-                "SPARK_DRIVER_MEM", f"{max(8, 2 * cpus)}g"),
             # sandbox corpora are tiny by cluster standards: shrink
             # input splits so the narrow chunk/extract stages get
             # several tasks per core and the 96 corpus files are not

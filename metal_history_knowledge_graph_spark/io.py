@@ -14,6 +14,17 @@ The engine's write surface is intentionally tiny:
 Parquet-mode overwrite is atomic-enough for the sandbox (write to a
 temp dir, swap); on Iceberg every one of these is a snapshot commit,
 which is what the lineage/resume contract assumes at 100 TB.
+
+Read contract, parquet mode: ``read`` lists the table's files every
+time, so rows another writer committed are always visible. The schema
+Spark inferred on a table's first open is remembered per store and
+passed back as ``spark.read.schema(s)`` on later opens, which skips
+the footer-reading job. The memo is keyed by table name plus the table
+directory's ``(st_ino, st_mtime_ns)``: the stat key covers every
+Spark write (a swap makes a new directory, and an append creates and
+removes ``_temporary`` in it); the pruned merge, which swaps only
+partition subdirectories, drops the entry itself. Iceberg keeps
+schema and file list as table metadata, so its reads need no memo.
 """
 
 from __future__ import annotations
@@ -23,6 +34,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _iceberg_enabled(spark: SparkSession) -> bool:
@@ -34,6 +46,8 @@ class TableStore:
         self.spark = spark
         self.root = root
         self.iceberg = _iceberg_enabled(spark)
+        # table name -> ((st_ino, st_mtime_ns) of its dir, inferred schema)
+        self._schemas: dict[str, tuple[tuple[int, int], StructType]] = {}
         if not self.iceberg:
             os.makedirs(root, exist_ok=True)
 
@@ -70,7 +84,18 @@ class TableStore:
     def read(self, name: str) -> DataFrame:
         if self.iceberg:
             return self.spark.read.table(f"kg.{name}")
-        return self.spark.read.parquet(self._path(name))
+        path = self._path(name)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)  # Spark's own error
+        key = (st.st_ino, st.st_mtime_ns)
+        memo = self._schemas.get(name)
+        if memo is not None and memo[0] == key:
+            return self.spark.read.schema(memo[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[name] = (key, df.schema)
+        return df
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
         if self.iceberg:
@@ -207,6 +232,8 @@ class TableStore:
                 os.rename(dirpath, dest)
                 dirs[:] = []  # don't descend into the moved dir
         shutil.rmtree(staging)
+        # a depth-2 swap leaves the table root's stat as it was
+        self._schemas.pop(name, None)
 
     # -- table maintenance -------------------------------------------------
     def file_stats(self, name: str) -> dict:

@@ -47,6 +47,7 @@ from pyspark.sql.types import BooleanType
 from ..functions.merge_rules import fold_entities
 from ..functions.plan_hints import drop_pin, hash_agg_pin
 from ..functions.similarity import MERGE_THRESHOLD, name_similarity
+from ..session import local_frame
 from .extract import _ATTR_NAMES
 
 FORMS_SCHEMA = (
@@ -264,9 +265,9 @@ def connected_components(
             for k in {(r.entity_type, r.left) for r in pair_rows}
             | {(r.entity_type, r.right) for r in pair_rows}
         ]
-        spark = forms.sparkSession
-        labels = spark.createDataFrame(
-            label_rows, "entity_type string, form_norm string, label string"
+        labels = local_frame(
+            forms.sparkSession, label_rows,
+            "entity_type string, form_norm string, label string",
         )
         return (
             forms.select("entity_type", "form_norm")

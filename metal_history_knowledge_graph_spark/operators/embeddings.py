@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.queries import entity_view
+from ..session import local_frame
 from .simsearch import cosine_topk, with_l2_normalized
 
 DIM_DEFAULT = 64
@@ -110,7 +111,7 @@ def embed_entities(entities: DataFrame, dim: int = DIM_DEFAULT) -> DataFrame:
 
 def embed_texts_df(spark, texts: list[str], dim: int = DIM_DEFAULT) -> DataFrame:
     """Embed arbitrary query strings with the same expression."""
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "qid int, q string")
+    df = local_frame(spark, list(enumerate(texts)), "qid int, q string")
     vec = df.withColumn("embedding", _hashing_vector(F.col("q"), dim))
     return with_l2_normalized(vec, "embedding", out_col="embedding").select(
         "qid", "q", "embedding"

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import TableStore
+from ..session import local_frame
 
 LINEAGE_TABLE = "lineage"
 LINEAGE_SCHEMA = (
@@ -53,17 +54,9 @@ def commit_stage(
     row_count: int,
     metrics: dict[str, float] | None = None,
 ) -> None:
-    # From pandas the row crosses via Arrow into a LocalRelation; a
-    # Python list would become a Python RDD and start worker tasks.
-    import pandas as pd
-
-    row = pd.DataFrame({
-        "run_id": [run_id], "stage": [stage], "status": ["complete"],
-        "row_count": [int(row_count)],
-        "metrics": [{k: float(v) for k, v in (metrics or {}).items()}],
-        "committed_ts": [float(time.time())],
-    })
-    store.append(store.spark.createDataFrame(row, LINEAGE_SCHEMA), LINEAGE_TABLE)
+    row = (run_id, stage, "complete", int(row_count),
+           {k: float(v) for k, v in (metrics or {}).items()}, float(time.time()))
+    store.append(local_frame(store.spark, [row], LINEAGE_SCHEMA), LINEAGE_TABLE)
 
 
 PARTITION_LINEAGE_TABLE = "partition_lineage"

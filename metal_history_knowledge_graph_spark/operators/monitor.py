@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import TableStore
+from ..session import local_frame
 
 #: reference thresholds, quality_monitor.py:40-46 (latency default is
 #: host-dependent; the reference's 100 ms targets Kuzu point lookups).
@@ -203,7 +204,8 @@ def run_all_monitors(
     growth, a = monitor_graph_growth(store, thresholds, entities=entities, edges=edges)
     alerts += a
 
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(
             datetime.now(timezone.utc).isoformat(),
             growth["n_entities"], growth["n_edges"], f1,

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Confs that matter for this engine regardless of deployment.
 ENGINE_CONFS: dict[str, str] = {
@@ -42,6 +43,13 @@ ENGINE_CONFS: dict[str, str] = {
     # keys are vocabulary-sized (10^3..10^5 facts), far past 128 but
     # trivially memory-safe, so keep the hash path.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "131072",
+    # KG tables are partitioned by entity_type (18 dirs) or pred (33);
+    # the extraction schema bounds those counts, not the data volume.
+    # Past the default threshold of 32 dirs Spark lists them with a
+    # distributed job (~0.3 s for 33 local dirs on every open of
+    # edges); the driver lists a few hundred dirs faster than that.
+    # Iceberg reads never list.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
 }
 
 
@@ -49,6 +57,31 @@ ENGINE_CONFS: dict[str, str] = {
 #: by name, and a local-mode worker's own ``sys.path`` only covers its
 #: working directory, so this goes first on the executors' PYTHONPATH.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def local_cores() -> int:
+    """Cores for a local master: ``$SPARK_GRAFT_CPUS`` when set, else
+    the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def driver_heap_gb() -> int:
+    """Default driver heap: a quarter of physical memory, between 2 and
+    8 GB, so the Python workers keep room on the box."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(2, min(8, total // (4 << 30)))
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``ddl`` column
+    order). Built from pandas, the rows cross as Arrow into a
+    LocalRelation; a Python list would become a Python RDD and start
+    worker tasks."""
+    import pandas as pd
+
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def get_spark(
@@ -59,21 +92,22 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    on a cluster leave it unset and let spark-submit supply it.
+    ``master`` defaults to ``local[local_cores()]`` in the sandbox;
+    on a cluster leave it unset and let spark-submit supply it. The
+    driver heap is ``$SPARK_DRIVER_MEM``, else ``driver_heap_gb()``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and os.environ.get("SPARK_MASTER") is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cores()}]"
     if master:
         builder = builder.master(master)
 
     confs = dict(ENGINE_CONFS)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = local_cores()
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    confs.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+    confs["spark.driver.memory"] = os.environ.get(
+        "SPARK_DRIVER_MEM", f"{driver_heap_gb()}g")
     if extra_confs:
         confs.update(extra_confs)
     paths = confs.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)

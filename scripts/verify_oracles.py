@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Driver-style local verification: run every queries() entry on Spark
-at sf0.01 and compare against oracle_sql() via DuckDB — row count,
-column names, order-insensitive value multiset. kg_* queries (no
-oracle) get a rows-only check. Usage:
+at sf0.01 and compare against its oracle_sql() entry via DuckDB — row
+count, column names, order-insensitive value multiset. A query without
+an oracle fails. Spark runs on local[local_cores()]. Usage:
 
     python scripts/verify_oracles.py [sf_dir]
 """
@@ -39,7 +39,7 @@ def main():
     import __spark_entry__ as entrymod
     from metal_history_knowledge_graph_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -52,14 +52,15 @@ def main():
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
+        if name not in oracles:
+            failures.append((name, "NO ORACLE"))
+            print(f"FAIL {name}: no oracle_sql() entry")
+            continue
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL {name}: spark error {str(e)[:200]}")
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows)")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()

@@ -1,4 +1,6 @@
-"""Graph algorithms, location synthesis, and TableStore upsert."""
+"""Graph algorithms, location synthesis, and TableStore reads and upserts."""
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,6 +104,42 @@ def test_merge_upsert_creates_table(spark, store):
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     store.merge_upsert(df, "fresh", keys=["k"])
     assert store.read("fresh").count() == 1
+
+
+def _jobs_started(spark, fn):
+    sc, group = spark.sparkContext, f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_reopen_starts_no_jobs(spark, store):
+    # 40 partition dirs: past Spark's default parallel-listing threshold
+    store.write(spark.range(40).selectExpr("id AS k", "id * 2 AS v"), "wide",
+                partition_by=["k"])
+    first = store.read("wide")
+    again, jobs = _jobs_started(spark, lambda: store.read("wide"))
+    assert jobs == 0
+    assert again.schema == first.schema  # inferred types: k reads back as int
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_store_read_sees_other_writers(spark, store):
+    from metal_history_knowledge_graph_spark.io import TableStore
+
+    store.write(spark.range(4).selectExpr("id", "id % 2 AS p"), "t", partition_by=["p"])
+    assert store.read("t").columns == ["id", "p"]
+    other = TableStore(spark, store.root)
+    other.write(spark.range(4).selectExpr("id", "id * 10 AS extra", "id % 2 AS p"),
+                "t", partition_by=["p"])
+    assert store.read("t").columns == ["id", "extra", "p"]
+    store.append(spark.range(4, 6).selectExpr("id", "id * 10 AS extra", "id % 2 AS p"),
+                 "t", partition_by=["p"])
+    assert sorted(r.id for r in store.read("t").collect()) == list(range(6))
 
 
 def test_betweenness_distributed_matches_driver(spark):

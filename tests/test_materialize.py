@@ -1,8 +1,13 @@
-"""Lineage commits: the one-row DataFrame is built without a Python RDD,
-and the committed rows keep the lineage schema and values."""
+"""Driver-built rows (the lineage row, query vectors, component labels)
+reach Spark without a Python RDD, and committed lineage rows keep the
+lineage schema and values."""
 
 import time
 
+import pytest
+
+from metal_history_knowledge_graph_spark.operators.canonicalize import connected_components
+from metal_history_knowledge_graph_spark.operators.embeddings import embed_texts_df
 from metal_history_knowledge_graph_spark.operators.materialize import (
     LINEAGE_TABLE,
     commit_stage,
@@ -13,7 +18,7 @@ DDL = ("run_id string, stage string, status string, row_count long, "
        "metrics map<string,double>, committed_ts double")
 
 
-def test_commit_stage_row(spark, store, monkeypatch):
+def _lineage_rows(spark, store, monkeypatch):
     appended = []
     append = store.append
 
@@ -22,14 +27,41 @@ def test_commit_stage_row(spark, store, monkeypatch):
         append(df, name, *args, **kwargs)
 
     monkeypatch.setattr(store, "append", spy)
+    commit_stage(store, "r1", "chunks", 12)  # metrics=None: an empty map
+    commit_stage(store, "r1", "entities", 3, {"secs": 2, "rows": 3.5})
+    return appended[0].unionByName(appended[1])
+
+
+def _query_vectors(spark, store, monkeypatch):
+    return embed_texts_df(spark, ["bands similar to sabbath", "doom"])
+
+
+def _component_labels(spark, store, monkeypatch):
+    forms = spark.sql("SELECT * FROM VALUES ('bands', 'sabbath'), ('bands', 'sabath'), "
+                      "('bands', 'doom') AS t(entity_type, form_norm)")
+    pairs = spark.sql("SELECT * FROM VALUES ('bands', 'sabath', 'sabbath') "
+                      "AS t(entity_type, left, right)")
+    labels = connected_components(forms, pairs)
+    assert sorted(labels.collect()) == [
+        ("bands", "doom", "doom"), ("bands", "sabath", "sabath"),
+        ("bands", "sabbath", "sabath")]
+    return labels
+
+
+@pytest.mark.parametrize("build", [_lineage_rows, _query_vectors, _component_labels],
+                         ids=["commit_stage", "embed_texts_df", "connected_components"])
+def test_local_rows_skip_python_rdd(spark, store, monkeypatch, build):
+    # session.local_frame rows cross as Arrow into a LocalRelation; a
+    # Python list becomes a LogicalRDD with worker tasks
+    plan = build(spark, store, monkeypatch)._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan, plan
+
+
+def test_commit_stage_row(spark, store):
     t0 = time.time()
     commit_stage(store, "r1", "chunks", 12)
     commit_stage(store, "r1", "entities", 3, {"secs": 2, "rows": 3.5})
     t1 = time.time()
-
-    for df in appended:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert "LogicalRDD" not in plan, plan
 
     lineage = store.read(LINEAGE_TABLE)
     assert lineage.schema == spark.createDataFrame([], DDL).schema

@@ -59,6 +59,8 @@ def test_run_all_monitors_appends_history(spark, built):
     truth = generate_truth(spark, 40, seed=13)
     loose = {**M.DEFAULT_THRESHOLDS, "search_latency_max_ms": 1e9}
     row, alerts = M.run_all_monitors(spark, built, truth, loose)
+    # the history row is built on the driver without a Python RDD
+    assert "LogicalRDD" not in row._jdf.queryExecution().analyzed().toString()
     assert built.exists(M.HISTORY_TABLE)
     n1 = built.read(M.HISTORY_TABLE).count()
     assert n1 >= 1
