@@ -75,7 +75,7 @@ def _kg_store(spark: SparkSession, sf_dir: str):
     root = f"/tmp/kg_entry_store_{os.path.basename(key.rstrip('/'))}_{_tag}"
     store = TableStore(spark, root)
     run(spark, generate_pages(spark, n_pages, seed=42), store,
-        run_id=f"entry-{n_pages}", resume=True, pair_strategy="lsh")
+        run_id=f"entry-{n_pages}", resume=True)
     _KG_CACHE[key] = store
     return store
 
@@ -105,7 +105,7 @@ def entry(spark: SparkSession) -> DataFrame:
     root = os.path.join(_EXPORT_ROOT, "flagship")
     shutil.rmtree(root, ignore_errors=True)
     store = TableStore(spark, root)
-    run(spark, pages, store, run_id="flagship", resume=False, pair_strategy="lsh")
+    run(spark, pages, store, run_id="flagship", resume=False)
     ents = store.read("entities")
     edges = store.read("edges")
     locations = ents.filter(F.col("entity_type") == "locations").select(
@@ -4980,8 +4980,7 @@ def q_warc_pipeline(spark, sf_dir):
     root = os.path.join(_EXPORT_ROOT, "warcpipe_store")
     shutil.rmtree(root, ignore_errors=True)
     store = TableStore(spark, root)
-    run(spark, pages2, store, run_id=f"warcpipe-{n_pages}", resume=False,
-        pair_strategy="lsh")
+    run(spark, pages2, store, run_id=f"warcpipe-{n_pages}", resume=False)
     _export_triples_inputs(store, _WP_RELS_PATH, _WP_ENTS_PATH, _WP_RES_PATH)
     store.read("edge_provenance").select("edge_key", "url").write.mode(
         "overwrite"

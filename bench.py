@@ -94,8 +94,7 @@ def run_pipeline(spark, pages_path: str, store_root: str) -> dict:
     store = TableStore(spark, store_root)
     pages = spark.read.parquet(pages_path)
     t0 = time.time()
-    metrics = run(spark, pages, store, run_id="bench", resume=False,
-                  pair_strategy="lsh")
+    metrics = run(spark, pages, store, run_id="bench", resume=False)
     wall = time.time() - t0
     triples = int(metrics.get("edges_rows", 0))
     # throughput numerator that scales with corpus size: distinct

@@ -23,10 +23,12 @@ The scale architecture (this is where the 100 TB story lives):
    ``SequenceMatcher.ratio() ≥ 0.85`` (``extraction_pipeline.py:46-61``)
    in an Arrow-batched pandas UDF, so emitted groups match reference
    semantics; LSH is never the decider.
-5. **Connected components** — iterative min-label propagation
-   (DataFrame self-joins, localCheckpoint per iteration). Greedy
-   reference grouping is transitive via accumulated variations, so CC
-   produces the same groups, order-independently (SURVEY §2.4).
+5. **Connected components** — the package's one kernel,
+   ``graph_algos.components`` grouped by entity_type: driver union-find
+   over the collected verified pairs, min-label propagation
+   (localCheckpoint per round) above its pair limit. Greedy reference
+   grouping is transitive via accumulated variations, so CC produces
+   the same groups, order-independently (SURVEY §2.4).
 6. **Cross-form ordered fold** per component → canonical entity;
    deterministic ``canonical_id = xxhash64(entity_type, lower(name))``.
 
@@ -47,8 +49,8 @@ from pyspark.sql.types import BooleanType
 from ..functions.merge_rules import fold_entities
 from ..functions.plan_hints import drop_pin, hash_agg_pin
 from ..functions.similarity import MERGE_THRESHOLD, name_similarity
-from ..session import local_frame
 from .extract import _ATTR_NAMES
+from .graph_algos import COMPONENTS_MAX_ITER, DRIVER_EDGE_LIMIT, components
 
 FORMS_SCHEMA = (
     "entity_type string, form_norm string, first_seen string, first_name string, "
@@ -214,112 +216,22 @@ def verify_pairs(pairs: DataFrame, threshold: float = MERGE_THRESHOLD) -> DataFr
 
 
 def connected_components(
-    forms: DataFrame, edges: DataFrame, max_iter: int = 15,
-    driver_pair_limit: int = 2_000_000,
+    forms: DataFrame, edges: DataFrame,
+    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
+    max_iter: int = COMPONENTS_MAX_ITER,
 ) -> DataFrame:
     """Stage 5: connected components over the verified-pair graph;
     returns (entity_type, form_norm, label).
 
-    Only forms that occur in a verified pair participate — everything
-    else labels itself in one narrow expression. The pair graph is tiny
-    at every scale (|pairs| ≪ |vocabulary| ≪ |mentions|: pairs exist
-    only between near-identical name forms), so the default path
-    collects the pair list and runs union-find on the driver — one
-    job, zero shuffle iterations. If the pair set ever exceeds
-    ``driver_pair_limit`` the distributed min-label-propagation loop
-    takes over (one shuffle per iteration, localCheckpoint lineage
-    cuts); it raises ``RuntimeError`` rather than return a component
-    split across labels when ``max_iter`` rounds do not converge."""
-    # ONE action decides the path AND fetches the pairs: limit+1 rows
-    # collected — if fewer come back than the cap, that IS the complete
-    # pair set (the LSH join + verify UDF lineage runs once, not once
-    # for a count probe and again for the collect).
-    probe = edges.select("entity_type", "left", "right") \
-        .limit(driver_pair_limit + 1).collect()
-    if not probe:
-        return forms.select(
-            "entity_type", "form_norm", F.col("form_norm").alias("label")
-        )
-
-    if len(probe) <= driver_pair_limit:
-        pair_rows = probe
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-
-        for r in pair_rows:
-            union((r.entity_type, r.left), (r.entity_type, r.right))
-        label_rows = [
-            (k[0], k[1], find(k)[1])
-            for k in {(r.entity_type, r.left) for r in pair_rows}
-            | {(r.entity_type, r.right) for r in pair_rows}
-        ]
-        labels = local_frame(
-            forms.sparkSession, label_rows,
-            "entity_type string, form_norm string, label string",
-        )
-        return (
-            forms.select("entity_type", "form_norm")
-            .join(F.broadcast(labels), ["entity_type", "form_norm"], "left")
-            .select(
-                "entity_type", "form_norm",
-                F.coalesce("label", "form_norm").alias("label"),
-            )
-        )
-
-    sym = edges.unionByName(
-        edges.select("entity_type", F.col("right").alias("left"), F.col("left").alias("right"))
-    ).localCheckpoint(eager=True)
-    paired = (
-        sym.select("entity_type", F.col("left").alias("form_norm"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = paired.withColumn("label", F.col("form_norm"))
-    changed = 1
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(
-                labels.withColumnRenamed("form_norm", "left"),
-                ["entity_type", "left"],
-            )
-            .groupBy("entity_type", F.col("right").alias("form_norm"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, ["entity_type", "form_norm"], "left")
-            .select(
-                "entity_type", "form_norm",
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), ["entity_type", "form_norm"])
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds "
-            "(a component's diameter exceeds max_iter) — re-run with a "
-            "larger max_iter"
-        )
+    The pair graph is tiny at every scale (|pairs| ≪ |vocabulary| ≪
+    |mentions|: pairs exist only between near-identical name forms),
+    so :func:`graph_algos.components` (grouped by entity_type) takes
+    its driver union-find path — one job, zero shuffle iterations.
+    Only forms in a verified pair get a label there; every other form
+    labels itself in one narrow expression."""
+    labels = components(
+        edges, "left", "right", ["entity_type"], driver_edge_limit, max_iter
+    ).withColumnRenamed("node", "form_norm")
     return (
         forms.select("entity_type", "form_norm")
         .join(labels, ["entity_type", "form_norm"], "left")
@@ -417,7 +329,6 @@ def attach_provenance_sample(
 def canonicalize_core(
     mentions: DataFrame,
     spark: SparkSession | None = None,
-    pair_strategy: str = "lsh",
     threshold: float = MERGE_THRESHOLD,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Canonicalization stages 1–6 WITHOUT the provenance attach.
@@ -426,17 +337,9 @@ def canonicalize_core(
     provenance_pairs is the LAZY (canonical_id, url) pair DF — the
     caller commits it once (its only execution) and feeds the committed
     table to :func:`attach_provenance_sample`. This is the pipeline's
-    path: a table commit, not a 10⁷-row localCheckpoint.
-
-    ``pair_strategy``: 'lsh' (scale path, default) or 'exact'
-    (exhaustive; small vocabularies / oracle in tests).
-    """
+    path: a table commit, not a 10⁷-row localCheckpoint."""
     forms = surface_forms(mentions).localCheckpoint(eager=True)
-    raw_pairs = (
-        candidate_pairs_exact(forms) if pair_strategy == "exact"
-        else candidate_pairs_lsh(forms)
-    )
-    edges = verify_pairs(raw_pairs, threshold)
+    edges = verify_pairs(candidate_pairs_lsh(forms), threshold)
     labels = connected_components(forms, edges)
     # Everything below is vocabulary-sized: checkpoint eagerly so the
     # applyInPandas fold DAG runs exactly once, not once per consumer.
@@ -449,7 +352,6 @@ def canonicalize_core(
 def canonicalize(
     mentions: DataFrame,
     spark: SparkSession | None = None,
-    pair_strategy: str = "lsh",
     threshold: float = MERGE_THRESHOLD,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full canonicalization. Returns (entities, resolution, provenance)
@@ -459,7 +361,7 @@ def canonicalize(
     provenance pairs with a localCheckpoint (fine for tests and
     interactive use; the pipeline commits them as a table instead)."""
     entities, resolution, provenance = canonicalize_core(
-        mentions, spark, pair_strategy, threshold
+        mentions, spark, threshold
     )
     provenance = provenance.localCheckpoint(eager=True)
     # no checkpoint on the final attach: both inputs are already cut,

@@ -1,10 +1,11 @@
 """Graph-analytics operators over the edge table
 (``scripts/analysis/graph_metrics.py`` ports).
 
-* connected components — union-find on the collected edge list when it
-  fits (graphs of canonical entities are vocabulary-sized); iterative
-  min-label propagation otherwise (same pattern as
-  operators/canonicalize.py, where the distributed variant lives).
+* connected components — :func:`components`, the package's one
+  kernel (canonicalize groups its verified name pairs with it too):
+  union-find on the collected pair list when it fits (pair graphs and
+  graphs of canonical entities are vocabulary-sized); iterative
+  min-label propagation otherwise.
 * sampled betweenness — BFS shortest paths from a deterministic sample
   of sources, node frequency across path interior
   (graph_metrics.py:256-287).
@@ -12,8 +13,15 @@
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import local_frame
+
+DRIVER_EDGE_LIMIT = 2_000_000
+COMPONENTS_MAX_ITER = 25
 
 
 def _undirected_pairs(edges: DataFrame):
@@ -24,82 +32,103 @@ def _undirected_pairs(edges: DataFrame):
     )
 
 
-def graph_components(
-    edges: DataFrame, driver_edge_limit: int = 2_000_000, max_iter: int = 25
+def _union_find(pairs) -> dict:
+    """{node: root} for every node of ``pairs`` (an iterable of node
+    pairs), where root is the smallest node of its component: unions
+    hang the larger root under the smaller, finds compress paths."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    nodes: dict = {}
+    for x, y in pairs:
+        nodes[x] = nodes[y] = None
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return {v: find(v) for v in nodes}
+
+
+def components(
+    pairs: DataFrame, a: str, b: str, group: Sequence[str] = (),
+    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
+    max_iter: int = COMPONENTS_MAX_ITER,
 ) -> DataFrame:
-    """(node_id, component_id) for every node that has an edge.
+    """Connected components of the undirected (``a``, ``b``) pair graph,
+    separately within each ``group`` value: ``(*group, node, label)``
+    per node with an edge, ``label`` = the smallest node of its component.
 
-    Entity-graph edges are vocabulary-sized (distinct facts), so the
-    driver union-find path applies at any realistic scale; falls back
-    to distributed label propagation above ``driver_edge_limit``.
-    ``max_iter`` bounds the propagation rounds (a min label travels
-    one hop per round, so it must cover the widest component's
-    diameter); non-convergence RAISES rather than silently returning a
-    real component split into several ids."""
-    und = _undirected_pairs(edges)
-    # limit+1 COUNT decides the path — _undirected_pairs is a cheap
-    # projection here, so re-running it for the driver-case collect
-    # costs less than collecting (and discarding) up to limit+1 rows
-    # of a distributed-path graph into the driver heap. (The
-    # collect-probe variant lives in canonicalize.connected_components,
-    # where the edge lineage is LSH+UDF work worth not recomputing.)
-    n_pairs = und.limit(driver_edge_limit + 1).count()
-    if n_pairs <= driver_edge_limit:
-        rows = und.collect()
-        parent: dict = {}
+    ONE action picks the path AND fetches the pairs: limit+1 rows are
+    collected, and fewer than the cap back IS the whole pair set, so the
+    pair lineage (LSH join + verify UDF in canonicalize) runs once; the
+    driver union-finds them into a local relation. Above
+    ``driver_edge_limit`` pairs, distributed min-label propagation takes
+    over (one shuffle per round, localCheckpoint cuts). A label travels
+    one hop per round, so ``max_iter`` must cover the widest component's
+    diameter; non-convergence RAISES rather than split a component."""
+    keys = [*group, "node"]
+    edges = pairs.select(*group, F.col(a).alias("node"), F.col(b).alias("nbr"))
+    probe = edges.limit(driver_edge_limit + 1).collect()
+    if len(probe) <= driver_edge_limit:
+        k = len(group)
+        roots = _union_find((r[:k + 1], (*r[:k], r[k + 1])) for r in probe)
+        ddl = ", ".join(f"{n} {f.dataType.simpleString()}"
+                        for n, f in zip([*keys, "label"], edges.schema.fields))
+        rows = [(*node, root[-1]) for node, root in roots.items()]
+        return local_frame(pairs.sparkSession, rows, ddl)
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ra, rb = find(r.a), find(r.b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = {r.a for r in rows} | {r.b for r in rows}
-        out = [(node, find(node)) for node in nodes]
-        return edges.sparkSession.createDataFrame(
-            out, "node_id long, component_id long"
-        )
-
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = sym.select(F.col("a").alias("node_id")).distinct() \
-        .withColumn("component_id", F.col("node_id")).localCheckpoint(eager=True)
-    changed = 1
+    sym = edges.unionByName(
+        edges.select(*group, F.col("nbr").alias("node"), F.col("node").alias("nbr"))
+    ).localCheckpoint(eager=True)
+    labels = sym.select(*keys).distinct().withColumn("label", F.col("node")) \
+        .localCheckpoint(eager=True)
     for _ in range(max_iter):
+        # sym is symmetric, so every labelled node has a neighbour min
         neighbor_min = (
-            sym.join(labels.withColumnRenamed("node_id", "a"), "a")
-            .groupBy(F.col("b").alias("node_id"))
-            .agg(F.min("component_id").alias("nlabel"))
+            sym.join(labels, keys)
+            .groupBy(*group, F.col("nbr").alias("node"))
+            .agg(F.min("label").alias("nlabel"))
         )
         new_labels = (
-            labels.join(neighbor_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(F.col("component_id"), F.coalesce("nlabel", "component_id"))
-                .alias("component_id"),
-            )
+            labels.join(neighbor_min, keys)
+            .select(*keys, F.least("label", "nlabel").alias("label"))
             .localCheckpoint(eager=True)
         )
         changed = (
-            new_labels.alias("n").join(labels.alias("o"), "node_id")
-            .filter(F.col("n.component_id") != F.col("o.component_id"))
+            new_labels.alias("n").join(labels.alias("o"), keys)
+            .filter(F.col("n.label") != F.col("o.label"))
             .limit(1).count()
         )
         labels = new_labels
         if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds "
-            "(a component's diameter exceeds max_iter) — re-run with a "
-            "larger max_iter"
-        )
-    return labels
+            return labels
+    raise RuntimeError(
+        f"label propagation did not converge in {max_iter} rounds "
+        "(a component's diameter exceeds max_iter) — re-run with a "
+        "larger max_iter"
+    )
+
+
+def graph_components(
+    edges: DataFrame, driver_edge_limit: int = DRIVER_EDGE_LIMIT,
+    max_iter: int = COMPONENTS_MAX_ITER,
+) -> DataFrame:
+    """(node_id, component_id) for every node that has an edge, with
+    component_id = the smallest node id in the component (both long):
+    :func:`components` over the undirected (subj_id, obj_id) pairs.
+
+    Entity-graph edges are vocabulary-sized (distinct facts), so the
+    driver union-find path applies at any realistic scale; the
+    distributed path takes over above ``driver_edge_limit`` pairs."""
+    comps = components(_undirected_pairs(edges), "a", "b", (), driver_edge_limit, max_iter)
+    return comps.select(F.col("node").cast("long").alias("node_id"),
+                        F.col("label").cast("long").alias("component_id"))
 
 
 def component_sizes(edges: DataFrame) -> DataFrame:
@@ -289,8 +318,8 @@ def betweenness_sampled(
     plans/queries.shortest_path_length pattern, batched over all
     sampled sources at once) — no unguarded ``collect``."""
     und = _undirected_pairs(edges)
-    # count-probe (see graph_components): never collect rows we might
-    # immediately discard on the go-distributed branch
+    # count-probe: never collect rows we might immediately discard on
+    # the go-distributed branch
     if und.limit(driver_edge_limit + 1).count() > driver_edge_limit:
         return _betweenness_distributed(und, n_sources, max_hops)
     rows = und.collect()
@@ -776,23 +805,9 @@ def components_incremental(
             f"{driver_comp_edge_limit} component pairs — run the full "
             "distributed graph_components instead"
         )
-    parent: dict = {}
-
-    def find(v):
-        root = v
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(v, v) != root:
-            parent[v], v = root, parent[v]
-        return root
-
-    for r in rows:
-        rx, ry = find(r.x), find(r.y)
-        if rx != ry:
-            lo, hi = (rx, ry) if rx < ry else (ry, rx)
-            parent[hi] = lo  # min root -> component_id stays the min
-    remap = [(c, find(c)) for c in set(parent)]
-    spark = labels.sparkSession
+    # min roots keep component_id the global min node id
+    roots = _union_find((r.x, r.y) for r in rows)
+    remap = [(c, root) for c, root in roots.items() if c != root]
     new_nodes = (
         und.select(F.col("a").alias("node_id"))
         .unionByName(und.select(F.col("b").alias("node_id")))
@@ -803,9 +818,7 @@ def components_incremental(
     all_labels = labels.unionByName(new_nodes)
     if not remap:
         return all_labels
-    remap_df = spark.createDataFrame(
-        remap, "old_comp long, new_comp long"
-    )
+    remap_df = local_frame(labels.sparkSession, remap, "old_comp long, new_comp long")
     return (
         all_labels.join(
             F.broadcast(remap_df),

@@ -47,7 +47,6 @@ def run(
     store: TableStore,
     run_id: str = "run-1",
     resume: bool = True,
-    pair_strategy: str = "lsh",
     until_stage: str | None = None,
 ) -> dict[str, float]:
     """Execute the full pipeline; returns stage metrics (incl. wall
@@ -107,7 +106,7 @@ def run(
         return n, {}
 
     def do_entities():
-        _write_entities_tail(spark, store, store.read("extracted"), pair_strategy)
+        _write_entities_tail(spark, store, store.read("extracted"))
         n, _ = commit_partition_lineage(store, partition_lineage(
             store.read("entities"), run_id, "entities", key_col="canonical_name"
         ))
@@ -128,16 +127,13 @@ def run(
 
 
 def _write_entities_tail(
-    spark: SparkSession, store: TableStore, extracted: DataFrame,
-    pair_strategy: str,
+    spark: SparkSession, store: TableStore, extracted: DataFrame
 ) -> None:
     """canonicalize → resolution, entity_provenance, entities: the writes
     ``run``'s entities stage and ``run_incremental`` share (lineage
     commits stay with the callers)."""
     mentions = mentions_of(extracted)
-    entities, resolution, provenance = canonicalize_core(
-        mentions, spark, pair_strategy=pair_strategy
-    )
+    entities, resolution, provenance = canonicalize_core(mentions, spark)
     store.write(resolution, "resolution")
     # provenance pair table commits FIRST (the narrow mention-scale
     # pass executes exactly once, into this write); the n_sources /
@@ -161,8 +157,9 @@ def _write_edges_tail(store: TableStore, extracted: DataFrame) -> None:
     write_edges(store, finalize_edges(rep, store.read("edge_provenance")))
 
 
-def processed_urls(store: TableStore) -> DataFrame:
-    """Urls already chunked (the page-level resume record).
+def processed_urls(store: TableStore) -> DataFrame | None:
+    """Urls already chunked (the page-level resume record), or None on
+    a store that has chunked nothing yet.
 
     Reads the compact url-only ``processed_urls`` table when present
     (maintained by the chunk stage and every incremental/streaming
@@ -172,7 +169,27 @@ def processed_urls(store: TableStore) -> DataFrame:
     existed."""
     if store.exists("processed_urls"):
         return store.read("processed_urls").select("url")
-    return store.read("chunks").select("url").distinct()
+    if store.exists("chunks"):
+        return store.read("chunks").select("url").distinct()
+    return None
+
+
+def append_new_pages(store: TableStore, pages: DataFrame) -> int:
+    """The append path for new pages, shared by ``run_incremental`` and
+    streaming ingest: anti-join ``pages`` against the processed urls
+    (the reference's checkpoint-resume, ``batch_extraction.py:91-99``),
+    chunk the novel ones, then append chunks, extracted rows and the
+    chunked urls. Returns the number of new chunks; on 0 nothing is
+    appended."""
+    seen = processed_urls(store)
+    todo = pages if seen is None else pages.join(seen, "url", "left_anti")
+    chunks = chunk_pages(todo).localCheckpoint(eager=True)
+    n = chunks.count()
+    if n:
+        store.append(chunks, "chunks")
+        store.append(extract_chunks(chunks), "extracted", partition_by=["kind"])
+        store.append(chunks.select("url").distinct(), "processed_urls")
+    return n
 
 
 def run_incremental(
@@ -180,30 +197,23 @@ def run_incremental(
     new_pages: DataFrame,
     store: TableStore,
     run_id: str,
-    pair_strategy: str = "lsh",
 ) -> dict[str, float]:
-    """Incremental append: anti-join new pages against processed urls
-    (the reference's checkpoint-resume,
-    ``batch_extraction.py:91-99``), chunk+extract only the novel pages,
-    append, then re-run the (vocabulary-sized) canonicalize/triple
-    stages over the full mention set."""
-    todo = new_pages.join(processed_urls(store), "url", "left_anti")
-    chunks = chunk_pages(todo).localCheckpoint(eager=True)
-    store.append(chunks, "chunks")
-    store.append(extract_chunks(chunks), "extracted", partition_by=["kind"])
-    store.append(chunks.select("url").distinct(), "processed_urls")
+    """Incremental append: chunk+extract only the novel pages
+    (:func:`append_new_pages`), then re-run the (vocabulary-sized)
+    canonicalize/triple stages over the full mention set."""
+    append_new_pages(store, new_pages)
     # Downstream (vocabulary-sized) stages recompute from the appended
     # mention set — idempotent deterministic folds.
-    return _rebuild_downstream(spark, store, run_id, pair_strategy)
+    return _rebuild_downstream(spark, store, run_id)
 
 
 def _rebuild_downstream(
-    spark: SparkSession, store: TableStore, run_id: str, pair_strategy: str
+    spark: SparkSession, store: TableStore, run_id: str
 ) -> dict[str, float]:
     metrics: dict[str, float] = {}
     t0 = time.time()
     extracted = store.read("extracted")
-    _write_entities_tail(spark, store, extracted, pair_strategy)
+    _write_entities_tail(spark, store, extracted)
     _write_edges_tail(store, extracted)
     metrics["incremental_secs"] = time.time() - t0
     metrics["entities_rows"] = store.read("entities").count()

@@ -81,7 +81,10 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     import pandas as pd
 
     schema = StructType.fromDDL(ddl)
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    # empty rows would take a Python RDD; a null row cut to 0 plans as an empty LocalRelation
+    pdf = pd.DataFrame(rows or [(None,) * len(schema)], columns=schema.names)
+    df = spark.createDataFrame(pdf, schema)
+    return df if rows else df.limit(0)
 
 
 def get_spark(

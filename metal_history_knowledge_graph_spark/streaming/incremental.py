@@ -26,16 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import TableStore
-from ..operators.chunk import chunk_pages
-from ..operators.extract import extract_chunks
 from ..operators.materialize import commit_stage
+from ..plans.pipeline import append_new_pages
 from ..sources.corpus import PAGES_SCHEMA
 
 
 def ingest_batch(store: TableStore, batch_df: DataFrame, run_id: str, batch_id: int) -> int:
     """Append-path for one micro-batch of pages; idempotent per url.
 
-    The seen-set is the compact, url-only ``processed_urls`` table
+    The batch pipeline's ``append_new_pages`` does the work: the
+    seen-set is the compact, url-only ``processed_urls`` table
     (appended per batch), NOT a distinct-scan of the ever-growing
     chunks table — the anti-join's build side stays O(distinct urls ×
     one column) instead of growing with full chunk history. Crash
@@ -45,19 +45,9 @@ def ingest_batch(store: TableStore, batch_df: DataFrame, run_id: str, batch_id: 
     chunks (parquet mode). On Iceberg both appends are snapshot
     commits and a single transaction closes that window — which is the
     production deployment this engine targets."""
-    if store.exists("processed_urls"):
-        seen = store.read("processed_urls").select("url")
-        todo = batch_df.join(seen, "url", "left_anti")
-    else:
-        todo = batch_df
-    chunks = chunk_pages(todo).localCheckpoint(eager=True)
-    n = chunks.count()
-    if n == 0:
-        return 0
-    store.append(chunks, "chunks")
-    store.append(extract_chunks(chunks), "extracted", partition_by=["kind"])
-    store.append(chunks.select("url").distinct(), "processed_urls")
-    commit_stage(store, run_id, f"stream-batch-{batch_id}", n)
+    n = append_new_pages(store, batch_df)
+    if n:
+        commit_stage(store, run_id, f"stream-batch-{batch_id}", n)
     return n
 
 

@@ -36,7 +36,6 @@ def main() -> int:
     ap.add_argument("--store", required=True, help="warehouse root for output tables")
     ap.add_argument("--run-id", default="run-1")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--pair-strategy", default="lsh", choices=["lsh", "exact"])
     ap.add_argument("--incremental", action="store_true",
                     help="append-only ingest of new pages into an existing store")
     ap.add_argument("--report-quality", action="store_true",
@@ -63,11 +62,10 @@ def main() -> int:
         ap.error("one of --pages / --generate is required")
 
     if args.incremental:
-        metrics = run_incremental(spark, pages, store, run_id=args.run_id,
-                                  pair_strategy=args.pair_strategy)
+        metrics = run_incremental(spark, pages, store, run_id=args.run_id)
     else:
         metrics = run(spark, pages, store, run_id=args.run_id,
-                      resume=not args.no_resume, pair_strategy=args.pair_strategy)
+                      resume=not args.no_resume)
 
     out = {"run_id": args.run_id, "metrics": metrics}
     if args.report_quality and args.generate:

@@ -7,7 +7,7 @@ import pytest
 def spark():
     from metal_history_knowledge_graph_spark.session import get_spark
 
-    s = get_spark(app_name="kg-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="kg-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -83,11 +83,37 @@ def test_distributed_components_match_driver_path(spark):
     labels = lambda df: {(r.form_norm, r.label) for r in df.collect()}  # noqa: E731
     driver = labels(connected_components(forms, edges))
     assert driver == {(f"f{i}", "f0") for i in range(5)}
-    assert labels(connected_components(forms, edges, driver_pair_limit=0)) == driver
+    assert labels(connected_components(forms, edges, driver_edge_limit=0)) == driver
 
 
 def test_distributed_components_raise_on_non_convergence(spark):
     """A capped label propagation must not split a component silently."""
     forms, edges = _chain(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(forms, edges, driver_pair_limit=0, max_iter=1)
+        connected_components(forms, edges, driver_edge_limit=0, max_iter=1)
+
+
+def test_components_stay_within_entity_type(spark):
+    """Both types carry the same form names, linked by chains that
+    would merge into one component if types were ignored; each path
+    must keep every type's components (and labels) to itself."""
+    names = [f"f{i}" for i in range(5)]
+    forms = spark.createDataFrame(
+        [(t, f) for t in ("bands", "people") for f in names],
+        "entity_type string, form_norm string",
+    )
+    edges = spark.createDataFrame(
+        [("bands", "f0", "f1"), ("bands", "f3", "f4"),
+         ("people", "f1", "f2"), ("people", "f2", "f3")],
+        "entity_type string, left string, right string",
+    )
+    expected = {
+        ("bands", "f0", "f0"), ("bands", "f1", "f0"), ("bands", "f2", "f2"),
+        ("bands", "f3", "f3"), ("bands", "f4", "f3"),
+        ("people", "f0", "f0"), ("people", "f1", "f1"), ("people", "f2", "f1"),
+        ("people", "f3", "f1"), ("people", "f4", "f4"),
+    }
+    for limit in (2_000_000, 0):
+        got = connected_components(forms, edges, driver_edge_limit=limit).collect()
+        assert len(got) == len(expected)
+        assert set(map(tuple, got)) == expected, limit

@@ -61,7 +61,7 @@ def test_partition_invariance(spark):
     mentions = mentions_of(extracted)
 
     def canon_set(m):
-        ents, _, _ = canonicalize(m, spark, pair_strategy="exact")
+        ents, _, _ = canonicalize(m, spark)
         return {
             (r.entity_type, r.canonical_name, r.attrs_json,
              tuple(sorted(r.variations)), r.n_mentions)

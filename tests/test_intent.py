@@ -19,8 +19,7 @@ def graph(spark, tmp_path_factory):
     from metal_history_knowledge_graph_spark.io import TableStore
 
     store = TableStore(spark, str(tmp_path_factory.mktemp("istore")))
-    run(spark, generate_pages(spark, 80, seed=11), store, run_id="i",
-        pair_strategy="lsh")
+    run(spark, generate_pages(spark, 80, seed=11), store, run_id="i")
     return store.read("entities").cache(), store.read("edges").cache()
 
 

@@ -48,8 +48,18 @@ def _component_labels(spark, store, monkeypatch):
     return labels
 
 
-@pytest.mark.parametrize("build", [_lineage_rows, _query_vectors, _component_labels],
-                         ids=["commit_stage", "embed_texts_df", "connected_components"])
+def _no_pair_labels(spark, store, monkeypatch):
+    # no verified pair: the components kernel hands back an empty frame
+    forms = spark.sql("SELECT * FROM VALUES ('bands', 'doom') AS t(entity_type, form_norm)")
+    pairs = spark.sql("SELECT 'bands' AS entity_type, 'a' AS left, 'b' AS right").limit(0)
+    labels = connected_components(forms, pairs)
+    assert labels.collect() == [("bands", "doom", "doom")]
+    return labels
+
+
+@pytest.mark.parametrize(
+    "build", [_lineage_rows, _query_vectors, _component_labels, _no_pair_labels],
+    ids=["commit_stage", "embed_texts_df", "connected_components", "no_pairs"])
 def test_local_rows_skip_python_rdd(spark, store, monkeypatch, build):
     # session.local_frame rows cross as Arrow into a LocalRelation; a
     # Python list becomes a LogicalRDD with worker tasks

@@ -15,8 +15,7 @@ def built(spark, tmp_path_factory):
     from metal_history_knowledge_graph_spark.io import TableStore
 
     store = TableStore(spark, str(tmp_path_factory.mktemp("mstore")))
-    run(spark, generate_pages(spark, 40, seed=13), store, run_id="m",
-        pair_strategy="lsh")
+    run(spark, generate_pages(spark, 40, seed=13), store, run_id="m")
     return store
 
 

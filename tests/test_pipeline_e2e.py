@@ -21,7 +21,7 @@ def graph(spark, tmp_path_factory):
 
     store = TableStore(spark, str(tmp_path_factory.mktemp("kgstore")))
     pages = generate_pages(spark, N_PAGES, seed=42)
-    metrics = run(spark, pages, store, run_id="e2e", pair_strategy="lsh")
+    metrics = run(spark, pages, store, run_id="e2e")
     return store, metrics
 
 
@@ -105,7 +105,7 @@ def test_member_of_roles(graph):
 def test_resume_skips_completed_stages(spark, graph):
     store, _ = graph
     pages = generate_pages(spark, N_PAGES, seed=42)
-    metrics2 = run(spark, pages, store, run_id="e2e", pair_strategy="lsh")
+    metrics2 = run(spark, pages, store, run_id="e2e")
     assert metrics2.get("chunks_skipped") == 1.0
     assert metrics2.get("edges_skipped") == 1.0
 

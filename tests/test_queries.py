@@ -13,7 +13,7 @@ def graph(spark, tmp_path_factory):
     from metal_history_knowledge_graph_spark.io import TableStore
 
     store = TableStore(spark, str(tmp_path_factory.mktemp("qstore")))
-    run(spark, generate_pages(spark, 60, seed=7), store, run_id="q", pair_strategy="lsh")
+    run(spark, generate_pages(spark, 60, seed=7), store, run_id="q")
     return store.read("entities").cache(), store.read("edges").cache()
 
 

@@ -43,8 +43,7 @@ def _roundtrip(pages):
 def _run(spark, pages, root, run_id):
     shutil.rmtree(root, ignore_errors=True)
     store = TableStore(spark, root)
-    metrics = run(spark, pages, store, run_id=run_id, resume=False,
-                  pair_strategy="lsh")
+    metrics = run(spark, pages, store, run_id=run_id, resume=False)
     return store, metrics
 
 
