@@ -10,6 +10,9 @@ The engine's write surface is intentionally tiny:
   (``scripts/automation/load_to_kuzu_merge.py:161-700``) with ONE
   anti-join + union (or a real ``MERGE INTO`` on Iceberg)
 * ``read(name)``
+* ``files(name, key_col)``               — per-file row count and key
+  range from the commit's own metadata (parquet footers / Iceberg
+  manifests), which is what the lineage records hold
 
 Parquet-mode overwrite is atomic-enough for the sandbox (write to a
 temp dir, swap); on Iceberg every one of these is a snapshot commit,
@@ -234,6 +237,49 @@ class TableStore:
         shutil.rmtree(staging)
         # a depth-2 swap leaves the table root's stat as it was
         self._schemas.pop(name, None)
+
+    def files(self, name: str, key_col: str) -> list[tuple[str, int, str | None, str | None]]:
+        """``(file, row_count, key_min, key_max)`` for every committed
+        data file of a table, from metadata the commit already wrote —
+        no Spark job, no data scan.
+
+        Parquet mode reads each file's footer on the driver: the row
+        count, and ``key_col``'s min/max over the row groups (``None``
+        when any row group has no min/max statistics for it). Iceberg
+        mode reads the ``files`` metadata table (one small job over the
+        manifests; string bounds are truncated per the table's metrics
+        mode, so they are bounds, not exact values); no test runs that
+        branch, as the Iceberg tests skip without the Iceberg jar."""
+        if self.iceberg:
+            from pyspark.sql import functions as F
+
+            m = f"readable_metrics.{key_col}"
+            rows = self.spark.read.table(f"kg.{name}.files").select(
+                "file_path", "record_count",
+                F.col(f"{m}.lower_bound").cast("string"),
+                F.col(f"{m}.upper_bound").cast("string"),
+            ).collect()
+            return [(r[0], int(r[1]), r[2], r[3]) for r in rows]
+        import pyarrow.parquet as pq
+
+        out = []
+        for dirpath, dirs, names in os.walk(self._path(name)):
+            dirs.sort()
+            for f in sorted(names):
+                if not f.endswith(".parquet") or f[0] in "._":
+                    continue
+                path = os.path.join(dirpath, f)
+                md = pq.read_metadata(path)
+                col = next(i for i in range(md.num_columns)
+                           if md.schema.column(i).path == key_col)
+                stats = [md.row_group(g).column(col).statistics
+                         for g in range(md.num_row_groups)]
+                lo = hi = None
+                if stats and all(s is not None and s.has_min_max for s in stats):
+                    lo = str(min(s.min for s in stats))
+                    hi = str(max(s.max for s in stats))
+                out.append((path, md.num_rows, lo, hi))
+        return out
 
     # -- table maintenance -------------------------------------------------
     def file_stats(self, name: str) -> dict:

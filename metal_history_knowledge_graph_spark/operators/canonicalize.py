@@ -10,10 +10,11 @@ The scale architecture (this is where the 100 TB story lives):
    identical payloads; AQE handles residual skew. After this step all
    fuzzy work happens on a vocabulary-sized table (≤ millions of rows
    at web scale), NOT on mentions.
-2. **Within-form ordered fold** (``applyInPandas`` per (type, form)):
-   replays the reference's merge rules
-   (``extraction_pipeline.py:118-156``) over the few distinct attr
-   payloads of a surface form, in the pinned total order.
+2. **Within-form ordered fold** (``applyInArrow`` per (type, form),
+   on plain Python lists — no per-group pandas conversion): replays
+   the reference's merge rules (``extraction_pipeline.py:118-156``)
+   over the few distinct attr payloads of a surface form, in the
+   pinned total order.
 3. **Pair generation** — MinHash-LSH over char-3-gram shingles
    (native banded minhash, one hash table per xxhash64 seed — the same
    OR-amplified scheme as ``pyspark.ml.feature.MinHashLSH`` without a
@@ -75,6 +76,34 @@ def _fold_rows_to_dict(rows) -> dict:
     return fold_entities(dicts)
 
 
+def _arrow_schema(ddl: str):
+    """Arrow schema of a DDL string, built on the driver (the parse
+    needs the JVM) and shipped to the workers inside the fold."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def _sorted_rows(cols: dict, keys: list[str]) -> list[int]:
+    """Row order of a group by ``keys``, nulls last, stable — the order
+    ``DataFrame.sort_values(keys, kind="mergesort")`` gives."""
+    return sorted(range(len(cols[keys[0]])),
+                  key=lambda i: tuple((cols[k][i] is None, cols[k][i]) for k in keys))
+
+
+def _min_present(values):
+    present = [v for v in values if v is not None]
+    return min(present) if present else None
+
+
+def _max_confidence(values) -> float | None:
+    # the pandas fold's Series.max skipped nulls and NaN; its NaN for an
+    # all-null group reached Spark as null
+    present = [v for v in values if v is not None and v == v]
+    return float(max(present)) if present else None
+
+
 def surface_forms(
     mentions: DataFrame, max_variants_per_form: int | None = None
 ) -> DataFrame:
@@ -119,24 +148,27 @@ def surface_forms(
             .drop("_rn")
         )
 
-    def fold(pdf):
-        import pandas as pd
+    schema = _arrow_schema(FORMS_SCHEMA)
 
-        pdf = pdf.sort_values(["first_seen", "name", "attrs_json"], kind="mergesort")
-        merged = _fold_rows_to_dict(list(pdf["attrs_json"]))
-        variations = list(dict.fromkeys(pdf["name"]))
-        return pd.DataFrame([{
-            "entity_type": pdf["entity_type"].iloc[0],
-            "form_norm": pdf["link_norm"].iloc[0],
-            "first_seen": pdf["first_seen"].min(),
-            "first_name": pdf["name"].iloc[0],
+    def fold(table):
+        import pyarrow as pa
+
+        cols = table.to_pydict()
+        order = _sorted_rows(cols, ["first_seen", "name", "attrs_json"])
+        names = [cols["name"][i] for i in order]
+        merged = _fold_rows_to_dict([cols["attrs_json"][i] for i in order])
+        return pa.Table.from_pylist([{
+            "entity_type": cols["entity_type"][order[0]],
+            "form_norm": cols["link_norm"][order[0]],
+            "first_seen": _min_present(cols["first_seen"]),
+            "first_name": names[0],
             "attrs_json": json.dumps(merged, ensure_ascii=False, sort_keys=True),
-            "variations": variations,
-            "n_mentions": int(pdf["n_mentions"].sum()),
-            "confidence": float(pdf["confidence"].max()),
-        }])
+            "variations": list(dict.fromkeys(names)),
+            "n_mentions": sum(cols["n_mentions"]),
+            "confidence": _max_confidence(cols["confidence"]),
+        }], schema=schema)
 
-    return variants.groupBy("entity_type", "link_norm").applyInPandas(fold, FORMS_SCHEMA)
+    return variants.groupBy("entity_type", "link_norm").applyInArrow(fold, FORMS_SCHEMA)
 
 
 def candidate_pairs_lsh(
@@ -247,27 +279,30 @@ def canonical_entities(forms: DataFrame, labels: DataFrame) -> DataFrame:
     into one canonical entity row."""
     member = forms.join(labels, ["entity_type", "form_norm"])
 
-    def fold(pdf):
-        import pandas as pd
+    schema = _arrow_schema(ENTITY_SCHEMA)
 
-        pdf = pdf.sort_values(["first_seen", "form_norm"], kind="mergesort")
-        merged = _fold_rows_to_dict(list(pdf["attrs_json"]))
-        variations = list(dict.fromkeys(v for vs in pdf["variations"] for v in vs))
-        first_name = pdf["first_name"].iloc[0]
-        return pd.DataFrame([{
-            "entity_type": pdf["entity_type"].iloc[0],
+    def fold(table):
+        import pyarrow as pa
+
+        cols = table.to_pydict()
+        order = _sorted_rows(cols, ["first_seen", "form_norm"])
+        merged = _fold_rows_to_dict([cols["attrs_json"][i] for i in order])
+        first_name = cols["first_name"][order[0]]
+        return pa.Table.from_pylist([{
+            "entity_type": cols["entity_type"][order[0]],
             "canonical_name": first_name,
             "name_norm": str(first_name).lower().strip(),
-            "first_seen": pdf["first_seen"].min(),
+            "first_seen": _min_present(cols["first_seen"]),
             "attrs_json": json.dumps(merged, ensure_ascii=False, sort_keys=True),
-            "variations": variations,
-            "member_forms": list(pdf["form_norm"]),
-            "n_mentions": int(pdf["n_mentions"].sum()),
-            "n_forms": int(len(pdf)),
-            "confidence": float(pdf["confidence"].max()),
-        }])
+            "variations": list(dict.fromkeys(
+                v for i in order for v in cols["variations"][i])),
+            "member_forms": [cols["form_norm"][i] for i in order],
+            "n_mentions": sum(cols["n_mentions"]),
+            "n_forms": len(order),
+            "confidence": _max_confidence(cols["confidence"]),
+        }], schema=schema)
 
-    folded = member.groupBy("entity_type", "label").applyInPandas(fold, ENTITY_SCHEMA)
+    folded = member.groupBy("entity_type", "label").applyInArrow(fold, ENTITY_SCHEMA)
     return folded.withColumn(
         "canonical_id", F.xxhash64(F.col("entity_type"), F.col("name_norm"))
     )
@@ -342,7 +377,7 @@ def canonicalize_core(
     edges = verify_pairs(candidate_pairs_lsh(forms), threshold)
     labels = connected_components(forms, edges)
     # Everything below is vocabulary-sized: checkpoint eagerly so the
-    # applyInPandas fold DAG runs exactly once, not once per consumer.
+    # applyInArrow fold DAG runs exactly once, not once per consumer.
     entities = canonical_entities(forms, labels).localCheckpoint(eager=True)
     resolution = resolution_map(entities).localCheckpoint(eager=True)
     provenance = entity_provenance(mentions, resolution)

@@ -318,11 +318,10 @@ def betweenness_sampled(
     plans/queries.shortest_path_length pattern, batched over all
     sampled sources at once) — no unguarded ``collect``."""
     und = _undirected_pairs(edges)
-    # count-probe: never collect rows we might immediately discard on
-    # the go-distributed branch
-    if und.limit(driver_edge_limit + 1).count() > driver_edge_limit:
+    # one action picks the path AND fetches the pairs, as components does
+    rows = und.limit(driver_edge_limit + 1).collect()
+    if len(rows) > driver_edge_limit:
         return _betweenness_distributed(und, n_sources, max_hops)
-    rows = und.collect()
     adj: dict[int, list[int]] = {}
     for r in rows:
         adj.setdefault(r.a, []).append(r.b)

@@ -12,6 +12,11 @@ re-run with the same run_id skips completed stages (their tables are
 already committed); an incremental run anti-joins new pages against
 the processed-urls record. All writes go through TableStore, so on
 Iceberg each commit is a snapshot — exact resume falls out.
+
+The partition-lineage table is the audit unit: one row per committed
+data file with its row count and key range. Those numbers come from
+the commit's own metadata (``TableStore.files``: parquet footers,
+Iceberg manifests), so recording them never rescans the table.
 """
 
 from __future__ import annotations
@@ -31,20 +36,22 @@ LINEAGE_SCHEMA = (
 )
 
 
-def stage_complete(store: TableStore, run_id: str, stage: str) -> bool:
+def completed_stages(store: TableStore, run_id: str) -> set[str]:
+    """Stages of ``run_id`` with a committed lineage row, in one
+    filtered collect (a run's handful of lineage rows)."""
     if not store.exists(LINEAGE_TABLE):
-        return False
-    n = (
+        return set()
+    rows = (
         store.read(LINEAGE_TABLE)
-        .filter(
-            (F.col("run_id") == run_id)
-            & (F.col("stage") == stage)
-            & (F.col("status") == "complete")
-        )
-        .limit(1)
-        .count()
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "complete"))
+        .select("stage")
+        .collect()
     )
-    return n > 0
+    return {r.stage for r in rows}
+
+
+def stage_complete(store: TableStore, run_id: str, stage: str) -> bool:
+    return stage in completed_stages(store, run_id)
 
 
 def commit_stage(
@@ -60,43 +67,25 @@ def commit_stage(
 
 
 PARTITION_LINEAGE_TABLE = "partition_lineage"
+PARTITION_LINEAGE_SCHEMA = (
+    "run_id string, stage string, file string, row_count long, "
+    "key_min string, key_max string"
+)
 
 
-def partition_lineage(
-    df: DataFrame, run_id: str, stage: str,
-    key_col: str = "url", mismatch_col: str | None = None,
-) -> DataFrame:
-    """Per-physical-partition lineage record (north rule: key range +
-    row count per partition — the audit/resume unit at scale), in ONE
-    scan of the committed table. ``mismatch_col`` (boolean) fuses the
-    byte-identity violation count into the same pass (chunks stage)."""
-    aggs = [
-        F.min(key_col).cast("string").alias("key_min"),
-        F.max(key_col).cast("string").alias("key_max"),
-        F.count(F.lit(1)).alias("row_count"),
-        F.countDistinct(key_col).alias("n_keys"),
-        (
-            F.sum((~F.col(mismatch_col)).cast("long"))
-            if mismatch_col is not None
-            else F.max(F.lit(None).cast("long"))
-        ).alias("n_mismatch"),
-    ]
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(*aggs)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("stage", F.lit(stage))
-    )
-
-
-def commit_partition_lineage(store: TableStore, lineage: DataFrame) -> tuple[int, int]:
-    """Append the (tiny) per-partition records; returns
-    (total_rows, total_mismatch) summed over them so callers never
-    rescan the big table for counts."""
-    mat = lineage.localCheckpoint(eager=True)
-    totals = mat.agg(F.sum("row_count"), F.sum("n_mismatch")).collect()[0]
-    store.append(mat, PARTITION_LINEAGE_TABLE)
-    return int(totals[0] or 0), int(totals[1] or 0)
+def commit_partition_lineage(
+    store: TableStore, name: str, run_id: str, stage: str, key_col: str
+) -> tuple[int, int]:
+    """Append one lineage row per committed data file of table ``name``
+    (row count and ``key_col`` range, north rule: the audit/resume unit
+    at scale) and return ``(total_rows, n_files)``. The numbers come
+    from the file metadata (:meth:`TableStore.files`), so the commit
+    starts one Spark job — the append — and never scans the table."""
+    files = store.files(name, key_col)
+    rows = [(run_id, stage, f, n, lo, hi) for f, n, lo, hi in files]
+    store.append(local_frame(store.spark, rows, PARTITION_LINEAGE_SCHEMA),
+                 PARTITION_LINEAGE_TABLE)
+    return sum(n for _, n, _, _ in files), len(files)
 
 
 def write_entities(store: TableStore, entities: DataFrame) -> None:

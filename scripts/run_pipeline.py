@@ -43,7 +43,11 @@ def main() -> int:
     args = ap.parse_args()
 
     from metal_history_knowledge_graph_spark.io import TableStore
-    from metal_history_knowledge_graph_spark.plans.pipeline import run, run_incremental
+    from metal_history_knowledge_graph_spark.plans.pipeline import (
+        STAGES,
+        run,
+        run_incremental,
+    )
     from metal_history_knowledge_graph_spark.session import get_spark
     from metal_history_knowledge_graph_spark.sources.corpus import (
         generate_pages,
@@ -68,6 +72,11 @@ def main() -> int:
                       resume=not args.no_resume)
 
     out = {"run_id": args.run_id, "metrics": metrics}
+    # {rows, secs, files} of every stage this run executed
+    out["stages"] = {
+        s: {k: metrics[f"{s}_{k}"] for k in ("rows", "secs", "files")}
+        for s in STAGES if f"{s}_rows" in metrics
+    }
     if args.report_quality and args.generate:
         from metal_history_knowledge_graph_spark.plans.quality import triple_prf
 

@@ -1,4 +1,5 @@
 import shutil
+import uuid
 
 import pytest
 
@@ -20,3 +21,19 @@ def store(spark, tmp_path):
     root = str(tmp_path / "kgstore")
     yield TableStore(spark, root)
     shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(fn) -> (fn(), number of Spark jobs fn started)``,
+    counted under a fresh job group with the status tracker."""
+    def count(fn):
+        sc, group = spark.sparkContext, f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

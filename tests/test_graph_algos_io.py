@@ -1,7 +1,5 @@
 """Graph algorithms, location synthesis, and TableStore reads and upserts."""
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,23 +104,12 @@ def test_merge_upsert_creates_table(spark, store):
     assert store.read("fresh").count() == 1
 
 
-def _jobs_started(spark, fn):
-    sc, group = spark.sparkContext, f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_store_reopen_starts_no_jobs(spark, store):
+def test_store_reopen_starts_no_jobs(spark, store, jobs_started):
     # 40 partition dirs: past Spark's default parallel-listing threshold
     store.write(spark.range(40).selectExpr("id AS k", "id * 2 AS v"), "wide",
                 partition_by=["k"])
     first = store.read("wide")
-    again, jobs = _jobs_started(spark, lambda: store.read("wide"))
+    again, jobs = jobs_started(lambda: store.read("wide"))
     assert jobs == 0
     assert again.schema == first.schema  # inferred types: k reads back as int
     assert sorted(again.collect()) == sorted(first.collect())

@@ -1,6 +1,6 @@
 """Driver-built rows (the lineage row, query vectors, component labels)
-reach Spark without a Python RDD, and committed lineage rows keep the
-lineage schema and values."""
+reach Spark without a Python RDD, committed lineage rows keep the
+lineage schema and values, and per-file lineage comes from footers."""
 
 import time
 
@@ -10,6 +10,8 @@ from metal_history_knowledge_graph_spark.operators.canonicalize import connected
 from metal_history_knowledge_graph_spark.operators.embeddings import embed_texts_df
 from metal_history_knowledge_graph_spark.operators.materialize import (
     LINEAGE_TABLE,
+    PARTITION_LINEAGE_TABLE,
+    commit_partition_lineage,
     commit_stage,
     stage_complete,
 )
@@ -83,3 +85,33 @@ def test_commit_stage_row(spark, store):
     assert all(t0 <= r.committed_ts <= t1 for r in rows)
     assert stage_complete(store, "r1", "entities")
     assert not stage_complete(store, "r1", "edges")
+
+
+def test_files_reads_footer_stats(store):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(store.root, "t", "p=1"))
+    a = os.path.join(store.root, "t", "p=1", "part-a.parquet")
+    b = os.path.join(store.root, "t", "part-b.parquet")
+    # two row groups with stats; a file written without any
+    pq.write_table(pa.table({"k": ["m", "x", "b"], "v": [1, 2, 3]}), a, row_group_size=2)
+    pq.write_table(pa.table({"k": ["c", "d"], "v": [4, 5]}), b, write_statistics=False)
+    assert sorted(store.files("t", "k")) == [(a, 3, "b", "x"), (b, 2, None, None)]
+
+
+def test_partition_lineage_commit_starts_one_job(spark, store, jobs_started):
+    df = spark.range(12).selectExpr("id % 3 AS p", "format_string('k%02d', id) AS k")
+    store.write(df.repartition(2), "t", partition_by=["p"])
+    files = store.files("t", "k")
+    (rows, n_files), jobs = jobs_started(
+        lambda: commit_partition_lineage(store, "t", "r1", "t", "k"))
+    assert jobs == 1  # the append; the footers are read on the driver
+    assert (rows, n_files) == (12, len(files))
+    recs = store.read(PARTITION_LINEAGE_TABLE).collect()
+    assert sorted((r.file, r.row_count, r.key_min, r.key_max) for r in recs) == sorted(files)
+    assert {(r.run_id, r.stage) for r in recs} == {("r1", "t")}
+    assert min(r.key_min for r in recs) == "k00"
+    assert max(r.key_max for r in recs) == "k11"

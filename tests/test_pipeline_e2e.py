@@ -129,29 +129,54 @@ def test_incremental_append(spark, graph):
 
 
 def test_partition_lineage_all_stages(spark, tmp_path):
-    """Every stage commits per-partition lineage (key range + row count
-    per physical partition) and the recorded totals equal the committed
-    tables' counts."""
-    from pyspark.sql import functions as F
+    """Every stage commits one lineage row per committed data file,
+    holding that file's own row count and key range; stage totals equal
+    the committed tables' counts, and the stage rows carry the totals,
+    the file counts and the byte-identity count."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     from metal_history_knowledge_graph_spark.io import TableStore
     from metal_history_knowledge_graph_spark.plans.pipeline import run
 
     store = TableStore(spark, str(tmp_path / "plstore"))
-    run(spark, generate_pages(spark, 25, seed=21), store, run_id="pl")
-    pl = store.read("partition_lineage")
-    stages = {r.stage for r in pl.select("stage").distinct().collect()}
-    assert stages == {"chunks", "extracted", "entities", "edges"}
-    totals = {
-        r.stage: r.total
-        for r in pl.groupBy("stage").agg(F.sum("row_count").alias("total")).collect()
-    }
-    assert totals["chunks"] == store.read("chunks").count()
-    assert totals["extracted"] == store.read("extracted").count()
-    assert totals["entities"] == store.read("entities").count()
-    assert totals["edges"] == store.read("edges").count()
-    # mismatch column fused only on the chunks scan, zero violations
-    mm = {r.stage: r.m for r in pl.groupBy("stage")
-          .agg(F.sum("n_mismatch").alias("m")).collect()}
-    assert mm["chunks"] == 0
-    assert mm["extracted"] is None
+    metrics = run(spark, generate_pages(spark, 25, seed=21), store, run_id="pl")
+    pl = store.read("partition_lineage").collect()
+    stage_rows = {r.stage: r for r in store.read("lineage").collect()}
+    keys = {"chunks": "url", "extracted": "url", "entities": "canonical_name",
+            "edges": "edge_key"}
+    assert {r.stage for r in pl} == set(keys)
+    for stage, key in keys.items():
+        recs = [r for r in pl if r.stage == stage]
+        files = sorted(glob.glob(f"{store.root}/{stage}/**/part-*.parquet", recursive=True))
+        assert sorted(r.file for r in recs) == files  # one record per data file
+        for r in recs:
+            col = pq.read_table(r.file, columns=[key]).column(key)
+            lo_hi = pc.min_max(col).as_py()
+            assert (r.row_count, r.key_min, r.key_max) == (
+                len(col), lo_hi["min"], lo_hi["max"]), r.file
+        total = sum(r.row_count for r in recs)
+        assert total == store.read(stage).count()
+        assert total == metrics[f"{stage}_rows"] == stage_rows[stage].row_count
+        assert metrics[f"{stage}_files"] == len(files)
+        assert stage_rows[stage].metrics["files"] == len(files)
+    # the byte-identity count rides on the chunks write: zero violations
+    assert stage_rows["chunks"].metrics["text_mismatch_urls"] == 0
+
+
+def test_text_mismatch_counted(spark, tmp_path):
+    """A page whose crawl text disagrees with its html shows up in the
+    chunks stage row."""
+    from metal_history_knowledge_graph_spark.io import TableStore
+
+    pages = generate_pages(spark, 6, seed=5)
+    url = pages.orderBy("url").first().url
+    tampered = pages.withColumn("text", F.when(
+        F.col("url") == url, F.concat("text", F.lit(" (edited)"))).otherwise(F.col("text")))
+    store = TableStore(spark, str(tmp_path / "mmstore"))
+    run(spark, tampered, store, run_id="mm", until_stage="chunks")
+    row = store.read("lineage").collect()[0]
+    assert row.stage == "chunks"
+    assert row.metrics["text_mismatch_urls"] >= 1
