@@ -22,7 +22,7 @@ The scale architecture (this is where the 100 TB story lives):
    greedy scan (``extraction_pipeline.py:109-116``).
 4. **Pair verification** — the reference's own decision function,
    ``SequenceMatcher.ratio() ≥ 0.85`` (``extraction_pipeline.py:46-61``)
-   in an Arrow-batched pandas UDF, so emitted groups match reference
+   in a scalar Arrow UDF, so emitted groups match reference
    semantics; LSH is never the decider.
 5. **Connected components** — the package's one kernel,
    ``graph_algos.components`` grouped by entity_type: driver union-find
@@ -43,13 +43,14 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..functions.merge_rules import fold_entities
 from ..functions.plan_hints import drop_pin, hash_agg_pin
 from ..functions.similarity import MERGE_THRESHOLD, name_similarity
+from ..session import arrow_schema
 from .extract import _ATTR_NAMES
 from .graph_algos import COMPONENTS_MAX_ITER, DRIVER_EDGE_LIMIT, components
 
@@ -64,7 +65,12 @@ ENTITY_SCHEMA = (
     "n_mentions long, n_forms int, confidence double"
 )
 
+#: urls kept, sorted, in an entity's ``source_urls`` / an edge's
+#: ``provenance`` sample (``n_sources`` stays exact)
 PROVENANCE_SAMPLE = 100
+
+#: MinHash-LSH hash tables (one band of one hash each)
+LSH_TABLES = 16
 
 
 def _fold_rows_to_dict(rows) -> dict:
@@ -74,15 +80,6 @@ def _fold_rows_to_dict(rows) -> dict:
         d = json.loads(r) if r else {}
         dicts.append(d)
     return fold_entities(dicts)
-
-
-def _arrow_schema(ddl: str):
-    """Arrow schema of a DDL string, built on the driver (the parse
-    needs the JVM) and shipped to the workers inside the fold."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 def _sorted_rows(cols: dict, keys: list[str]) -> list[int]:
@@ -104,18 +101,10 @@ def _max_confidence(values) -> float | None:
     return float(max(present)) if present else None
 
 
-def surface_forms(
-    mentions: DataFrame, max_variants_per_form: int | None = None
-) -> DataFrame:
-    """Stages 1+2: mentions → one row per (entity_type, link_norm).
-
-    ``max_variants_per_form`` bounds the number of distinct attr
-    payloads folded per surface form (first-seen order kept). On
-    adversarial web text where every page words a description
-    differently, the distinct-payload set grows with the corpus; the
-    cap trades the unbounded description-concat semantics (which the
-    reference also has) for a hard skew bound. Leave None for exact
-    reference semantics (tests, sandbox scales).
+def surface_forms(mentions: DataFrame) -> DataFrame:
+    """Stages 1+2: mentions → one row per (entity_type, link_norm),
+    folding every distinct attr payload of the form (the reference's
+    unbounded merge semantics).
 
     No url pooling here: provenance lives in its own narrow
     (canonical_id, url) pair table (:func:`entity_provenance`). Earlier
@@ -140,15 +129,8 @@ def surface_forms(
         )
     )
     variants = drop_pin(variants)
-    if max_variants_per_form is not None:
-        w = Window.partitionBy("entity_type", "link_norm").orderBy("first_seen", "name", "attrs_json")
-        variants = (
-            variants.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_variants_per_form)
-            .drop("_rn")
-        )
 
-    schema = _arrow_schema(FORMS_SCHEMA)
+    schema = arrow_schema(FORMS_SCHEMA)
 
     def fold(table):
         import pyarrow as pa
@@ -171,10 +153,7 @@ def surface_forms(
     return variants.groupBy("entity_type", "link_norm").applyInArrow(fold, FORMS_SCHEMA)
 
 
-def candidate_pairs_lsh(
-    forms: DataFrame,
-    num_hash_tables: int = 16,
-) -> DataFrame:
+def candidate_pairs_lsh(forms: DataFrame) -> DataFrame:
     """Stage 3: recall-oriented candidate pairs via MinHash-LSH over
     char-3-gram shingles. Returns (entity_type, left, right) with
     left < right.
@@ -209,7 +188,7 @@ def candidate_pairs_lsh(
         "entity_type", "form_norm",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(num_hash_tables - 1)),
+                F.sequence(F.lit(0), F.lit(LSH_TABLES - 1)),
                 lambda i: F.array_min(
                     F.transform(F.col("grams"), lambda g: F.xxhash64(g, i))
                 ),
@@ -237,12 +216,17 @@ def candidate_pairs_exact(forms: DataFrame) -> DataFrame:
     return a.join(b, "entity_type").filter(F.col("left") < F.col("right"))
 
 
-def verify_pairs(pairs: DataFrame, threshold: float = MERGE_THRESHOLD) -> DataFrame:
-    """Stage 4: keep pairs with SequenceMatcher ratio ≥ threshold —
-    the reference's exact decision function, Arrow-batched."""
-    @F.pandas_udf(BooleanType())
+def verify_pairs(pairs: DataFrame) -> DataFrame:
+    """Stage 4: keep pairs with SequenceMatcher ratio ≥
+    ``MERGE_THRESHOLD`` — the reference's exact decision function, over
+    Arrow batches."""
+    @F.arrow_udf(BooleanType())
     def similar(left, right):
-        return left.combine(right, lambda a, b: name_similarity(a, b) >= threshold)
+        import pyarrow as pa
+
+        return pa.array([name_similarity(a, b) >= MERGE_THRESHOLD
+                         for a, b in zip(left.to_pylist(), right.to_pylist())],
+                        type=pa.bool_())
 
     return pairs.filter(similar(F.col("left"), F.col("right")))
 
@@ -279,7 +263,7 @@ def canonical_entities(forms: DataFrame, labels: DataFrame) -> DataFrame:
     into one canonical entity row."""
     member = forms.join(labels, ["entity_type", "form_norm"])
 
-    schema = _arrow_schema(ENTITY_SCHEMA)
+    schema = arrow_schema(ENTITY_SCHEMA)
 
     def fold(table):
         import pyarrow as pa
@@ -328,8 +312,7 @@ def entity_provenance(mentions: DataFrame, resolution: DataFrame) -> DataFrame:
     through arrays or a Python fold: an earlier build pooled urls via
     collect_set inside the surface-form aggregation, which hauled a hot
     entity's millions of urls into single rows (and single fold
-    groups) — exactly the skew this table shape exists to prevent.
-    Exact regardless of ``max_variants_per_form``."""
+    groups) — exactly the skew this table shape exists to prevent."""
     return (
         mentions.select("entity_type", "link_norm", "url")
         .join(
@@ -341,30 +324,37 @@ def entity_provenance(mentions: DataFrame, resolution: DataFrame) -> DataFrame:
     )
 
 
-def attach_provenance_sample(
-    entities: DataFrame, provenance: DataFrame, cap: int = PROVENANCE_SAMPLE
-) -> DataFrame:
-    """Exact n_sources + bounded source_urls sample in ONE
-    partial-agg-friendly aggregation (no window: a hot entity's rows
-    combine map-side; buffer = distinct urls per entity — hash-sample
-    the urls first if that ever outgrows executor memory)."""
-    agg = provenance.groupBy("canonical_id").agg(
-        F.sort_array(F.collect_set("url")).alias("_urls")
+def provenance_pools(pairs: DataFrame, key: str, sample: str) -> DataFrame:
+    """``(key, n_sources, sample)`` from a committed distinct
+    ``(key, url)`` pair table: the exact url count and the first
+    ``PROVENANCE_SAMPLE`` urls in sorted order, in ONE vocabulary-keyed
+    aggregation (no window). The pairs are distinct, so a list needs no
+    set dedup; the full sorted array exists only transiently inside the
+    aggregation — hash-subsample the pairs first if one key's url set
+    ever outgrows executor memory. Entities (``source_urls``) and edges
+    (``provenance``) both pool here."""
+    return pairs.groupBy(key).agg(
+        F.array_sort(F.collect_list("url")).alias("_urls")
     ).select(
-        "canonical_id",
+        key,
         F.size("_urls").alias("n_sources"),
-        F.slice("_urls", 1, cap).alias("source_urls"),
+        F.slice("_urls", 1, PROVENANCE_SAMPLE).alias(sample),
     )
+
+
+def attach_provenance_sample(entities: DataFrame, provenance: DataFrame) -> DataFrame:
+    """Entities with exact ``n_sources`` (0 without provenance) and the
+    bounded sorted ``source_urls`` sample from the committed
+    (canonical_id, url) table."""
     return (
-        entities.join(agg, "canonical_id", "left")
+        entities.join(provenance_pools(provenance, "canonical_id", "source_urls"),
+                      "canonical_id", "left")
         .withColumn("n_sources", F.coalesce("n_sources", F.lit(0)))
     )
 
 
 def canonicalize_core(
-    mentions: DataFrame,
-    spark: SparkSession | None = None,
-    threshold: float = MERGE_THRESHOLD,
+    mentions: DataFrame, spark: SparkSession | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Canonicalization stages 1–6 WITHOUT the provenance attach.
     Returns (entities, resolution, provenance_pairs) where entities and
@@ -374,7 +364,7 @@ def canonicalize_core(
     table to :func:`attach_provenance_sample`. This is the pipeline's
     path: a table commit, not a 10⁷-row localCheckpoint."""
     forms = surface_forms(mentions).localCheckpoint(eager=True)
-    edges = verify_pairs(candidate_pairs_lsh(forms), threshold)
+    edges = verify_pairs(candidate_pairs_lsh(forms))
     labels = connected_components(forms, edges)
     # Everything below is vocabulary-sized: checkpoint eagerly so the
     # applyInArrow fold DAG runs exactly once, not once per consumer.
@@ -383,23 +373,3 @@ def canonicalize_core(
     provenance = entity_provenance(mentions, resolution)
     return entities, resolution, provenance
 
-
-def canonicalize(
-    mentions: DataFrame,
-    spark: SparkSession | None = None,
-    threshold: float = MERGE_THRESHOLD,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full canonicalization. Returns (entities, resolution, provenance)
-    with n_sources + the bounded source_urls sample already attached.
-
-    Convenience wrapper over :func:`canonicalize_core` that cuts the
-    provenance pairs with a localCheckpoint (fine for tests and
-    interactive use; the pipeline commits them as a table instead)."""
-    entities, resolution, provenance = canonicalize_core(
-        mentions, spark, threshold
-    )
-    provenance = provenance.localCheckpoint(eager=True)
-    # no checkpoint on the final attach: both inputs are already cut,
-    # so re-running it per consumer is one vocabulary-sized join
-    entities = attach_provenance_sample(entities, provenance)
-    return entities, resolution, provenance

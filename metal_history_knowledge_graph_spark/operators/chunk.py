@@ -1,10 +1,11 @@
 """pages → chunks: the deterministic HTML→text→chunks operator.
 
-Narrow (no shuffle): one ``mapInPandas`` pass per page partition.
+Narrow (no shuffle): one ``mapInArrow`` pass per page partition, plain
+Python lists in and out of each Arrow batch (no pandas conversion).
 Replaces the reference's driver-side split loop
-(``src/utils/text_splitter.py:301-323``) with per-partition vectorized
-batches; the per-url output is byte-identical to the reference chunker
-semantics (golden-tested in tests/test_chunker.py).
+(``src/utils/text_splitter.py:301-323``) with per-partition batches; the
+per-url output is byte-identical to the reference chunker semantics
+(golden-tested in tests/test_chunker.py).
 
 Chunk ids are ``{url}_{chunk_index:04d}`` (``text_splitter.py:124``) —
 deterministic, so re-runs and resumes reproduce identical ids.
@@ -14,13 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..functions.chunker import (
-    DEFAULT_CHUNK_SIZE,
-    DEFAULT_MIN_CHUNK,
-    DEFAULT_OVERLAP,
-    split_text,
-)
+from ..functions.chunker import split_text
 from ..functions.html_text import html_to_text
+from ..session import arrow_schema
 
 CHUNKS_SCHEMA = (
     "id string, url string, chunk_index int, text string, "
@@ -30,38 +27,25 @@ CHUNKS_SCHEMA = (
 )
 
 
-def chunk_pages(
-    pages: DataFrame,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-    min_chunk: int = DEFAULT_MIN_CHUNK,
-    use_html: bool = True,
-) -> DataFrame:
-    """Chunk every page. When ``use_html`` the text is re-extracted from
-    the html column and ``text_matches_crawl`` records the byte-identity
-    invariant per url (aggregated into stage metrics downstream)."""
-    import pandas as pd
-
-    cols = ["url", "html", "text"] if use_html else ["url", "text"]
+def chunk_pages(pages: DataFrame) -> DataFrame:
+    """Chunk every page from the text re-extracted from its html, with
+    the default chunker sizes; ``text_matches_crawl`` records the
+    byte-identity invariant per url (the crawl's ``text`` equals the
+    re-extraction), aggregated into stage metrics downstream."""
+    schema = arrow_schema(CHUNKS_SCHEMA)
 
     def run(batches):
-        for pdf in batches:
+        import pyarrow as pa
+
+        for batch in batches:
+            cols = batch.to_pydict()
             rows = []
-            for rec in pdf.itertuples(index=False):
-                if use_html:
-                    text = html_to_text(rec.html)
-                    matches = text == rec.text
-                else:
-                    text, matches = rec.text, True
-                for c in split_text(text, rec.url, chunk_size, overlap, min_chunk):
+            for url, html, crawl in zip(cols["url"], cols["html"], cols["text"]):
+                text = html_to_text(html)
+                matches = text == crawl
+                for c in split_text(text, url):
                     c["text_matches_crawl"] = matches
                     rows.append(c)
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["id", "url", "chunk_index", "text", "start_char", "end_char",
-                         "section_header", "subsection_header", "char_count",
-                         "word_count", "text_matches_crawl"],
-            )
-            yield pdf_out.astype(object).where(pdf_out.notna(), None)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return pages.select(*cols).mapInPandas(run, schema=CHUNKS_SCHEMA)
+    return pages.select("url", "html", "text").mapInArrow(run, CHUNKS_SCHEMA)

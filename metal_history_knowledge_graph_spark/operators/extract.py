@@ -1,6 +1,7 @@
 """chunks → mentions + relationship candidates.
 
-One narrow ``mapInPandas`` pass runs the gazetteer+pattern extractor
+One narrow ``mapInArrow`` pass (plain Python lists in and out of each
+Arrow batch, no pandas conversion) runs the gazetteer+pattern extractor
 (functions/patterns.py — the deterministic stand-in for the reference's
 per-chunk LLM call, ``src/extraction/parallel_extraction.py:33-101``)
 and emits a single union-typed row stream (``kind`` ∈ {mention, rel})
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import arrow_schema
 
 #: typed attribute surface of the ExtractionResult schema
 #: (reference src/extraction/extraction_schemas.py:10-98 + enhanced
@@ -62,25 +65,30 @@ def _order_key(url_col, chunk_idx_col, idx_col):
 
 def extract_chunks(chunks: DataFrame) -> DataFrame:
     """Run extraction once per chunk; returns the union-typed stream."""
-    import pandas as pd
-
     from ..functions.patterns import extract_from_text
 
+    schema = arrow_schema(EXTRACTED_SCHEMA)
+
     def run(batches):
-        for pdf in batches:
+        import pyarrow as pa
+
+        for batch in batches:
+            cols = batch.to_pydict()
             rows = []
-            for rec in pdf.itertuples(index=False):
-                mentions, rels = extract_from_text(rec.text)
+            for cid, url, ci, text in zip(
+                cols["id"], cols["url"], cols["chunk_index"], cols["text"]
+            ):
+                mentions, rels = extract_from_text(text)
                 for m in mentions:
                     # the mention dict's keys are column names; the
-                    # DataFrame keeps only `cols` and fills absent ones
-                    rows.append({**m, "kind": "mention", "chunk_id": rec.id,
-                                 "url": rec.url, "chunk_index": rec.chunk_index,
+                    # batch keeps only the schema's and nulls absent ones
+                    rows.append({**m, "kind": "mention", "chunk_id": cid,
+                                 "url": url, "chunk_index": ci,
                                  "idx": m["mention_index"]})
                 for i, r in enumerate(rels):
                     rows.append(dict(
-                        kind="rel", chunk_id=rec.id, url=rec.url,
-                        chunk_index=rec.chunk_index, idx=i,
+                        kind="rel", chunk_id=cid, url=url,
+                        chunk_index=ci, idx=i,
                         rel_type=r["type"],
                         from_entity_type=r["from_entity_type"],
                         from_entity_name=r["from_entity_name"],
@@ -89,18 +97,10 @@ def extract_chunks(chunks: DataFrame) -> DataFrame:
                         rel_year=r.get("year"), rel_role=r.get("role"),
                         rel_context=r.get("context"),
                     ))
-            cols = ["kind", "chunk_id", "url", "chunk_index", "idx",
-                    "entity_type", "name", "linked_name", "confidence", *_ATTR_NAMES,
-                    "rel_type", "from_entity_type", "from_entity_name",
-                    "to_entity_type", "to_entity_name", "rel_year",
-                    "rel_role", "rel_context"]
-            pdf_out = pd.DataFrame(rows, columns=cols)
-            # Missing keys become NaN; Arrow needs real None (a NaN in
-            # an array<...> column is not iterable).
-            yield pdf_out.astype(object).where(pdf_out.notna(), None)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return chunks.select("id", "url", "chunk_index", "text").mapInPandas(
-        run, schema=EXTRACTED_SCHEMA
+    return chunks.select("id", "url", "chunk_index", "text").mapInArrow(
+        run, EXTRACTED_SCHEMA
     )
 
 

@@ -13,10 +13,13 @@ already committed); an incremental run anti-joins new pages against
 the processed-urls record. All writes go through TableStore, so on
 Iceberg each commit is a snapshot — exact resume falls out.
 
-The partition-lineage table is the audit unit: one row per committed
+The ``file_lineage`` table is the audit unit: one row per committed
 data file with its row count and key range. Those numbers come from
 the commit's own metadata (``TableStore.files``: parquet footers,
-Iceberg manifests), so recording them never rescans the table.
+Iceberg manifests), so recording them never rescans the table. (Stores
+written before this schema keep their per-partition rows in a separate
+``partition_lineage`` table, which is left as it is: one parquet dir
+holding both shapes would read back with one file's schema.)
 """
 
 from __future__ import annotations
@@ -66,8 +69,8 @@ def commit_stage(
     store.append(local_frame(store.spark, [row], LINEAGE_SCHEMA), LINEAGE_TABLE)
 
 
-PARTITION_LINEAGE_TABLE = "partition_lineage"
-PARTITION_LINEAGE_SCHEMA = (
+FILE_LINEAGE_TABLE = "file_lineage"
+FILE_LINEAGE_SCHEMA = (
     "run_id string, stage string, file string, row_count long, "
     "key_min string, key_max string"
 )
@@ -76,15 +79,14 @@ PARTITION_LINEAGE_SCHEMA = (
 def commit_partition_lineage(
     store: TableStore, name: str, run_id: str, stage: str, key_col: str
 ) -> tuple[int, int]:
-    """Append one lineage row per committed data file of table ``name``
-    (row count and ``key_col`` range, north rule: the audit/resume unit
-    at scale) and return ``(total_rows, n_files)``. The numbers come
+    """Append one ``file_lineage`` row per committed data file of table
+    ``name`` (row count and ``key_col`` range, north rule: the
+    audit/resume unit at scale) and return ``(total_rows, n_files)``. The numbers come
     from the file metadata (:meth:`TableStore.files`), so the commit
     starts one Spark job — the append — and never scans the table."""
     files = store.files(name, key_col)
     rows = [(run_id, stage, f, n, lo, hi) for f, n, lo, hi in files]
-    store.append(local_frame(store.spark, rows, PARTITION_LINEAGE_SCHEMA),
-                 PARTITION_LINEAGE_TABLE)
+    store.append(local_frame(store.spark, rows, FILE_LINEAGE_SCHEMA), FILE_LINEAGE_TABLE)
     return sum(n for _, n, _, _ in files), len(files)
 
 
@@ -122,13 +124,3 @@ def optimize_store(
             reports[small] = store.compact(small, target_file_bytes)
     return reports
 
-
-def verify_counts(store: TableStore) -> DataFrame:
-    """Post-load verification counts (load_to_kuzu.py:863-907)."""
-    ents = store.read("entities").groupBy("entity_type").agg(
-        F.count(F.lit(1)).alias("n")
-    ).withColumn("table", F.lit("entities"))
-    edges = store.read("edges").groupBy(F.col("pred").alias("entity_type")).agg(
-        F.count(F.lit(1)).alias("n")
-    ).withColumn("table", F.lit("edges"))
-    return ents.unionByName(edges)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.plan_hints import drop_pin, hash_agg_pin
+from .canonicalize import provenance_pools
 
 #: base whitelist, load_to_kuzu.py:813-821.
 BASE_PREDICATES = [
@@ -67,8 +68,6 @@ SINGULAR_TO_PLURAL = {
     "characteristic": "characteristics",
     "viral_phenomenon": "viral_phenomena",
 }
-
-PROVENANCE_SAMPLE = 100
 
 
 def infer_relationships(entities: DataFrame) -> DataFrame:
@@ -158,37 +157,37 @@ def _keep_first(df: DataFrame, key: str) -> DataFrame:
     window: struct-min partial-aggregates map-side, so a hot fact
     observed in millions of pages collapses inside each input partition
     instead of funnelling through one window sorter."""
-    others = [c for c in df.columns if c != key]
+    rest = [c for c in df.columns if c not in (key, "order_key")]
     agg = df.groupBy(key).agg(
-        F.min(F.struct("order_key", *[c for c in others if c != "order_key"])).alias("_r"),
+        F.min(F.struct("order_key", *rest)).alias("_r"),
         # keeps the agg hash-based; min-over-struct alone would sort
         # every input partition (functions/plan_hints.py)
         hash_agg_pin().alias("_h"),
     )
-    return drop_pin(agg).select(key, "_r.order_key",
-                                *[F.col(f"_r.{c}") for c in others if c != "order_key"])
+    return drop_pin(agg).select(key, "_r.order_key", *[F.col(f"_r.{c}") for c in rest])
+
+
+def _with_rel_hash(rels: DataFrame) -> DataFrame:
+    """The surface-level fact key ``rel_hash = md5(pred|from_type|
+    lower(from)|to_type|lower(to))``."""
+    return rels.withColumn("rel_hash", F.md5(F.concat_ws(
+        "|", F.col("pred"), F.col("from_entity_type"),
+        F.lower(F.col("from_entity_name")), F.col("to_entity_type"),
+        F.lower(F.col("to_entity_name")),
+    )))
 
 
 def dedup_relationships(rels: DataFrame) -> DataFrame:
     """md5 canonical-key dedup, first occurrence wins (pinned order)."""
-    rel_hash = F.md5(
-        F.concat_ws(
-            "|",
-            F.col("pred"),
-            F.col("from_entity_type"),
-            F.lower(F.col("from_entity_name")),
-            F.col("to_entity_type"),
-            F.lower(F.col("to_entity_name")),
-        )
-    )
-    return _keep_first(rels.withColumn("rel_hash", rel_hash), "rel_hash")
+    return _keep_first(_with_rel_hash(rels), "rel_hash")
 
 
 def resolve_triples(rels: DataFrame, resolution: DataFrame) -> DataFrame:
     """Name → canonical id resolution via two broadcast joins
     (subject, object). Unresolved endpoints are dropped (the reference
-    skips relationships whose entities are unknown) — count them via
-    ``resolution_stats`` for the metrics checkpoint."""
+    skips relationships whose entities are unknown) — endpoints that do
+    not resolve come back with null ids, and :func:`build_triples` drops
+    those rows."""
     singular_map = F.create_map(
         *[F.lit(x) for kv in SINGULAR_TO_PLURAL.items() for x in kv]
     )
@@ -241,31 +240,16 @@ def build_triples(
         "rel_year", "rel_role", "rel_context", "order_key", "url",
     )
     candidates = explicit.unionByName(infer_relationships(entities))
-    hashed = normalize_predicates(candidates).withColumn(
-        "rel_hash",
-        F.md5(F.concat_ws(
-            "|", F.col("pred"), F.col("from_entity_type"),
-            F.lower(F.col("from_entity_name")), F.col("to_entity_type"),
-            F.lower(F.col("to_entity_name")),
-        )),
-    )
+    hashed = _with_rel_hash(normalize_predicates(candidates))
 
-    # First-occurrence dedup as ONE mention-scale HashAggregate:
-    # min(struct) picks the representative row in the pinned total
-    # order (identical to dedup_relationships), partial-aggregating
-    # map-side so a fact observed in millions of pages collapses inside
-    # each input partition. Provenance deliberately does NOT ride along
-    # as a collect_set here: pooling urls into per-fact arrays hauls a
-    # hot fact's millions of urls into one row (and degrades the whole
-    # aggregation from codegen HashAggregate to ObjectHashAggregate);
-    # it lives in its own narrow pair table below instead.
-    keep_cols = [c for c in hashed.columns if c not in ("rel_hash", "order_key")]
-    per_fact = drop_pin(
-        hashed.groupBy("rel_hash")
-        .agg(F.min(F.struct("order_key", *keep_cols)).alias("_r"),
-             hash_agg_pin().alias("_h"))
-    ).select("rel_hash", "_r.order_key",
-             *[F.col(f"_r.{c}") for c in keep_cols])
+    # First-occurrence dedup as ONE mention-scale HashAggregate
+    # (:func:`dedup_relationships`' own key and keep-first rule).
+    # Provenance deliberately does NOT ride along as a collect_set here:
+    # pooling urls into per-fact arrays hauls a hot fact's millions of
+    # urls into one row (and degrades the whole aggregation from codegen
+    # HashAggregate to ObjectHashAggregate); it lives in its own narrow
+    # pair table below instead.
+    per_fact = _keep_first(hashed, "rel_hash")
 
     resolved = resolve_triples(per_fact, resolution)
     complete = resolved.filter(
@@ -284,15 +268,9 @@ def build_triples(
         # checkpoint / intermediate table commit.
     ).localCheckpoint(eager=True)
 
-    # Vocabulary-sized: representative per canonical edge (same pinned
-    # min-struct order as before).
-    rep_cols = [c for c in complete.columns if c not in ("edge_key", "order_key")]
-    rep = (
-        complete.groupBy("edge_key")
-        .agg(F.min(F.struct("order_key", *rep_cols)).alias("_r"))
-        .select("edge_key", "_r.order_key",
-                *[F.col(f"_r.{c}") for c in rep_cols])
-    )
+    # Vocabulary-sized: representative per canonical edge (the same
+    # first-wins rule in the pinned order).
+    rep = _keep_first(complete, "edge_key")
 
     # Provenance pair path: a second, column-pruned mention pass —
     # (rel_hash, url) distinct (partial agg dedups hot facts map-side),
@@ -318,23 +296,13 @@ def build_triples(
 
 
 def finalize_edges(rep: DataFrame, prov_pairs: DataFrame) -> DataFrame:
-    """Attach exact ``n_sources`` + bounded sorted url sample to the
-    canonical-edge representatives. ``prov_pairs`` should be the
-    COMMITTED (edge_key, url) table from :func:`build_triples` so the
-    pool aggregation is a cheap two-column scan of parquet, not a
-    re-run of the mention-scale lineage. The full sorted array exists
-    only transiently inside this vocabulary-keyed aggregation;
-    hash-subsample the pairs first if a single edge's url set ever
-    outgrows executor memory."""
-    pools = (
-        prov_pairs.groupBy("edge_key")
-        .agg(F.array_sort(F.collect_list("url")).alias("_urls"))
-        .select(
-            "edge_key",
-            F.size("_urls").alias("n_sources"),
-            F.slice("_urls", 1, PROVENANCE_SAMPLE).alias("provenance"),
-        )
-    )
+    """Attach exact ``n_sources`` + bounded sorted url sample
+    (:func:`canonicalize.provenance_pools`) to the canonical-edge
+    representatives. ``prov_pairs`` should be the COMMITTED
+    (edge_key, url) table from :func:`build_triples` so the pool
+    aggregation is a cheap two-column scan of parquet, not a re-run of
+    the mention-scale lineage."""
+    pools = provenance_pools(prov_pairs, "edge_key", "provenance")
     return rep.join(pools, "edge_key", "left").select(
         "edge_key", "rel_hash",
         "subj_id", F.col("subj_etype").alias("subj_type"), "subj_name",
@@ -353,11 +321,3 @@ def finalize_edges(rep: DataFrame, prov_pairs: DataFrame) -> DataFrame:
         "provenance",
     )
 
-
-def resolution_stats(resolved: DataFrame) -> DataFrame:
-    """Unresolved-endpoint counts per predicate (metrics checkpoint)."""
-    return resolved.groupBy("pred").agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(F.when(F.col("subj_id").isNull(), 1).otherwise(0)).alias("unresolved_subj"),
-        F.sum(F.when(F.col("obj_id").isNull(), 1).otherwise(0)).alias("unresolved_obj"),
-    )

@@ -1,8 +1,8 @@
 """SparkSession factory with the configuration this engine assumes.
 
 Tuned for correctness-at-scale defaults: AQE on (runtime re-planning +
-skew-join splitting), Arrow on (every UDF in this engine is pandas/Arrow
-batched), explicit shuffle partitioning.
+skew-join splitting), Arrow on (every write-path UDF takes and returns
+Arrow batches), explicit shuffle partitioning.
 
 On a real cluster these confs ride along unchanged via
 ``spark-submit --py-files``; only master/executor sizing differs.
@@ -23,8 +23,9 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Every UDF in the engine is a pandas UDF / mapInPandas — Arrow is
-    # the data plane between JVM and Python.
+    # Arrow is the data plane between JVM and Python: the write path's
+    # UDFs are mapInArrow / applyInArrow / arrow_udf, and driver-side
+    # rows cross as Arrow tables (local_frame).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     # Dimension tables (alias dict, canonical-name map, predicate
@@ -73,18 +74,26 @@ def driver_heap_gb() -> int:
     return max(2, min(8, total // (4 << 30)))
 
 
+def arrow_schema(ddl: str):
+    """Arrow schema of a DDL string, built on the driver (the parse
+    needs the JVM) and shipped to the workers inside a UDF closure."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     """A DataFrame of driver-side ``rows`` (tuples in ``ddl`` column
-    order). Built from pandas, the rows cross as Arrow into a
-    LocalRelation; a Python list would become a Python RDD and start
-    worker tasks."""
-    import pandas as pd
+    order). Built as an Arrow table, column by column, the rows cross
+    into a LocalRelation (also when there are none); a Python list
+    would become a Python RDD and start worker tasks."""
+    import pyarrow as pa
 
-    schema = StructType.fromDDL(ddl)
-    # empty rows would take a Python RDD; a null row cut to 0 plans as an empty LocalRelation
-    pdf = pd.DataFrame(rows or [(None,) * len(schema)], columns=schema.names)
-    df = spark.createDataFrame(pdf, schema)
-    return df if rows else df.limit(0)
+    schema = arrow_schema(ddl)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema)
+    return spark.createDataFrame(table, ddl)
 
 
 def get_spark(

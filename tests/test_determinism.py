@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metal_history_knowledge_graph_spark.io import TableStore
-from metal_history_knowledge_graph_spark.operators.canonicalize import canonicalize
+from metal_history_knowledge_graph_spark.operators.canonicalize import canonicalize_core
 from metal_history_knowledge_graph_spark.operators.chunk import chunk_pages
 from metal_history_knowledge_graph_spark.operators.extract import (
     extract_chunks,
@@ -61,7 +61,7 @@ def test_partition_invariance(spark):
     mentions = mentions_of(extracted)
 
     def canon_set(m):
-        ents, _, _ = canonicalize(m, spark)
+        ents, _, _ = canonicalize_core(m, spark)
         return {
             (r.entity_type, r.canonical_name, r.attrs_json,
              tuple(sorted(r.variations)), r.n_mentions)

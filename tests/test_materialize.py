@@ -9,8 +9,8 @@ import pytest
 from metal_history_knowledge_graph_spark.operators.canonicalize import connected_components
 from metal_history_knowledge_graph_spark.operators.embeddings import embed_texts_df
 from metal_history_knowledge_graph_spark.operators.materialize import (
+    FILE_LINEAGE_TABLE,
     LINEAGE_TABLE,
-    PARTITION_LINEAGE_TABLE,
     commit_partition_lineage,
     commit_stage,
     stage_complete,
@@ -110,7 +110,7 @@ def test_partition_lineage_commit_starts_one_job(spark, store, jobs_started):
         lambda: commit_partition_lineage(store, "t", "r1", "t", "k"))
     assert jobs == 1  # the append; the footers are read on the driver
     assert (rows, n_files) == (12, len(files))
-    recs = store.read(PARTITION_LINEAGE_TABLE).collect()
+    recs = store.read(FILE_LINEAGE_TABLE).collect()
     assert sorted((r.file, r.row_count, r.key_min, r.key_max) for r in recs) == sorted(files)
     assert {(r.run_id, r.stage) for r in recs} == {("r1", "t")}
     assert min(r.key_min for r in recs) == "k00"

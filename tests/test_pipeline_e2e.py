@@ -143,7 +143,7 @@ def test_partition_lineage_all_stages(spark, tmp_path):
 
     store = TableStore(spark, str(tmp_path / "plstore"))
     metrics = run(spark, generate_pages(spark, 25, seed=21), store, run_id="pl")
-    pl = store.read("partition_lineage").collect()
+    pl = store.read("file_lineage").collect()
     stage_rows = {r.stage: r for r in store.read("lineage").collect()}
     keys = {"chunks": "url", "extracted": "url", "entities": "canonical_name",
             "edges": "edge_key"}
@@ -164,6 +164,27 @@ def test_partition_lineage_all_stages(spark, tmp_path):
         assert stage_rows[stage].metrics["files"] == len(files)
     # the byte-identity count rides on the chunks write: zero violations
     assert stage_rows["chunks"].metrics["text_mismatch_urls"] == 0
+
+
+def test_file_lineage_beside_old_partition_lineage(spark, tmp_path):
+    """A store whose ``partition_lineage`` table holds the older
+    per-partition rows keeps that table as it is, and a run writes its
+    per-file rows to ``file_lineage``, every one with its file."""
+    from metal_history_knowledge_graph_spark.io import TableStore
+
+    store = TableStore(spark, str(tmp_path / "oldstore"))
+    old = spark.createDataFrame(
+        [(0, "a", "z", 7, 3, 0, "old", "chunks")],
+        "partition_id int, key_min string, key_max string, row_count long, "
+        "n_keys long, n_mismatch long, run_id string, stage string")
+    store.write(old, "partition_lineage")
+    run(spark, generate_pages(spark, 6, seed=5), store, run_id="new",
+        until_stage="chunks")
+    recs = store.read("file_lineage").collect()
+    assert recs and all(r.file is not None for r in recs)
+    assert {(r.run_id, r.stage) for r in recs} == {("new", "chunks")}
+    assert TableStore(spark, store.root).read("partition_lineage").collect() == [
+        (0, "a", "z", 7, 3, 0, "old", "chunks")]
 
 
 def test_text_mismatch_counted(spark, tmp_path):
