@@ -6,6 +6,14 @@
   union-find on the collected pair list when it fits (pair graphs and
   graphs of canonical entities are vocabulary-sized); iterative
   min-label propagation otherwise.
+* the rank family — :func:`pagerank` (cold, :func:`pagerank_resume`,
+  :func:`pagerank_personalized`, :func:`pagerank_weighted`),
+  :func:`katz`, :func:`hits` and :func:`salsa` in fixed-point BIGINT
+  arithmetic: one loop-free directed edge set (``_directed_edges``),
+  one scale guard (``_unit``), one damped loop ``v' = teleport +
+  (pct · Σ contrib) div 100`` (``_damped``) and one hub/authority
+  half-step loop (``_hubs_authorities``), so every trajectory replays
+  bit-exactly as chained SQL CTEs.
 * sampled betweenness — BFS shortest paths from a deterministic sample
   of sources, node frequency across path interior
   (graph_metrics.py:256-287).
@@ -15,7 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -29,6 +37,17 @@ def _undirected_pairs(edges: DataFrame):
         edges.select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
+    )
+
+
+def _symmetric_pairs(edges: DataFrame) -> DataFrame:
+    """(a, b) both ways round for every undirected edge: the symmetric
+    simple graph, checkpointed."""
+    und = _undirected_pairs(edges)
+    return (
+        und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
 
 
@@ -140,22 +159,128 @@ def component_sizes(edges: DataFrame) -> DataFrame:
     )
 
 
+# --- rank family: PageRank (cold, resumed, personalized, weighted), Katz,
+# HITS and SALSA on one edge set, one scale guard and two loops ------------
+
 PAGERANK_SCALE = 10**12  # fixed-point unit: 1.0 rank mass = 10^12
+HITS_SCALE = 10**9  # fixed-point unit for hub/authority mass and Katz's β
+DAMPING_PCT = 85  # PageRank's damping d, in percent
+KATZ_ALPHA_PCT = 20  # Katz's attenuation α, in percent
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
+def _directed_edges(edges: DataFrame, weighted: bool = False) -> DataFrame:
+    """(src, dst, w) for the distinct ``subj_id → obj_id`` pairs with
+    src != dst, checkpointed once. ``w`` is 1, or with ``weighted`` the
+    sum of the pair's ``weight`` values; a null or non-positive weight
+    raises (corrupt input, not a convention)."""
+    cols = [F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")]
+    if not weighted:
+        e = edges.select(*cols).filter(F.col("src") != F.col("dst")).distinct()
+        return e.withColumn("w", F.lit(1)).localCheckpoint(eager=True)
+    e = edges.select(*cols, F.col("weight").cast("long").alias("w")) \
+        .filter(F.col("src") != F.col("dst"))
+    # isNull() must be explicit: NULL <= 0 is NULL, so a bare w <= 0
+    # filter would let NULL-weight edges silently vanish from the sums
+    if e.filter(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count():
+        raise ValueError("pagerank_weighted: null/non-positive weights — corrupt input")
+    return e.groupBy("src", "dst").agg(F.sum("w").alias("w")).localCheckpoint(eager=True)
+
+
+def _node_set(e: DataFrame, extra: DataFrame | None = None) -> DataFrame:
+    """(node): every endpoint of ``e``, plus the ``node`` rows of ``extra``."""
+    nodes = e.select(F.col("src").alias("node")).unionByName(e.select(F.col("dst").alias("node")))
+    if extra is not None:
+        nodes = nodes.unionByName(extra)
+    return nodes.distinct().localCheckpoint(eager=True)
+
+
+def _unit(name: str, scale: int, n: int) -> int:
+    """``scale div n``, the start mass of each of ``n`` nodes. Raises
+    when it is 0: every score would start, and stay, 0 with no error."""
+    if scale // n == 0:
+        raise ValueError(f"{name}: {n} nodes exceed the fixed-point scale {scale}")
+    return scale // n
+
+
+def _empty(edges: DataFrame, *cols: str) -> DataFrame:
+    """The 0-row result (node_id, *cols): node_id of ``subj_id``'s type,
+    each of ``cols`` long."""
+    node_type = edges.schema["subj_id"].dataType.simpleString()
+    ddl = ", ".join([f"node_id {node_type}", *(f"{c} long" for c in cols)])
+    return local_frame(edges.sparkSession, [], ddl)
+
+
+def _hop(e: DataFrame, x: DataFrame, frm: str, to: str, contrib: str) -> DataFrame:
+    """(node, s): Σ ``contrib`` (SQL over the columns of ``e`` and of
+    the score table ``x`` (node, v)) over the edges whose ``frm`` end
+    holds a score, grouped by their ``to`` end — one node-keyed join
+    and one partial-agg groupBy."""
+    return (
+        e.join(x.withColumnRenamed("node", frm), frm)
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum(F.expr(contrib)).alias("s"))
+    )
+
+
+def _damped(
+    e: DataFrame, nodes: DataFrame, x: DataFrame, n_iters: int, pct: int,
+    teleport: Column, contrib: str, out: str,
 ) -> DataFrame:
-    """Deterministic PageRank over the directed edge table
-    (subj_id → obj_id), in fixed-point integer arithmetic.
+    """``n_iters`` rounds of ``v'(v) = teleport + (pct · Σ_{u→v}
+    contrib) div 100`` from the score table ``x`` (node, v), each round
+    one :func:`_hop` and a ``localCheckpoint`` that cuts the lineage;
+    ``teleport`` is a Column over ``nodes``. Returns (node_id, ``out``)."""
+    for _ in range(n_iters):
+        s = _hop(e, x, "src", "dst", contrib)
+        x = nodes.join(s, "node", "left").select(
+            "node",
+            (teleport + F.expr(f"({pct} * coalesce(s, 0L)) div 100")).cast("long").alias("v"),
+        ).localCheckpoint(eager=True)
+    return x.select(F.col("node").alias("node_id"), F.col("v").alias(out))
 
-    All rank mass is a BIGINT multiple of 1/``scale``; every divide is
-    an integer floor-divide, so the trajectory is bit-identical on any
-    engine and any partitioning — no float summation-order noise. The
-    update (simplified variant: dangling mass is dropped, documented):
+
+def _pagerank(
+    e: DataFrame, nodes: DataFrame, ranks: DataFrame, n_iters: int, teleport: Column,
+) -> DataFrame:
+    """PageRank's damped loop: a node's rank splits over its out-edges
+    in proportion to ``w`` — ``(v div W)·w`` with W = Σ w out of the
+    node, which is ``v div outdeg`` when every w is 1."""
+    e = e.join(e.groupBy("src").agg(F.sum("w").alias("wtot")), "src")
+    return _damped(e, nodes, ranks, n_iters, DAMPING_PCT, teleport,
+                   "(v div wtot) * w", "rank_fixed")
+
+
+def _teleport(n: int) -> int:
+    return ((100 - DAMPING_PCT) * PAGERANK_SCALE) // (100 * n)
+
+
+def _global_pagerank(edges: DataFrame, n_iters: int, weighted: bool = False,
+                     prev: DataFrame | None = None) -> DataFrame:
+    """PageRank with uniform teleport, from ``PAGERANK_SCALE div N`` per
+    node or, where it has a row, from ``prev`` (node_id, rank_fixed)."""
+    e = _directed_edges(edges, weighted)
+    nodes = _node_set(e)
+    n = nodes.count()
+    if n == 0:
+        return _empty(edges, "rank_fixed")
+    start, ranks = F.lit(_unit("pagerank", PAGERANK_SCALE, n)), nodes
+    if prev is not None:
+        prev = prev.select(F.col("node_id").alias("node"), F.col("rank_fixed").alias("_prev"))
+        start, ranks = F.coalesce("_prev", start), nodes.join(prev, "node", "left")
+    ranks = ranks.select("node", start.cast("long").alias("v"))
+    return _pagerank(e, nodes, ranks, n_iters, F.lit(_teleport(n)))
+
+
+def pagerank(edges: DataFrame, n_iters: int = 5) -> DataFrame:
+    """Deterministic PageRank over the directed edge table
+    (subj_id → obj_id), in fixed-point integer arithmetic:
+    (node_id, rank_fixed).
+
+    All rank mass is a BIGINT multiple of 1/``PAGERANK_SCALE``; every
+    divide is an integer floor-divide, so the trajectory is
+    bit-identical on any engine and any partitioning — no float
+    summation-order noise. The update (simplified variant: dangling
+    mass is dropped, documented), with d = ``DAMPING_PCT``:
 
         r0(v)      = scale div N
         r_{k+1}(v) = ((100-d)·scale) div (100·N)
@@ -172,81 +297,10 @@ def pagerank(
     (scripts/analysis/graph_metrics.py) — expressed as an iterative
     relational plan instead of a NetworkX call.
     """
-    e = (
-        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return edges.sparkSession.createDataFrame([], "node_id long, rank_fixed long")
-    if scale // n == 0:
-        # more nodes than fixed-point units → silent all-zero ranks
-        # (the salsa/hits guard, ADVICE r4 #4)
-        raise ValueError(
-            f"pagerank: scale={scale} < n_nodes={n}; raise `scale`"
-        )
-    ranks = nodes.withColumn("rank_fixed", F.lit(scale // n).cast("long"))
-    ranks = _pr_iterate(e, nodes, ranks, n, n_iters, damping_pct, scale)
-    return ranks.select(F.col("node").alias("node_id"), "rank_fixed")
+    return _global_pagerank(edges, n_iters)
 
 
-def _pr_iterate(
-    e: DataFrame,
-    nodes: DataFrame,
-    ranks: DataFrame,
-    n: int,
-    n_iters: int,
-    damping_pct: int,
-    scale: int,
-) -> DataFrame:
-    """The shared PageRank power-iteration loop: (node, rank_fixed) →
-    n_iters fixed-point BIGINT updates over edge table ``e``. Extracted
-    so :func:`pagerank_resume` warm-starts the identical arithmetic
-    (the cold-start oracle trajectory stays byte-identical)."""
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    teleport = ((100 - damping_pct) * scale) // (100 * n)
-    for _ in range(n_iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fixed div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(contrib, 0L)) div 100"
-                    )
-                ).cast("long").alias("rank_fixed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
-
-
-def pagerank_resume(
-    edges: DataFrame,
-    prev_ranks: DataFrame,
-    n_iters: int = 2,
-    damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
-) -> DataFrame:
+def pagerank_resume(edges: DataFrame, prev_ranks: DataFrame, n_iters: int = 2) -> DataFrame:
     """Incremental PageRank maintenance: re-rank the UPDATED edge
     table warm-started from a previous run's ``(node_id, rank_fixed)``
     output instead of the uniform vector — the nightly-crawl path
@@ -257,50 +311,216 @@ def pagerank_resume(
 
     Nodes absent from ``prev_ranks`` (newly discovered hosts) start at
     ``scale div N_new`` — the same mass a cold start would give them;
-    departed nodes' stale rows are dropped by the inner join onto the
+    departed nodes' stale rows are dropped by the left join onto the
     current node set. Prev mass is deliberately NOT renormalized: the
     operator's contract is the exact fixed-point trajectory from the
     given start vector (that determinism is what the DuckDB oracle
     replays), and the teleport term re-injects (1−d) of the mass each
     hop so any normalization drift decays geometrically anyway.
 
-    Scale shape: identical per-iteration cost to :func:`pagerank`
-    (one src-keyed join + one dst-keyed partial agg), but typically
-    run for 2–3 iterations instead of 15–20 — the warm start is the
-    whole point. The prev table joins node-keyed (never broadcast —
-    it is node-sized).
+    Scale shape: identical per-iteration cost to :func:`pagerank`,
+    but typically run for 2–3 iterations instead of 15–20 — the warm
+    start is the whole point. The prev table joins node-keyed (never
+    broadcast — it is node-sized).
     """
-    e = (
-        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return _global_pagerank(edges, n_iters, prev=prev_ranks)
+
+
+def pagerank_weighted(edges: DataFrame, n_iters: int = 5) -> DataFrame:
+    """Edge-weighted PageRank over (subj_id, obj_id, weight): a node's
+    rank splits over its out-edges PROPORTIONAL to edge weight instead
+    of equally — the host-graph variant where ``n_links`` counts
+    matter (a host that links a target 10,000 times endorses it more
+    than a one-off footnote). Duplicate pairs sum their weights.
+
+    Update (all BIGINT floor-divides):
+
+        share(u→v) = (r_k(u) div W(u)) · w(u,v)     W(u) = Σ_out w
+        r_{k+1}(v) = ((100−d)·scale) div (100·N)
+                     + (d · Σ share) div 100
+
+    The per-unit-weight quotient ``r div W`` is computed FIRST, then
+    multiplied by w, so share ≤ r ≤ scale = 10^12 and no product
+    overflows; the price is the floor happening per-edge-weight-unit
+    (weights are link counts; the sub-1/W mass dropped per edge
+    mirrors the unweighted variant's dangling-mass drop). Unit weights
+    give :func:`pagerank` bit for bit. Zero, negative or null weights
+    raise."""
+    return _global_pagerank(edges, n_iters, weighted=True)
+
+
+def pagerank_personalized(edges: DataFrame, seeds: DataFrame, n_iters: int = 5) -> DataFrame:
+    """Personalized (topic-sensitive) PageRank: teleport mass returns
+    ONLY to the ``seeds`` node set, so rank measures proximity to the
+    seeds — the focused-crawl scorer (seed the hosts you trust, rank
+    every host by how reachable it is from them) and the related-entity
+    ranker the global pagerank cannot express.
+
+    Same fixed-point BIGINT trajectory as :func:`pagerank` (floor
+    divides, dangling mass dropped), with the teleport term gated to
+    seeds:
+
+        r0(v)      = [v ∈ S] · (scale div |S|)
+        r_{k+1}(v) = [v ∈ S] · ((100−d)·scale) div (100·|S|)
+                     + (d · Σ_{u→v} (r_k(u) div outdeg(u))) div 100
+
+    Non-seed nodes unreachable from S stay exactly 0 — a focused
+    crawl must not spend budget there, and the oracle checks the
+    zeros too. Seeds are vocabulary-sized (broadcast join).
+
+    ``seeds`` carries one column ``node``; seeds absent from the
+    graph still receive teleport mass (they are real pages — the
+    graph just has no links for them yet), so the result has a row
+    per seed even when the graph has no edge.
+    """
+    e = _directed_edges(edges)
+    seed_nodes = seeds.select("node").distinct().localCheckpoint(eager=True)
+    n_seeds = seed_nodes.count()
+    if n_seeds == 0:
+        raise ValueError("pagerank_personalized: empty seed set")
+    nodes = _node_set(e, seed_nodes).join(
+        F.broadcast(seed_nodes.withColumn("_s", F.lit(1))), "node", "left")
+    is_seed = F.col("_s").isNotNull()
+    unit = _unit("pagerank_personalized", PAGERANK_SCALE, n_seeds)
+    ranks = nodes.select("node", F.when(is_seed, unit).otherwise(0).cast("long").alias("v"))
+    return _pagerank(e, nodes, ranks, n_iters, F.when(is_seed, _teleport(n_seeds)).otherwise(0))
+
+
+def katz(edges: DataFrame, n_iters: int = 6) -> DataFrame:
+    """Katz centrality in fixed-point BIGINT: ``x_{k+1}(v) = β +
+    α·Σ_{u→v} x_k(u)`` with β = ``HITS_SCALE`` and α =
+    ``KATZ_ALPHA_PCT``/100: (node_id, katz_fixed) — the attenuated
+    PATH-COUNT centrality that completes the spectral family (PageRank
+    divides influence across out-links; Katz does not, so a hub
+    endorsing 1,000 pages endorses each at full α-attenuated strength
+    — the right semantics for "how reachable is this host through
+    short link chains", e.g. seed-distance scoring for crawl
+    frontiers).
+
+    The damped loop of :func:`pagerank` with a constant teleport β, α
+    in place of d and no degree divide — the cheapest member of the
+    family; α is applied as a floor-divided percentage so the
+    ``n_iters`` trajectory is a pure integer function of the edge set
+    → chained-CTE replay (q_katz). Convergence needs α < 1/λ_max
+    (≈ 1/max-indegree as the usual bound); with a fixed iteration
+    count the trajectory is exact either way. Values are bounded by
+    β·Σ(α·d_in)^k, far under 2^63 while α·d_in stays small."""
+    e = _directed_edges(edges)
+    nodes = _node_set(e)
+    beta = F.lit(HITS_SCALE)
+    x = nodes.select("node", beta.cast("long").alias("v"))
+    return _damped(e, nodes, x, n_iters, KATZ_ALPHA_PCT, beta, "v", "katz_fixed")
+
+
+def _hubs_authorities(edges: DataFrame, n_iters: int, name: str, step) -> DataFrame:
+    """The two-half-step loop of :func:`hits` and :func:`salsa`:
+    hubs start at ``HITS_SCALE div N``; each iteration
+    ``auths = step(nodes, e, hubs, "src", "dst")`` then
+    ``hubs = step(nodes, e, auths, "dst", "src")``, each checkpointed.
+    Returns (node_id, hub_fixed, auth_fixed)."""
+    e = _directed_edges(edges)
+    nodes = _node_set(e)
     n = nodes.count()
     if n == 0:
-        return edges.sparkSession.createDataFrame([], "node_id long, rank_fixed long")
-    prev = prev_ranks.select(
-        F.col("node_id").alias("node"), F.col("rank_fixed").alias("_prev")
-    )
-    ranks = nodes.join(prev, "node", "left").select(
-        "node",
-        F.coalesce(F.col("_prev"), F.lit(scale // n)).cast("long").alias(
-            "rank_fixed"
-        ),
-    )
-    ranks = _pr_iterate(e, nodes, ranks, n, n_iters, damping_pct, scale)
-    return ranks.select(F.col("node").alias("node_id"), "rank_fixed")
+        return _empty(edges, "hub_fixed", "auth_fixed")
+    hubs = nodes.withColumn("v", F.lit(_unit(name, HITS_SCALE, n)).cast("long"))
+    auths = nodes.withColumn("v", F.lit(0).cast("long"))
+    for _ in range(n_iters):
+        auths = step(nodes, e, hubs, "src", "dst").localCheckpoint(eager=True)
+        hubs = step(nodes, e, auths, "dst", "src").localCheckpoint(eager=True)
+    return hubs.select(F.col("node").alias("node_id"), F.col("v").alias("hub_fixed")).join(
+        auths.select(F.col("node").alias("node_id"), F.col("v").alias("auth_fixed")), "node_id")
+
+
+def hits(edges: DataFrame, n_iters: int = 5) -> DataFrame:
+    """Deterministic HITS (Kleinberg hubs-and-authorities) over the
+    directed edge table, in fixed-point BIGINT arithmetic:
+    (node_id, hub_fixed, auth_fixed) — the second host-authority
+    signal next to :func:`pagerank` (hubs = link directories,
+    authorities = heavily-cited hosts; the pair separates the two
+    roles PageRank conflates).
+
+    Trajectory (exact L1 normalization each half-step, every divide
+    an integer floor-divide, so any engine replays it bit-exactly):
+
+        h0(u)      = scale div N
+        a_raw(v)   = Σ_{u→v} h(u);   a(v) = (a_raw(v)·scale) div ΣA
+        h_raw(u)   = Σ_{u→v} a(v);   h(u) = (h_raw(u)·scale) div ΣH
+
+    Magnitude proof (no BIGINT overflow, ever): after each
+    normalization Σ values ≤ scale, so every raw value ≤ scale and
+    every product value·scale ≤ scale² = 10^18 < 2^63; the
+    normalization totals are Σ_u raw(u) ≤ max_degree·scale, safe for
+    max degree < 9·10^9. This is why ``HITS_SCALE`` is 10^9 and not
+    pagerank's 10^12 — HITS multiplies by the scale during
+    normalization where pagerank only floor-divides.
+
+    Scale shape: per iteration two node-keyed hash joins of the edge
+    table against node-sized score tables and two partial-agg
+    groupBys; the L1 total per half-step is a 1-row aggregate folded
+    back via broadcast cross-join (in-plan — no driver collect on the
+    iteration path); ``localCheckpoint`` per half-step truncates the
+    iterative lineage. Node ids may be any equi-joinable type
+    (BIGINT entity ids or host strings alike).
+
+    Reference analogue: the graph-metrics centrality family
+    (scripts/analysis/graph_metrics.py) — expressed as an iterative
+    relational plan instead of a NetworkX call.
+    """
+    def step(nodes, e, x, frm, to):
+        # the L1 total stays IN-PLAN, a 1-row aggregate cross-joined
+        # back as a broadcast, so a half-step is ONE job rather than a
+        # checkpoint plus a scalar collect; greatest(tot, 1) replays
+        # max(tot, 1). The raw sums are checkpointed because two
+        # consumers (the total and the normalize join) read them.
+        s = _hop(e, x, frm, to, "v").localCheckpoint(eager=True)
+        tot = s.agg(F.coalesce(F.sum("s"), F.lit(0)).alias("_tot"))
+        return nodes.join(s, "node", "left").crossJoin(F.broadcast(tot)).select(
+            "node",
+            F.expr(f"(coalesce(s, 0L) * {HITS_SCALE}L) div greatest(_tot, 1L)")
+            .cast("long").alias("v"),
+        )
+
+    return _hubs_authorities(edges, n_iters, "hits", step)
+
+
+def salsa(edges: DataFrame, n_iters: int = 5) -> DataFrame:
+    """SALSA (Lempel & Moran 2000): hubs-and-authorities as TWO
+    RANDOM WALKS on the bipartite hub/authority view instead of
+    HITS's mutual-reinforcement sums — each contribution is divided
+    by the contributor's degree, so a link farm of N pages pooling
+    onto one target forwards one page's WORTH of mass, not N× (the
+    TKC-effect resistance that made SALSA the standard web variant;
+    Twitter's Who-To-Follow ran exactly this shape). Worth having
+    NEXT TO :func:`hits`: on the same graph the pair separates
+    "cited by many places" (SALSA ≈ in-degree-weighted visiting
+    probability) from "cited by the strongest hubs" (HITS).
+
+    Fixed-point BIGINT updates (floor-divides, per-contributor
+    quotient FIRST — the pagerank_weighted overflow bound):
+
+        a_{k+1}(v) = Σ_{u→v} (h_k(u)   div outdeg(u))
+        h_{k+1}(u) = Σ_{u→v} (a_{k+1}(v) div indeg(v))
+
+    Degree-stochastic propagation conserves mass up to the per-edge
+    floor remainder, so NO normalization step exists — each
+    iteration is exactly two edge⋈score joins + two partial-agg
+    groupBys, one job fewer per half-step than HITS. Trajectory is a
+    pure integer function of the edge set → chained-CTE DuckDB
+    replay (q_salsa).
+    """
+    def step(nodes, e, x, frm, to):
+        e = e.join(e.groupBy(frm).agg(F.count(F.lit(1)).alias("deg")), frm)
+        s = _hop(e, x, frm, to, "v div deg")
+        return nodes.join(s, "node", "left").select(
+            "node", F.coalesce("s", F.lit(0)).cast("long").alias("v"))
+
+    return _hubs_authorities(edges, n_iters, "salsa", step)
 
 
 def betweenness_sampled(
     edges: DataFrame, n_sources: int = 16, max_hops: int = 6,
-    driver_edge_limit: int = 2_000_000,
+    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
 ) -> DataFrame:
     """Approximate betweenness: BFS from a deterministic sample of
     source nodes (smallest ids — stable across runs), count how often
@@ -352,12 +572,8 @@ def betweenness_sampled(
             while node != src:
                 counts[node] = counts.get(node, 0) + 1
                 node = parent[node]
-    out = [(k, v) for k, v in sorted(counts.items())]
-    spark = edges.sparkSession
-    if not out:
-        return spark.createDataFrame([], "node_id long, betweenness long")
-    return spark.createDataFrame(out, "node_id long, betweenness long") \
-        .orderBy(F.desc("betweenness"), "node_id")
+    out = local_frame(edges.sparkSession, sorted(counts.items()), "node_id long, betweenness long")
+    return out.orderBy(F.desc("betweenness"), "node_id")
 
 
 def _multi_source_bfs(und: DataFrame, n_sources: int, max_hops: int):
@@ -439,7 +655,7 @@ def _betweenness_distributed(und: DataFrame, n_sources: int, max_hops: int) -> D
             .localCheckpoint(eager=True)
         )
     if not contribs:
-        return spark.createDataFrame([], "node_id long, betweenness long")
+        return local_frame(spark, [], "node_id long, betweenness long")
     allc = contribs[0]
     for c in contribs[1:]:
         allc = allc.unionByName(c)
@@ -618,13 +834,7 @@ def core_numbers(
     """
     from pyspark.sql import Window
 
-    und = (
-        _undirected_pairs(edges)
-        .select("a", "b")
-        .unionByName(_undirected_pairs(edges).select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_pairs(edges)
     h = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("h"))
     prev = None
     w = Window.partitionBy("a").orderBy(F.desc("hv"), "b")
@@ -654,6 +864,26 @@ def core_numbers(
                 f"{n_rounds} rounds — raise n_rounds"
             )
     return h.select(F.col("a").alias("node_id"), F.col("h").alias("core"))
+
+
+def _triangle_support(e: DataFrame) -> DataFrame:
+    """(a, b, sup): each canonical (a < b) edge of ``e`` with the number
+    of its triangles inside ``e``. Every triangle x<y<z is found once,
+    by the ordered-wedge join E(x,y)⋈E(y,z) on the middle node and a
+    semi-check of (x,z), then credited to its three edges."""
+    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    tri = e1.join(e2, "y").join(e3, ["x", "z"])
+    sup = (
+        tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
+        .unionAll(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
+        .unionAll(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("_sup"))
+    )
+    return e.join(sup, ["a", "b"], "left").select(
+        "a", "b", F.coalesce(F.col("_sup"), F.lit(0)).alias("sup"))
 
 
 def truss_edges(
@@ -705,20 +935,9 @@ def truss_edges(
     prev_n = e.count()
     converged = False
     for _ in range(n_rounds):
-        e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
-        sup = (
-            tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .unionAll(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
-            .unionAll(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("_sup"))
-        )
         e = (
-            e.join(sup, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("_sup"), F.lit(0)) >= thresh)
+            _triangle_support(e)
+            .filter(F.col("sup") >= thresh)
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
@@ -729,22 +948,7 @@ def truss_edges(
         prev_n = n
     if check_convergence and not converged:
         # one more support pass to verify the fixed point
-        e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
-        sup = (
-            tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .unionAll(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
-            .unionAll(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("_sup"))
-        )
-        n_below = (
-            e.join(sup, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("_sup"), F.lit(0)) < thresh)
-            .count()
-        )
+        n_below = _triangle_support(e).filter(F.col("sup") < thresh).count()
         if n_below:
             raise RuntimeError(
                 f"truss_edges: {n_below} edges still below support "
@@ -756,7 +960,7 @@ def truss_edges(
 def components_incremental(
     labels: DataFrame,
     new_edges: DataFrame,
-    driver_comp_edge_limit: int = 2_000_000,
+    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
 ) -> DataFrame:
     """Fold a NEW edge batch into stored connected-component labels
     WITHOUT re-running label propagation over the full graph — the
@@ -777,7 +981,7 @@ def components_incremental(
     label table (at scale: the label table is node-sized — sort-merge
     on node_id; the batch side is small), a distinct component-pair
     projection collected to the driver (≤ batch size rows; raises
-    above ``driver_comp_edge_limit`` — at that point run the full
+    above ``driver_edge_limit`` — at that point run the full
     distributed recompute instead), min-root union-find, and one
     broadcast remap join. The min-root union keeps component_id = the
     global min node id, so incremental and full recompute are
@@ -797,11 +1001,11 @@ def components_incremental(
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    rows = comp_edges.limit(driver_comp_edge_limit + 1).collect()
-    if len(rows) > driver_comp_edge_limit:
+    rows = comp_edges.limit(driver_edge_limit + 1).collect()
+    if len(rows) > driver_edge_limit:
         raise RuntimeError(
             "components_incremental: batch bridges more than "
-            f"{driver_comp_edge_limit} component pairs — run the full "
+            f"{driver_edge_limit} component pairs — run the full "
             "distributed graph_components instead"
         )
     # min roots keep component_id the global min node id
@@ -827,124 +1031,6 @@ def components_incremental(
         .select(
             "node_id",
             F.coalesce("new_comp", "component_id").alias("component_id"),
-        )
-    )
-
-
-HITS_SCALE = 10**9  # fixed-point unit for hub/authority mass
-
-
-def hits(
-    edges: DataFrame,
-    n_iters: int = 5,
-    scale: int = HITS_SCALE,
-    src_col: str = "subj_id",
-    dst_col: str = "obj_id",
-) -> DataFrame:
-    """Deterministic HITS (Kleinberg hubs-and-authorities) over the
-    directed edge table, in fixed-point BIGINT arithmetic — the
-    second host-authority signal next to :func:`pagerank` (hubs =
-    link directories, authorities = heavily-cited hosts; the pair
-    separates the two roles PageRank conflates).
-
-    Trajectory (exact L1 normalization each half-step, every divide
-    an integer floor-divide, so any engine replays it bit-exactly):
-
-        h0(u)      = scale div N
-        a_raw(v)   = Σ_{u→v} h(u);   a(v) = (a_raw(v)·scale) div ΣA
-        h_raw(u)   = Σ_{u→v} a(v);   h(u) = (h_raw(u)·scale) div ΣH
-
-    Magnitude proof (no BIGINT overflow, ever): after each
-    normalization Σ values ≤ scale, so every raw value ≤ scale and
-    every product value·scale ≤ scale² = 10^18 < 2^63; the
-    normalization totals are Σ_u raw(u) ≤ max_degree·scale, safe for
-    max degree < 9·10^9. This is why ``scale`` is 10^9 here and not
-    pagerank's 10^12 — HITS multiplies by ``scale`` during
-    normalization where pagerank only floor-divides.
-
-    Scale shape: per iteration two node-keyed hash joins of the edge
-    table against node-sized score tables and two partial-agg
-    groupBys; the L1 total per half-step is a 1-row aggregate folded
-    back via broadcast cross-join (in-plan — no driver collect on the
-    iteration path); ``localCheckpoint`` per iteration truncates the
-    iterative lineage. Node ids may be any equi-joinable type
-    (BIGINT entity ids or host strings alike).
-
-    Reference analogue: the graph-metrics centrality family
-    (scripts/analysis/graph_metrics.py) — expressed as an iterative
-    relational plan instead of a NetworkX call.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], f"node_id {dict(edges.select(F.col(src_col).alias('x')).dtypes)['x']}, "
-                "hub_fixed long, auth_fixed long"
-        )
-    if scale // n == 0:
-        # same all-zero-silence guard as salsa (ADVICE r4 #4)
-        raise ValueError(
-            f"hits: scale={scale} < n_nodes={n}; raise `scale` so "
-            "scale // n >= 1 (each node needs >= 1 fixed-point unit)"
-        )
-    hubs = nodes.withColumn("h", F.lit(scale // n).cast("long"))
-    auths = None
-    # L1 normalizers stay IN-PLAN: the half-step total is a 1-row
-    # aggregate cross-joined back as a broadcast (the bm25 totals
-    # pattern) instead of a scalar .collect() — so each half-step is
-    # ONE job (the eager checkpoint), not a checkpoint + a collect,
-    # and the iteration count stays off the driver's critical path.
-    # Arithmetic is unchanged (integer floor-divide of the same
-    # BIGINT sums), so trajectories are bit-identical to the collect
-    # formulation — pinned by the float-reference test and the q_hits
-    # DuckDB replay. greatest(tot, 1) replays max(tot, 1); the raw
-    # table is checkpointed because two consumers (the total and the
-    # normalize join) would otherwise re-run the edge join.
-    for _ in range(n_iters):
-        a_raw = (
-            e.join(hubs.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("h").alias("raw"))
-        ).localCheckpoint(eager=True)
-        tot_a = a_raw.agg(F.coalesce(F.sum("raw"), F.lit(0)).alias("_tot"))
-        auths = nodes.join(a_raw, "node", "left").crossJoin(
-            F.broadcast(tot_a)
-        ).select(
-            "node",
-            F.expr(f"(coalesce(raw, 0L) * {scale}L) div greatest(_tot, 1L)")
-            .cast("long").alias("a"),
-        ).localCheckpoint(eager=True)
-        h_raw = (
-            e.join(auths.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("a").alias("raw"))
-        ).localCheckpoint(eager=True)
-        tot_h = h_raw.agg(F.coalesce(F.sum("raw"), F.lit(0)).alias("_tot"))
-        hubs = nodes.join(h_raw, "node", "left").crossJoin(
-            F.broadcast(tot_h)
-        ).select(
-            "node",
-            F.expr(f"(coalesce(raw, 0L) * {scale}L) div greatest(_tot, 1L)")
-            .cast("long").alias("h"),
-        ).localCheckpoint(eager=True)
-    return (
-        hubs.join(auths, "node")
-        .select(
-            F.col("node").alias("node_id"),
-            F.col("h").alias("hub_fixed"),
-            F.col("a").alias("auth_fixed"),
         )
     )
 
@@ -1055,343 +1141,6 @@ def link_prediction(
     )
 
 
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
-) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank: teleport mass returns
-    ONLY to the ``seeds`` node set, so rank measures proximity to the
-    seeds — the focused-crawl scorer (seed the hosts you trust, rank
-    every host by how reachable it is from them) and the related-entity
-    ranker the global pagerank cannot express.
-
-    Same fixed-point BIGINT trajectory as :func:`pagerank` (floor
-    divides, dangling mass dropped), with the teleport term gated to
-    seeds:
-
-        r0(v)      = [v ∈ S] · (scale div |S|)
-        r_{k+1}(v) = [v ∈ S] · ((100−d)·scale) div (100·|S|)
-                     + (d · Σ_{u→v} (r_k(u) div outdeg(u))) div 100
-
-    Non-seed nodes unreachable from S stay exactly 0 — a focused
-    crawl must not spend budget there, and the oracle checks the
-    zeros too. Scale shape identical to pagerank: per iteration one
-    edge⋈rank join + one partial-agg groupBy, lineage truncated per
-    round; seeds are vocabulary-sized (broadcast join).
-
-    ``seeds`` carries one column ``node``; seeds absent from the
-    graph still receive teleport mass (they are real pages — the
-    graph just has no links for them yet).
-    """
-    e = (
-        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    seed_nodes = seeds.select("node").distinct().localCheckpoint(eager=True)
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        raise ValueError("pagerank_personalized: empty seed set")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(seed_nodes)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    is_seed = F.broadcast(seed_nodes.withColumn("_s", F.lit(1)))
-    base = nodes.join(is_seed, "node", "left")
-    if scale // n_seeds == 0:
-        raise ValueError(
-            f"pagerank_personalized: scale={scale} < n_seeds={n_seeds}; "
-            "raise `scale`"
-        )
-    teleport = ((100 - damping_pct) * scale) // (100 * n_seeds)
-    ranks = base.select(
-        "node",
-        F.when(F.col("_s").isNotNull(), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0)).cast("long").alias("rank_fixed"),
-    )
-    for _ in range(n_iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fixed div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            base.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(F.col("_s").isNotNull(), F.lit(teleport))
-                    .otherwise(F.lit(0))
-                    + F.expr(
-                        f"({damping_pct} * coalesce(contrib, 0L)) div 100"
-                    )
-                ).cast("long").alias("rank_fixed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(F.col("node").alias("node_id"), "rank_fixed")
-
-
-def pagerank_weighted(
-    edges: DataFrame,
-    n_iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
-    weight_col: str = "weight",
-) -> DataFrame:
-    """Edge-weighted PageRank: a node's rank splits over its
-    out-edges PROPORTIONAL to edge weight instead of equally — the
-    host-graph variant where ``n_links`` counts matter (a host that
-    links a target 10,000 times endorses it more than a one-off
-    footnote, and the unweighted splitter throws that signal away).
-
-    Update (all BIGINT floor-divides; the two-step divide keeps every
-    product under 2^63 — see bound below):
-
-        share(u→v) = (r_k(u) div W(u)) · w(u,v)     W(u) = Σ_out w
-        r_{k+1}(v) = ((100−d)·scale) div (100·N)
-                     + (d · Σ share) div 100
-
-    The per-unit-weight quotient ``r div W`` is computed FIRST, then
-    multiplied by w — so the product is ≤ r ≤ scale = 10^12 times
-    nothing (w/W ≤ 1 ⇒ share ≤ r), never an overflow; the price is
-    the floor happening per-edge-weight-unit (documented: weights are
-    link counts, the sub-1/W mass dropped per edge mirrors the
-    unweighted variant's dangling-mass drop). Zero/negative weights
-    raise — corrupt input, not a convention.
-
-    Scale shape identical to :func:`pagerank`: one edge⋈rank join and
-    one partial-agg groupBy per iteration, weight totals a node-sized
-    dim, lineage truncated per round."""
-    w = F.col(weight_col).cast("long")
-    e = (
-        edges.select(
-            F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"),
-            w.alias("w"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    # isNull() must be explicit: NULL <= 0 is NULL, so a bare w <= 0
-    # filter would let NULL-weight edges silently vanish from the sums
-    if e.filter(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count():
-        raise ValueError("pagerank_weighted: null/non-positive weights — corrupt input")
-    e = (
-        e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return edges.sparkSession.createDataFrame([], "node_id long, rank_fixed long")
-    if scale // n == 0:
-        raise ValueError(
-            f"pagerank_weighted: scale={scale} < n_nodes={n}; raise `scale`"
-        )
-    wtot = e.groupBy("src").agg(F.sum("w").alias("wtot"))
-    teleport = ((100 - damping_pct) * scale) // (100 * n)
-    ranks = nodes.withColumn("rank_fixed", F.lit(scale // n).cast("long"))
-    for _ in range(n_iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(wtot, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank_fixed div wtot) * w").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(contrib, 0L)) div 100"
-                    )
-                ).cast("long").alias("rank_fixed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(F.col("node").alias("node_id"), "rank_fixed")
-
-
-def salsa(
-    edges: DataFrame,
-    n_iters: int = 5,
-    scale: int = HITS_SCALE,
-    src_col: str = "subj_id",
-    dst_col: str = "obj_id",
-) -> DataFrame:
-    """SALSA (Lempel & Moran 2000): hubs-and-authorities as TWO
-    RANDOM WALKS on the bipartite hub/authority view instead of
-    HITS's mutual-reinforcement sums — each contribution is divided
-    by the contributor's degree, so a link farm of N pages pooling
-    onto one target forwards one page's WORTH of mass, not N× (the
-    TKC-effect resistance that made SALSA the standard web variant;
-    Twitter's Who-To-Follow ran exactly this shape). Worth having
-    NEXT TO :func:`hits`: on the same graph the pair separates
-    "cited by many places" (SALSA ≈ in-degree-weighted visiting
-    probability) from "cited by the strongest hubs" (HITS).
-
-    Fixed-point BIGINT updates (floor-divides, per-contributor
-    quotient FIRST — the pagerank_weighted overflow bound):
-
-        a_{k+1}(v) = Σ_{u→v} (h_k(u)   div outdeg(u))
-        h_{k+1}(u) = Σ_{u→v} (a_{k+1}(v) div indeg(v))
-
-    Degree-stochastic propagation conserves mass up to the per-edge
-    floor remainder, so NO normalization step exists — each
-    iteration is exactly two edge⋈score joins + two partial-agg
-    groupBys, one job fewer per half-step than HITS. Degree dims are
-    node-sized; lineage checkpointed per iteration. Trajectory is a
-    pure integer function of the edge set → chained-CTE DuckDB
-    replay (q_salsa).
-    """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "node_id long, hub_fixed long, auth_fixed long"
-        )
-    if scale // n == 0:
-        # more nodes than fixed-point units: every score would start
-        # (and stay) 0 with no error signal (ADVICE r4 #4)
-        raise ValueError(
-            f"salsa: scale={scale} < n_nodes={n}; raise `scale` so "
-            "scale // n >= 1 (each node needs >= 1 fixed-point unit)"
-        )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    hubs = nodes.withColumn("h", F.lit(scale // n).cast("long"))
-    auths = nodes.withColumn("a", F.lit(0).cast("long"))
-    for _ in range(n_iters):
-        a_new = (
-            e.join(hubs.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("h div outdeg")).alias("raw"))
-        )
-        auths = (
-            nodes.join(a_new, "node", "left")
-            .select("node", F.coalesce("raw", F.lit(0)).cast("long").alias("a"))
-            .localCheckpoint(eager=True)
-        )
-        h_new = (
-            e.join(auths.withColumnRenamed("node", "dst"), "dst")
-            .join(indeg, "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.expr("a div indeg")).alias("raw"))
-        )
-        hubs = (
-            nodes.join(h_new, "node", "left")
-            .select("node", F.coalesce("raw", F.lit(0)).cast("long").alias("h"))
-            .localCheckpoint(eager=True)
-        )
-    return (
-        hubs.join(auths, "node")
-        .select(
-            F.col("node").alias("node_id"),
-            F.col("h").alias("hub_fixed"),
-            F.col("a").alias("auth_fixed"),
-        )
-    )
-
-
-def katz(
-    edges: DataFrame,
-    n_iters: int = 6,
-    alpha_pct: int = 20,
-    scale: int = HITS_SCALE,
-    src_col: str = "subj_id",
-    dst_col: str = "obj_id",
-) -> DataFrame:
-    """Katz centrality in fixed-point BIGINT: ``x_{k+1}(v) = β +
-    α·Σ_{u→v} x_k(u)`` with β = ``scale`` and α = ``alpha_pct``/100 —
-    the attenuated PATH-COUNT centrality that completes the spectral
-    family (PageRank divides influence across out-links; Katz does
-    not, so a hub endorsing 1,000 pages endorses each at full
-    α-attenuated strength — the right semantics for "how reachable is
-    this host through short link chains", e.g. seed-distance scoring
-    for crawl frontiers).
-
-    The update is one edge⋈score join + partial-agg sum + a constant
-    add per iteration (no degree dims, no normalization — the
-    cheapest member of the family); α is applied as a floor-divided
-    percentage so the ``n_iters`` trajectory is a pure integer
-    function of the edge set → chained-CTE replay (q_katz).
-    Convergence needs α < 1/λ_max (≈ 1/max-indegree as the usual
-    bound); with a fixed iteration count the trajectory is exact
-    either way, and the caller picks α accordingly. Values are
-    bounded by β·Σ(α·d_in)^k — raise ``scale`` only with a
-    correspondingly small α·d_in (documented overflow envelope, the
-    pagerank_weighted discipline)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    x = nodes.withColumn("x", F.lit(int(scale)).cast("long"))
-    for _ in range(n_iters):
-        contrib = (
-            e.join(x.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("raw"))
-        )
-        x = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(int(scale))
-                    + F.expr(
-                        f"({alpha_pct} * coalesce(raw, 0L)) div 100"
-                    )
-                ).cast("long").alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return x.select(F.col("node").alias("node_id"), F.col("x").alias("katz_fixed"))
-
-
 def label_propagation(edges: DataFrame, n_rounds: int = 8) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan/
     Albert/Kumara 2007, the GraphFrames formulation): every node
@@ -1424,17 +1173,7 @@ def label_propagation(edges: DataFrame, n_rounds: int = 8) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    und = (
-        _undirected_pairs(edges)
-        .select("a", "b")
-        .unionByName(
-            _undirected_pairs(edges).select(
-                F.col("b").alias("a"), F.col("a").alias("b")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_pairs(edges)
     lab = und.select("a").distinct().select("a", F.col("a").alias("lab"))
     w = Window.partitionBy("a").orderBy(F.desc("c"), "lab")
     for _ in range(n_rounds):
@@ -1483,17 +1222,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     partial-agg global fold to 1 row. No window, no sort, no driver
     loop.
     """
-    und = (
-        _undirected_pairs(edges)
-        .select("a", "b")
-        .unionByName(
-            _undirected_pairs(edges).select(
-                F.col("b").alias("a"), F.col("a").alias("b")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetric_pairs(edges)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("d"))
     stubs = (
         und.join(deg.select(F.col("a"), F.col("d").alias("dx")), "a")
@@ -1602,8 +1331,8 @@ def densest_subgraph(
                 "rounds — raise max_rounds (bound: log_(1+eps) n)"
             )
     if best is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "node_id long, best_round int, density_milli long, "
             "n_nodes long, m_edges long",
         )
@@ -1650,8 +1379,8 @@ def modularity_4m2(edges: DataFrame, assign: DataFrame) -> DataFrame:
     tagged = und.join(a, "a").join(b, "b").localCheckpoint(eager=True)
     m = tagged.count()
     if m == 0:
-        return edges.sparkSession.createDataFrame(
-            [(0, 0, 0)], "q_4m2 long, m_edges long, n_communities long"
+        return local_frame(
+            edges.sparkSession, [(0, 0, 0)], "q_4m2 long, m_edges long, n_communities long"
         )
     intra = (
         tagged.filter(F.col("ca") == F.col("cb"))

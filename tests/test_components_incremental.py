@@ -70,5 +70,5 @@ def test_driver_guard_raises(spark):
     batch = [(i, i + 100) for i in range(10)]
     with pytest.raises(RuntimeError, match="component pairs"):
         components_incremental(
-            labels, _edges_df(spark, batch), driver_comp_edge_limit=5
+            labels, _edges_df(spark, batch), driver_edge_limit=5
         ).collect()

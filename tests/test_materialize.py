@@ -1,6 +1,7 @@
-"""Driver-built rows (the lineage row, query vectors, component labels)
-reach Spark without a Python RDD, committed lineage rows keep the
-lineage schema and values, and per-file lineage comes from footers."""
+"""Driver-built rows (the lineage row, query vectors, component labels,
+sampled betweenness, empty rank results) reach Spark without a Python
+RDD, committed lineage rows keep the lineage schema and values, and
+per-file lineage comes from footers."""
 
 import time
 
@@ -8,6 +9,7 @@ import pytest
 
 from metal_history_knowledge_graph_spark.operators.canonicalize import connected_components
 from metal_history_knowledge_graph_spark.operators.embeddings import embed_texts_df
+from metal_history_knowledge_graph_spark.operators.graph_algos import betweenness_sampled, pagerank
 from metal_history_knowledge_graph_spark.operators.materialize import (
     FILE_LINEAGE_TABLE,
     LINEAGE_TABLE,
@@ -59,9 +61,27 @@ def _no_pair_labels(spark, store, monkeypatch):
     return labels
 
 
+def _betweenness(spark, store, monkeypatch):
+    # the driver BFS path: path graph 0-1-2-3, every node a source
+    edges = spark.sql("SELECT * FROM VALUES (0L, 1L), (1L, 2L), (2L, 3L) AS t(subj_id, obj_id)")
+    out = betweenness_sampled(edges)
+    assert sorted(out.collect()) == [(1, 4), (2, 4)]
+    return out
+
+
+def _empty_rank(spark, store, monkeypatch):
+    # a self-loop-only graph has no rank rows
+    edges = spark.sql("SELECT * FROM VALUES (1L, 1L) AS t(subj_id, obj_id)")
+    out = pagerank(edges)
+    assert out.collect() == []
+    return out
+
+
 @pytest.mark.parametrize(
-    "build", [_lineage_rows, _query_vectors, _component_labels, _no_pair_labels],
-    ids=["commit_stage", "embed_texts_df", "connected_components", "no_pairs"])
+    "build", [_lineage_rows, _query_vectors, _component_labels, _no_pair_labels,
+              _betweenness, _empty_rank],
+    ids=["commit_stage", "embed_texts_df", "connected_components", "no_pairs",
+         "betweenness_sampled", "empty_rank"])
 def test_local_rows_skip_python_rdd(spark, store, monkeypatch, build):
     # session.local_frame rows cross as Arrow into a LocalRelation; a
     # Python list becomes a LogicalRDD with worker tasks

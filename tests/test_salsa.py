@@ -1,11 +1,19 @@
 """SALSA: pure-Python integer-trajectory replay plus the TKC
-(link-farm) resistance property that separates it from HITS."""
+(link-farm) resistance property that separates it from HITS; and the
+degenerate (self-loop-only) input across the whole rank family."""
 
-from pyspark.sql import functions as F
+import pytest
 
 from metal_history_knowledge_graph_spark.operators.graph_algos import (
+    DAMPING_PCT,
     HITS_SCALE,
+    PAGERANK_SCALE,
     hits,
+    katz,
+    pagerank,
+    pagerank_personalized,
+    pagerank_resume,
+    pagerank_weighted,
     salsa,
 )
 
@@ -77,3 +85,34 @@ def test_link_farm_resistance(spark):
 
 def test_empty_graph(spark):
     assert salsa(_edges(spark, [(1, 1)])).count() == 0
+
+
+# member -> (call on the edge table and a seed table, result columns
+# after node_id, result rows); the graph has nodes only through seeds
+FAMILY = {
+    "pagerank": (lambda e, s: pagerank(e), ["rank_fixed"], 0),
+    "pagerank_resume": (lambda e, s: pagerank_resume(e, pagerank(e)), ["rank_fixed"], 0),
+    "pagerank_weighted": (lambda e, s: pagerank_weighted(e), ["rank_fixed"], 0),
+    "pagerank_personalized": (pagerank_personalized, ["rank_fixed"], 2),
+    "katz": (lambda e, s: katz(e), ["katz_fixed"], 0),
+    "hits": (lambda e, s: hits(e), ["hub_fixed", "auth_fixed"], 0),
+    "salsa": (lambda e, s: salsa(e), ["hub_fixed", "auth_fixed"], 0),
+}
+
+
+@pytest.mark.parametrize("node_type, nodes", [("bigint", (1, 2)), ("string", ("a.com", "b.com"))],
+                         ids=["long", "string"])
+@pytest.mark.parametrize("member", list(FAMILY))
+def test_empty_graph_family(spark, member, node_type, nodes):
+    call, cols, n_rows = FAMILY[member]
+    edges = spark.createDataFrame(
+        [(nodes[0], nodes[0], 1)], f"subj_id {node_type}, obj_id {node_type}, weight bigint")
+    seeds = spark.createDataFrame([(v,) for v in nodes], f"node {node_type}")
+    out = call(edges, seeds)
+    assert out.dtypes == [("node_id", node_type)] + [(c, "bigint") for c in cols]
+    rows = out.collect()
+    assert len(rows) == n_rows
+    if member == "pagerank_personalized":
+        # a seed with no edge keeps its teleport share, nothing more
+        teleport = (100 - DAMPING_PCT) * PAGERANK_SCALE // (100 * len(nodes))
+        assert sorted(rows) == [(v, teleport) for v in nodes]
