@@ -21,7 +21,10 @@ value-hash agrees.
 from __future__ import annotations
 
 import atexit
+import functools
+import hashlib
 import os
+import re
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -57,10 +60,48 @@ def _export(name: str) -> str:
 
 _KG_CACHE: dict[str, object] = {}
 
+_PACKAGE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "metal_history_knowledge_graph_spark")
+
+
+@functools.cache
+def _package_digest() -> str:
+    """sha1 over the package's ``.py`` sources, in sorted walk order
+    (the rule perfbench/run.py keys its corpus cache by)."""
+    h = hashlib.sha1()
+    for dirpath, dirs, files in os.walk(_PACKAGE_DIR):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f), "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()
+
+
+def _cache_root(prefix: str, digest: str) -> str:
+    """The shared cross-process cache dir ``<tmp>/<prefix>_<digest[:12]>``:
+    output that code built is only ever reused by that same code."""
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_{digest[:12]}")
+
+
+def _current_cache_root(prefix: str) -> str:
+    """:func:`_cache_root` for the package as it is now. Removes the
+    ``prefix`` caches that other code versions built (and the
+    digest-less ones older code left)."""
+    root = _cache_root(prefix, _package_digest())
+    keep, tmp = os.path.basename(root), tempfile.gettempdir()
+    stale = re.compile(re.escape(prefix) + r"(_[0-9a-f]{12})?(\.tmp)?")
+    for name in os.listdir(tmp):
+        if stale.fullmatch(name) and not name.startswith(keep):
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    return root
+
 
 def _kg_store(spark: SparkSession, sf_dir: str):
     """Build the knowledge graph once per sf_dir (synthetic corpus,
-    seed 42) and cache the TableStore across queries."""
+    seed 42) and cache the TableStore across queries. The store dir is
+    shared across processes and resumed, keyed by sf_dir and by the
+    package sources, so a code change rebuilds it."""
     key = os.path.abspath(sf_dir)
     if key in _KG_CACHE:
         return _KG_CACHE[key]
@@ -69,10 +110,8 @@ def _kg_store(spark: SparkSession, sf_dir: str):
     from metal_history_knowledge_graph_spark.sources.corpus import generate_pages
 
     n_pages = 300 if "0.01" in os.path.basename(key.rstrip("/")) else 120
-    import hashlib
-
-    _tag = hashlib.md5(key.rstrip("/").encode()).hexdigest()[:12]
-    root = f"/tmp/kg_entry_store_{os.path.basename(key.rstrip('/'))}_{_tag}"
+    tag = hashlib.md5(key.rstrip("/").encode()).hexdigest()[:12]
+    root = _current_cache_root(f"kg_entry_store_{os.path.basename(key.rstrip('/'))}_{tag}")
     store = TableStore(spark, root)
     run(spark, generate_pages(spark, n_pages, seed=42), store,
         run_id=f"entry-{n_pages}", resume=True)
@@ -5643,7 +5682,8 @@ def td_lsh_topk(spark, sf_dir):
     ).coalesce(1).write.mode("overwrite").parquet(_LSH_TOPK_PLANES_PATH)
     # double-cast index (the r2 cache held raw-float buckets — keyed
     # separately so the oracle replays the exact doubles on disk)
-    idx_path = f"/tmp/kg_lsh_index_d_{os.path.basename(os.path.abspath(sf_dir))}"
+    idx_path = _current_cache_root(
+        f"kg_lsh_index_d_{os.path.basename(os.path.abspath(sf_dir))}")
     if not os.path.isdir(idx_path):
         tmp = idx_path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)

@@ -11,8 +11,21 @@ plus relationship dicts ``(type, from_entity_type, from_entity_name,
 to_entity_type, to_entity_name, year, role, context)``.
 
 Pure Python, no Spark imports — called batch-wise from the extraction
-``mapInPandas`` operator. All regexes are module-level compiled once per
-executor. Deviations from the reference (documented):
+``mapInArrow`` operator (``operators/extract.py``). All regexes are
+module-level compiled once per executor.
+
+The sentence patterns are one ordered rule table, ``RULES``: each row
+is ``(gate, search, emit)``, and :func:`extract_from_text` runs every
+row whose lowercase literal ``gate`` occurs in a sentence. A
+two-entity rule is a :func:`_pair` row (its endpoint types, predicate
+and direction); the rest are small named emitters that read or set the
+chunk's last band, album or year. Row order is part of the output: a
+repeated entity merges its attributes fill-first, and relationships
+are listed in emit order. ``SINGULAR`` (entity type → relationship
+endpoint type) and ``_ATTRS`` (the attributes a pattern gives each
+endpoint type) are the per-type tables every row shares.
+
+Deviations from the reference (documented):
 
 * locations get a ``name`` field (= city) so they participate in
   canonicalization; the reference skips name-less entities
@@ -202,15 +215,65 @@ def _context_link_score(context_tokens: list[str], chunk_tokens: set[str]) -> fl
     return hit / (len(context_tokens) ** 0.5)
 
 
+#: entity type → relationship endpoint type (the extraction contract's
+#: singular names); ``operators/triples`` inverts it.
+SINGULAR = {
+    "bands": "band", "people": "person", "albums": "album", "songs": "song",
+    "subgenres": "subgenre", "locations": "location", "events": "event",
+    "equipment": "equipment", "studios": "studio", "labels": "label",
+    "movements": "movement", "venues": "venue", "platforms": "platform",
+    "production_styles": "production_style", "eras": "era",
+    "media_outlets": "media_outlet", "characteristics": "characteristic",
+    "viral_phenomena": "viral_phenomenon",
+}
+
+
+def _described(name: str, sent: str) -> dict:
+    return {"description": sent}
+
+
+def _titled(name: str, sent: str) -> dict:
+    return {"title": name}
+
+
+#: entity type → the attributes a sentence pattern gives that endpoint,
+#: ``f(name, sentence)``; a rule's own attributes override these. Types
+#: not listed get none.
+_ATTRS = {
+    "bands": _described, "people": _described, "movements": _described,
+    "albums": _titled, "songs": _titled,
+    "locations": lambda n, s: {"city": n, "country": "",
+                               "scene_description": f"Metal scene in {n}"},
+    "events": lambda n, s: {"type": "festival", "description": s},
+    "studios": lambda n, s: {"famous_for": s},
+    "eras": lambda n, s: {"era_start": ERAS[n][0], "era_end": ERAS[n][1]},
+    "equipment": lambda n, s: EQUIPMENT[n],
+    "venues": lambda n, s: VENUES[n],
+    "platforms": lambda n, s: PLATFORMS[n],
+    "production_styles": lambda n, s: PRODUCTION_STYLES[n],
+}
+
+
+def _surface(etype: str, text: str) -> str:
+    """A matched surface as an entity name: subgenre names are
+    lowercase, every other type keeps its case."""
+    return text.lower() if etype == "subgenres" else text
+
+
 class _Acc:
     """Per-chunk accumulator keyed (entity_type, name) preserving first-
     occurrence order, merging pattern attrs fill-first (the reference's
-    per-chunk extraction yields one entity per name per chunk)."""
+    per-chunk extraction yields one entity per name per chunk). It also
+    carries the chunk's last band, album and year, which the stateful
+    rules read and set."""
 
     def __init__(self) -> None:
         self._items: dict[tuple[str, str], dict] = {}
         self._order: dict[tuple[str, str], int] = {}
         self.relationships: list[dict] = []
+        self.last_band: Optional[str] = None
+        self.last_album: Optional[str] = None
+        self.last_year: Optional[int] = None
 
     def add(self, etype: str, name: str, offset: int, **attrs) -> None:
         name = _clean_name(name)
@@ -236,6 +299,11 @@ class _Acc:
                     cur[k] = cur[k] + [x for x in v if x not in cur[k]]
             self._order[key] = min(self._order[key], offset)
 
+    def end(self, etype: str, name: str, offset: int, sent: str, **extra) -> None:
+        """Add a pattern endpoint: its type's ``_ATTRS`` plus ``extra``."""
+        attrs = _ATTRS.get(etype)
+        self.add(etype, name, offset, **{**(attrs(name, sent) if attrs else {}), **extra})
+
     def rel(self, rtype: str, ft: str, fn: str, tt: str, tn: str,
             year: Optional[int] = None, role: Optional[str] = None,
             context: str = "") -> None:
@@ -250,6 +318,202 @@ class _Acc:
         return [(k[0], self._items[k]) for k in keys]
 
 
+# --- the rule table ------------------------------------------------------
+# Every emitter is ``emit(acc, match, sentence, sentence_offset)``.
+
+
+def _pair(pred: str, a_type: str, b_type: str, reverse: bool = False,
+          a_extra=None, b_extra=None, sets_band: bool = False):
+    """Emitter of a two-entity rule: groups 1 and 2 are endpoints ``a``
+    and ``b``, related ``a → b`` (``b → a`` with ``reverse``).
+    ``a_extra``/``b_extra`` are ``f(other_name, sentence)`` attributes
+    on top of the type's own; ``sets_band`` makes ``a`` the last band."""
+    a_end, b_end = SINGULAR[a_type], SINGULAR[b_type]
+
+    def emit(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+        a, b = _surface(a_type, m.group(1)), _surface(b_type, m.group(2))
+        acc.end(a_type, a, off, sent, **(a_extra(b, sent) if a_extra else {}))
+        acc.end(b_type, b, off, sent, **(b_extra(a, sent) if b_extra else {}))
+        if reverse:
+            acc.rel(pred, b_end, b, a_end, a, context=sent)
+        else:
+            acc.rel(pred, a_end, a, b_end, b, context=sent)
+        if sets_band:
+            acc.last_band = a
+
+    return emit
+
+
+def _key_chars(other: str, sent: str) -> dict:
+    return {"key_characteristics": sent}
+
+
+def _search_formed(sent: str) -> Optional[re.Match]:
+    return P_FORMED_DATE.search(sent) or P_FORMED.search(sent)
+
+
+def _formed(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    band, city, region_or_country, year = m.group(1), m.group(2), m.group(3), int(m.group(4))
+    role, person = m.group(5), m.group(6)
+    is_dated = m.re is P_FORMED_DATE
+    region = region_or_country if is_dated else None
+    country = None if is_dated else region_or_country
+    acc.end("bands", band, off, sent, formed_year=year, origin_city=city,
+            origin_country=country)
+    acc.end("locations", city, off, sent, region=region, country=country or "")
+    acc.rel("FORMED_IN", "band", band, "location", city, year=year, context=sent)
+    if person:
+        acc.end("people", person, off, sent, instruments=[INSTRUMENT_BY_ROLE[role]],
+                associated_bands=[band])
+        acc.rel("MEMBER_OF", "person", person, "band", band,
+                year=year, role=role, context=sent)
+    acc.last_band = band
+
+
+def _consisted(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    if not acc.last_band:
+        return
+    for item in P_LIST_SPLIT.split(m.group(1)):
+        im = P_MEMBER_ITEM.search(item)
+        if im:
+            person, instrument = im.group(1), im.group(2)
+            acc.end("people", person, off, sent, instruments=[instrument],
+                    associated_bands=[acc.last_band])
+            acc.rel("MEMBER_OF", "person", person, "band", acc.last_band,
+                    role=ROLE_BY_INSTRUMENT[instrument], context=sent)
+
+
+def _released(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    band, title, year = m.group(1), m.group(2), int(m.group(3))
+    acc.end("bands", band, off, sent)
+    acc.end("albums", title, off, sent, artist=band, release_year=year, description=sent)
+    acc.rel("RELEASED", "band", band, "album", title, year=year, context=sent)
+    acc.last_band, acc.last_album = band, title
+
+
+def _self_titled(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    if not acc.last_band:
+        return
+    title, year = m.group(1), int(m.group(2))
+    acc.end("albums", title, off, sent, artist=acc.last_band, release_year=year,
+            description=sent)
+    acc.rel("RELEASED", "band", acc.last_band, "album", title, year=year, context=sent)
+    acc.last_album = title
+
+
+def _movement(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    movement, decade = m.group(1), int(m.group(3))
+    bands = [b.strip() for b in P_LIST_SPLIT.split(m.group(4)) if b.strip()]
+    acc.end("movements", movement, off, sent, start_year=decade, key_bands=bands)
+    for b in bands:
+        acc.end("bands", b, off, sent)
+        acc.rel("PART_OF_MOVEMENT", "band", b, "movement", movement, context=sent)
+
+
+def _left(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    year, person, band = int(m.group(1)), m.group(2), m.group(3)
+    acc.end("people", person, off, sent, associated_bands=[band])
+    acc.end("bands", band, off, sent)
+    acc.end("events", f"{person} leaves {band}", off, sent, date=str(year), type="other")
+    acc.rel("MEMBER_OF", "person", person, "band", band, year=year, context=sent)
+    acc.last_band, acc.last_year = band, year
+
+
+def _replaced(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    if not acc.last_band:
+        return
+    person, former_band = m.group(1), m.group(2)
+    bands = [acc.last_band] + ([former_band] if former_band else [])
+    acc.end("people", person, off, sent, associated_bands=bands)
+    acc.rel("MEMBER_OF", "person", person, "band", acc.last_band,
+            year=acc.last_year, context=sent)
+    if former_band:
+        acc.end("bands", former_band, off, sent)
+        acc.rel("MEMBER_OF", "person", person, "band", former_band, context=sent)
+
+
+def _track(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    album, song = m.group(1), m.group(2)
+    artist = acc.last_band if album == acc.last_album else None
+    acc.end("albums", album, off, sent)
+    acc.end("songs", song, off, sent, album=album, artist=artist)
+    acc.rel("CONTAINS_TRACK", "album", album, "song", song, context=sent)
+
+
+def _performed(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    person, album, instrument = m.group(1), m.group(2), m.group(3)
+    acc.end("people", person, off, sent, instruments=[instrument])
+    acc.end("albums", album, off, sent)
+    # reference PERFORMED_ON(Person→Album, instruments[]),
+    # initialize_kuzu.py:184; instruments land in props.role
+    acc.rel("PERFORMED_ON", "person", person, "album", album,
+            role=instrument, context=sent)
+
+
+def _originated(acc: _Acc, m: re.Match, sent: str, off: int) -> None:
+    genre, city, country = _surface("subgenres", m.group(1)), m.group(2), m.group(3)
+    acc.end("subgenres", genre, off, sent, key_characteristics=sent)
+    acc.end("locations", city, off, sent, country=country or "")
+    acc.rel("ORIGINATED_IN", "subgenre", genre, "location", city, context=sent)
+
+
+#: The sentence patterns, in emit order. The gate is a lowercase literal
+#: each row's regex REQUIRES, so skipping the search when it is absent
+#: from the lowercased sentence is a pure necessary-condition prune
+#: (measured ~1,450 regex searches/chunk -> ~100). Predicates cite the
+#: reference schema: base whitelist rel tables initialize_kuzu.py:167-220,
+#: enhanced ones metal_history_schema_enhanced.cypher:104-198.
+RULES = [
+    ("formed in", _search_formed, _formed),
+    ("consist", P_CONSISTED.search, _consisted),
+    ("released", P_RELEASED.search, _released),
+    ("self-titled", P_SELF_TITLED.search, _self_titled),
+    ("was recorded at", P_RECORDED_AT.search, _pair(
+        "RECORDED_AT", "albums", "studios",
+        a_extra=lambda b, s: {"description": s, "studio": b})),
+    ("was released by", P_RELEASED_BY.search, _pair(
+        "RELEASED_BY", "albums", "labels",
+        a_extra=lambda b, s: {"description": s, "label": b})),
+    (" plays ", P_PLAYS.search, _pair(
+        "PLAYS_GENRE", "bands", "subgenres", b_extra=_key_chars, sets_band=True)),
+    ("influenced by", P_INFLUENCED.search, _pair("INFLUENCED_BY", "bands", "bands")),
+    ("movement began in", P_MOVEMENT.search, _movement),
+    (" left ", P_LEFT.search, _left),
+    ("replaced by", P_REPLACED.search, _replaced),
+    ("was active during", P_ACTIVE_DURING.search, _pair("ACTIVE_DURING", "bands", "eras")),
+    ("emerged during", P_EMERGED_DURING.search, _pair("EMERGED_DURING", "subgenres", "eras")),
+    ("was documented in", P_DOCUMENTED_IN.search,
+     _pair("DOCUMENTED_IN", "bands", "media_outlets")),
+    ("was featured in", P_FEATURED_IN.search, _pair("FEATURED_IN", "albums", "media_outlets")),
+    ("participated in", P_PARTICIPATED.search, _pair("PARTICIPATED_IN", "bands", "events")),
+    ("heavily shaped", P_INFLUENCED_EVENT.search, _pair("INFLUENCED_EVENT", "bands", "events")),
+    ("is defined by", P_HAS_CHAR.search,
+     _pair("HAS_CHARACTERISTIC", "subgenres", "characteristics")),
+    (" uses ", P_USES_TECH.search, _pair("USES_TECHNIQUE", "bands", "characteristics")),
+    ("showcases", P_ALBUM_FEAT.search, _pair("ALBUM_FEATURES", "albums", "characteristics")),
+    ("was produced by", P_PRODUCED_BY.search,
+     _pair("PRODUCED", "albums", "people", reverse=True)),
+    ("represents", P_REPRESENTS.search, _pair("REPRESENTS_GENRE", "albums", "subgenres")),
+    ("scene spawned", P_SCENE_SPAWNED.search, _pair("SCENE_SPAWNED", "locations", "bands")),
+    ("scene developed", P_SCENE_DEVELOPED.search,
+     _pair("SCENE_DEVELOPED", "locations", "subgenres")),
+    ("cited", P_CITED.search, _pair("CITATION", "bands", "albums")),
+    ("went viral", P_WENT_VIRAL.search, _pair("WENT_VIRAL", "songs", "viral_phenomena")),
+    ("recorded with the", P_EQUIPMENT.search, _pair("USES_EQUIPMENT", "bands", "equipment")),
+    ("played at", P_VENUE.search, _pair("VENUE_HOSTED", "bands", "venues", reverse=True)),
+    ("was promoted on", P_PLATFORM.search, _pair("PROMOTED_ON", "bands", "platforms")),
+    ("was produced with the", P_PRODSTYLE.search,
+     _pair("PRODUCED_WITH_STYLE", "albums", "production_styles")),
+    ("features the track", P_TRACK.search, _track),
+    ("performed on", P_PERFORMED.search, _performed),
+    ("were contemporaries", P_CONTEMP.search, _pair("CONTEMPORARY_OF", "bands", "bands")),
+    ("mentioned alongside", P_MENTIONED.search, _pair("MENTIONED_WITH", "bands", "bands")),
+    ("originated in", P_ORIGINATED.search, _originated),
+    ("evolved into", P_EVOLVED.search, _pair(
+        "EVOLVED_INTO", "subgenres", "subgenres", a_extra=_key_chars, b_extra=_key_chars)),
+]
+
+
 def extract_from_text(text: str) -> tuple[list[dict], list[dict]]:
     """Extract mentions + relationships from one chunk's text.
 
@@ -260,328 +524,16 @@ def extract_from_text(text: str) -> tuple[list[dict], list[dict]]:
     acc = _Acc()
     chunk_tokens = {t.lower() for t in re.findall(r"[\w'öäü&.-]+", text)}
 
-    last_band: Optional[str] = None
-    last_album: Optional[str] = None
-    last_year: Optional[int] = None
-
     for s_off, sent in split_sentences(text):
         sent = sent.strip()
         if not sent:
             continue
-        # cheap literal gates: each bank's regex REQUIRES the quoted
-        # literal, so skipping the regex when the lowercase literal is
-        # absent is a pure necessary-condition prune (measured ~1,450
-        # regex searches/chunk -> ~100; byte-identical outputs pinned
-        # by the before/after corpus diff + golden tests + P/R gate).
         s_low = sent.lower()
-
-        m = (P_FORMED_DATE.search(sent) or P_FORMED.search(sent)) \
-            if "formed in" in s_low else None
-        if m:
-            band, city, region_or_country, year = m.group(1), m.group(2), m.group(3), int(m.group(4))
-            role, person = m.group(5), m.group(6)
-            is_dated = m.re is P_FORMED_DATE
-            region = region_or_country if is_dated else None
-            country = None if is_dated else region_or_country
-            acc.add("bands", band, s_off, formed_year=year, origin_city=city,
-                    origin_country=country, description=sent)
-            acc.add("locations", city, s_off, city=city, region=region,
-                    country=country or "", scene_description=f"Metal scene in {city}")
-            acc.rel("FORMED_IN", "band", band, "location", city, year=year, context=sent)
-            if person:
-                instrument = INSTRUMENT_BY_ROLE[role]
-                acc.add("people", person, s_off, instruments=[instrument],
-                        associated_bands=[band], description=sent)
-                acc.rel("MEMBER_OF", "person", person, "band", band,
-                        year=year, role=role, context=sent)
-            last_band = band
-
-        m = P_CONSISTED.search(sent) if "consist" in s_low else None
-        if m and last_band:
-            for item in P_LIST_SPLIT.split(m.group(1)):
-                im = P_MEMBER_ITEM.search(item)
-                if im:
-                    person, instrument = im.group(1), im.group(2)
-                    acc.add("people", person, s_off, instruments=[instrument],
-                            associated_bands=[last_band], description=sent)
-                    acc.rel("MEMBER_OF", "person", person, "band", last_band,
-                            role=ROLE_BY_INSTRUMENT[instrument], context=sent)
-
-        m = P_RELEASED.search(sent) if "released" in s_low else None
-        if m:
-            band, title, year = m.group(1), m.group(2), int(m.group(3))
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("albums", title, s_off, title=title, artist=band,
-                    release_year=year, description=sent)
-            acc.rel("RELEASED", "band", band, "album", title, year=year, context=sent)
-            last_band, last_album = band, title
-
-        m = P_SELF_TITLED.search(sent) if "self-titled" in s_low else None
-        if m and last_band:
-            title, year = m.group(1), int(m.group(2))
-            acc.add("albums", title, s_off, title=title, artist=last_band,
-                    release_year=year, description=sent)
-            acc.rel("RELEASED", "band", last_band, "album", title, year=year, context=sent)
-            last_album = title
-
-        m = P_RECORDED_AT.search(sent) if "was recorded at" in s_low else None
-        if m:
-            title, studio = m.group(1), m.group(2)
-            acc.add("albums", title, s_off, title=title, description=sent, studio=studio)
-            acc.add("studios", studio, s_off, famous_for=sent)
-            acc.rel("RECORDED_AT", "album", title, "studio", studio, context=sent)
-
-        m = P_RELEASED_BY.search(sent) if "was released by" in s_low else None
-        if m:
-            title, label = m.group(1), m.group(2)
-            acc.add("albums", title, s_off, title=title, description=sent, label=label)
-            acc.add("labels", label, s_off)
-            acc.rel("RELEASED_BY", "album", title, "label", label, context=sent)
-
-        m = P_PLAYS.search(sent) if " plays " in s_low else None
-        if m:
-            band, genre = m.group(1), m.group(2).lower()
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("subgenres", genre, s_off, key_characteristics=sent)
-            acc.rel("PLAYS_GENRE", "band", band, "subgenre", genre, context=sent)
-            last_band = band
-
-        m = P_INFLUENCED.search(sent) if "influenced by" in s_low else None
-        if m:
-            a, b = m.group(1), m.group(2)
-            acc.add("bands", a, s_off, description=sent)
-            acc.add("bands", b, s_off, description=sent)
-            acc.rel("INFLUENCED_BY", "band", a, "band", b, context=sent)
-
-        m = P_MOVEMENT.search(sent) if "movement began in" in s_low else None
-        if m:
-            movement, _abbrev, decade, band_list = m.group(1), m.group(2), int(m.group(3)), m.group(4)
-            bands = [b.strip() for b in P_LIST_SPLIT.split(band_list) if b.strip()]
-            acc.add("movements", movement, s_off, start_year=decade,
-                    key_bands=bands, description=sent)
-            for b in bands:
-                acc.add("bands", b, s_off, description=sent)
-                acc.rel("PART_OF_MOVEMENT", "band", b, "movement", movement, context=sent)
-
-        m = P_LEFT.search(sent) if " left " in s_low else None
-        if m:
-            year, person, band = int(m.group(1)), m.group(2), m.group(3)
-            acc.add("people", person, s_off, associated_bands=[band], description=sent)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("events", f"{person} leaves {band}", s_off,
-                    date=str(year), type="other", description=sent)
-            acc.rel("MEMBER_OF", "person", person, "band", band, year=year, context=sent)
-            last_band, last_year = band, year
-
-        m = P_REPLACED.search(sent) if "replaced by" in s_low else None
-        if m and last_band:
-            person, former_band = m.group(1), m.group(2)
-            bands = [last_band] + ([former_band] if former_band else [])
-            acc.add("people", person, s_off, associated_bands=bands, description=sent)
-            acc.rel("MEMBER_OF", "person", person, "band", last_band,
-                    year=last_year, context=sent)
-            if former_band:
-                acc.add("bands", former_band, s_off, description=sent)
-                acc.rel("MEMBER_OF", "person", person, "band", former_band, context=sent)
-
-        m = P_ACTIVE_DURING.search(sent) if "was active during" in s_low else None
-        if m:
-            band, era = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("eras", era, s_off, era_start=ERAS[era][0], era_end=ERAS[era][1])
-            acc.rel("ACTIVE_DURING", "band", band, "era", era, context=sent)
-
-        m = P_EMERGED_DURING.search(sent) if "emerged during" in s_low else None
-        if m:
-            genre, era = m.group(1).lower(), m.group(2)
-            acc.add("subgenres", genre, s_off)
-            acc.add("eras", era, s_off, era_start=ERAS[era][0], era_end=ERAS[era][1])
-            acc.rel("EMERGED_DURING", "subgenre", genre, "era", era, context=sent)
-
-        m = P_DOCUMENTED_IN.search(sent) if "was documented in" in s_low else None
-        if m:
-            band, outlet = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("media_outlets", outlet, s_off)
-            acc.rel("DOCUMENTED_IN", "band", band, "media_outlet", outlet, context=sent)
-
-        m = P_FEATURED_IN.search(sent) if "was featured in" in s_low else None
-        if m:
-            album, outlet = m.group(1), m.group(2)
-            acc.add("albums", album, s_off, title=album)
-            acc.add("media_outlets", outlet, s_off)
-            acc.rel("FEATURED_IN", "album", album, "media_outlet", outlet, context=sent)
-
-        m = P_PARTICIPATED.search(sent) if "participated in" in s_low else None
-        if m:
-            band, cev = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("events", cev, s_off, type="festival", description=sent)
-            acc.rel("PARTICIPATED_IN", "band", band, "event", cev, context=sent)
-
-        m = P_INFLUENCED_EVENT.search(sent) if "heavily shaped" in s_low else None
-        if m:
-            band, cev = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("events", cev, s_off, type="festival", description=sent)
-            acc.rel("INFLUENCED_EVENT", "band", band, "event", cev, context=sent)
-
-        m = P_HAS_CHAR.search(sent) if "is defined by" in s_low else None
-        if m:
-            genre, char = m.group(1).lower(), m.group(2)
-            acc.add("subgenres", genre, s_off)
-            acc.add("characteristics", char, s_off)
-            acc.rel("HAS_CHARACTERISTIC", "subgenre", genre,
-                    "characteristic", char, context=sent)
-
-        m = P_USES_TECH.search(sent) if " uses " in s_low else None
-        if m:
-            band, char = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("characteristics", char, s_off)
-            acc.rel("USES_TECHNIQUE", "band", band, "characteristic", char,
-                    context=sent)
-
-        m = P_ALBUM_FEAT.search(sent) if "showcases" in s_low else None
-        if m:
-            album, char = m.group(1), m.group(2)
-            acc.add("albums", album, s_off, title=album)
-            acc.add("characteristics", char, s_off)
-            acc.rel("ALBUM_FEATURES", "album", album, "characteristic", char,
-                    context=sent)
-
-        m = P_PRODUCED_BY.search(sent) if "was produced by" in s_low else None
-        if m:
-            album, person = m.group(1), m.group(2)
-            acc.add("albums", album, s_off, title=album)
-            acc.add("people", person, s_off, description=sent)
-            acc.rel("PRODUCED", "person", person, "album", album, context=sent)
-
-        m = P_REPRESENTS.search(sent) if "represents" in s_low else None
-        if m:
-            album, genre = m.group(1), m.group(2).lower()
-            acc.add("albums", album, s_off, title=album)
-            acc.add("subgenres", genre, s_off)
-            acc.rel("REPRESENTS_GENRE", "album", album, "subgenre", genre,
-                    context=sent)
-
-        m = P_SCENE_SPAWNED.search(sent) if "scene spawned" in s_low else None
-        if m:
-            city, band = m.group(1), m.group(2)
-            acc.add("locations", city, s_off, city=city, country="",
-                    scene_description=f"Metal scene in {city}")
-            acc.add("bands", band, s_off, description=sent)
-            acc.rel("SCENE_SPAWNED", "location", city, "band", band, context=sent)
-
-        m = P_SCENE_DEVELOPED.search(sent) if "scene developed" in s_low else None
-        if m:
-            city, genre = m.group(1), m.group(2).lower()
-            acc.add("locations", city, s_off, city=city, country="",
-                    scene_description=f"Metal scene in {city}")
-            acc.add("subgenres", genre, s_off)
-            acc.rel("SCENE_DEVELOPED", "location", city, "subgenre", genre,
-                    context=sent)
-
-        m = P_CITED.search(sent) if "cited" in s_low else None
-        if m:
-            band, album = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("albums", album, s_off, title=album)
-            # CITATION(Band→Album, quote/context), initialize_kuzu.py:214
-            acc.rel("CITATION", "band", band, "album", album, context=sent)
-
-        m = P_WENT_VIRAL.search(sent) if "went viral" in s_low else None
-        if m:
-            song, phen = m.group(1), m.group(2)
-            acc.add("songs", song, s_off, title=song)
-            acc.add("viral_phenomena", phen, s_off)
-            # WENT_VIRAL(Song→ViralPhenomenon), enhanced cypher :116
-            acc.rel("WENT_VIRAL", "song", song, "viral_phenomenon", phen,
-                    context=sent)
-
-        m = P_EQUIPMENT.search(sent) if "recorded with the" in s_low else None
-        if m:
-            band, equip = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("equipment", equip, s_off, type=EQUIPMENT[equip]["type"],
-                    manufacturer=EQUIPMENT[equip]["manufacturer"])
-            # USES_EQUIPMENT(Band→Equipment), enhanced cypher :109
-            acc.rel("USES_EQUIPMENT", "band", band, "equipment", equip, context=sent)
-
-        m = P_VENUE.search(sent) if "played at" in s_low else None
-        if m:
-            band, venue = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("venues", venue, s_off, type=VENUES[venue]["type"],
-                    location=VENUES[venue]["location"])
-            # VENUE_HOSTED(Venue→Band), enhanced cypher :198
-            acc.rel("VENUE_HOSTED", "venue", venue, "band", band, context=sent)
-
-        m = P_PLATFORM.search(sent) if "was promoted on" in s_low else None
-        if m:
-            band, platform = m.group(1), m.group(2)
-            acc.add("bands", band, s_off, description=sent)
-            acc.add("platforms", platform, s_off, type=PLATFORMS[platform]["type"])
-            # PROMOTED_ON(Band→Platform), enhanced cypher :114
-            acc.rel("PROMOTED_ON", "band", band, "platform", platform, context=sent)
-
-        m = P_PRODSTYLE.search(sent) if "was produced with the" in s_low else None
-        if m:
-            album, style = m.group(1), m.group(2)
-            acc.add("albums", album, s_off, title=album)
-            acc.add("production_styles", style, s_off,
-                    key_characteristics=PRODUCTION_STYLES[style]["key_characteristics"])
-            # PRODUCED_WITH_STYLE(Album→ProductionStyle), enhanced cypher :119
-            acc.rel("PRODUCED_WITH_STYLE", "album", album,
-                    "production_style", style, context=sent)
-
-        m = P_TRACK.search(sent) if "features the track" in s_low else None
-        if m:
-            album, song = m.group(1), m.group(2)
-            artist = last_band if album == last_album else None
-            acc.add("albums", album, s_off, title=album)
-            acc.add("songs", song, s_off, title=song, album=album, artist=artist)
-            acc.rel("CONTAINS_TRACK", "album", album, "song", song, context=sent)
-
-        m = P_PERFORMED.search(sent) if "performed on" in s_low else None
-        if m:
-            person, album, instrument = m.group(1), m.group(2), m.group(3)
-            acc.add("people", person, s_off, instruments=[instrument], description=sent)
-            acc.add("albums", album, s_off, title=album)
-            # reference PERFORMED_ON(Person→Album, instruments[]),
-            # initialize_kuzu.py:184; instruments land in props.role
-            acc.rel("PERFORMED_ON", "person", person, "album", album,
-                    role=instrument, context=sent)
-
-        m = P_CONTEMP.search(sent) if "were contemporaries" in s_low else None
-        if m:
-            a, b = m.group(1), m.group(2)
-            acc.add("bands", a, s_off, description=sent)
-            acc.add("bands", b, s_off, description=sent)
-            acc.rel("CONTEMPORARY_OF", "band", a, "band", b, context=sent)
-
-        m = P_MENTIONED.search(sent) if "mentioned alongside" in s_low else None
-        if m:
-            a, b = m.group(1), m.group(2)
-            acc.add("bands", a, s_off, description=sent)
-            acc.add("bands", b, s_off, description=sent)
-            # reference MENTIONED_WITH(Band→Band, context), initialize_kuzu.py:212
-            acc.rel("MENTIONED_WITH", "band", a, "band", b, context=sent)
-
-        m = P_ORIGINATED.search(sent) if "originated in" in s_low else None
-        if m:
-            genre, city, country = m.group(1).lower(), m.group(2), m.group(3)
-            acc.add("subgenres", genre, s_off, key_characteristics=sent)
-            acc.add("locations", city, s_off, city=city, country=country or "",
-                    scene_description=f"Metal scene in {city}")
-            acc.rel("ORIGINATED_IN", "subgenre", genre, "location", city, context=sent)
-
-        m = P_EVOLVED.search(sent) if "evolved into" in s_low else None
-        if m:
-            g1, g2 = m.group(1).lower(), m.group(2).lower()
-            acc.add("subgenres", g1, s_off, key_characteristics=sent)
-            acc.add("subgenres", g2, s_off, key_characteristics=sent)
-            acc.rel("EVOLVED_INTO", "subgenre", g1, "subgenre", g2, context=sent)
+        for gate, search, emit in RULES:
+            if gate in s_low:
+                m = search(sent)
+                if m:
+                    emit(acc, m, sent, s_off)
 
     # Gazetteer sweep: every known alias, linked to its best candidate
     # type by context score; fills in mentions the patterns missed.
@@ -604,7 +556,7 @@ def extract_from_text(text: str) -> tuple[list[dict], list[dict]]:
         else:
             acc.add(etype, surface, m.start())
     for m in P_GENRE_ALIAS.finditer(text):
-        acc.add("subgenres", m.group(0).lower(), m.start())
+        acc.add("subgenres", _surface("subgenres", m.group(0)), m.start())
 
     mentions = []
     for idx, (etype, entity) in enumerate(acc.ordered_mentions()):

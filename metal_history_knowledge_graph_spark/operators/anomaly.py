@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from .quantiles import exact_quantiles
 
@@ -52,15 +53,18 @@ def mad_outliers(
     unflagged (is_outlier false, z NULL) — missing is not anomalous."""
     if threshold_milli <= 0:
         raise ValueError(f"threshold_milli must be > 0, got {threshold_milli}")
-    dt = df.schema[value_col].dataType.typeName()
-    if dt not in ("byte", "short", "integer", "long"):
+    dt = df.schema[value_col].dataType
+    # a scale-0 DECIMAL of at most 18 digits always fits a long exactly
+    integral = dt.typeName() in ("byte", "short", "integer", "long") or (
+        isinstance(dt, DecimalType) and dt.scale == 0 and dt.precision <= 18)
+    if not integral:
         # the fixed-point flag rule is exact only over integers; a
         # DOUBLE column would be silently truncated by the long cast
         # and the flags would drift from the documented |x−med| rule
         # (ADVICE r4 #2) — scale to fixed-point upstream instead
         raise TypeError(
             f"mad_outliers needs an integral column; {value_col!r} is "
-            f"{dt} — multiply to fixed-point (e.g. micro-units) first"
+            f"{dt.simpleString()} — multiply to fixed-point (e.g. micro-units) first"
         )
     x = F.col(value_col).cast("long")
     med_df = (

@@ -168,22 +168,33 @@ DAMPING_PCT = 85  # PageRank's damping d, in percent
 KATZ_ALPHA_PCT = 20  # Katz's attenuation α, in percent
 
 
+_BAD_WEIGHT = "null/non-positive weights — corrupt input"
+
+
 def _directed_edges(edges: DataFrame, weighted: bool = False) -> DataFrame:
     """(src, dst, w) for the distinct ``subj_id → obj_id`` pairs with
     src != dst, checkpointed once. ``w`` is 1, or with ``weighted`` the
     sum of the pair's ``weight`` values; a null or non-positive weight
-    raises (corrupt input, not a convention)."""
+    raises (corrupt input, not a convention) from within that one
+    pass, so the input lineage runs once."""
     cols = [F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")]
     if not weighted:
         e = edges.select(*cols).filter(F.col("src") != F.col("dst")).distinct()
         return e.withColumn("w", F.lit(1)).localCheckpoint(eager=True)
-    e = edges.select(*cols, F.col("weight").cast("long").alias("w")) \
-        .filter(F.col("src") != F.col("dst"))
+    w = F.col("weight").cast("long")
     # isNull() must be explicit: NULL <= 0 is NULL, so a bare w <= 0
-    # filter would let NULL-weight edges silently vanish from the sums
-    if e.filter(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count():
-        raise ValueError("pagerank_weighted: null/non-positive weights — corrupt input")
-    return e.groupBy("src", "dst").agg(F.sum("w").alias("w")).localCheckpoint(eager=True)
+    # flag would let NULL-weight edges silently vanish from the sums
+    e = edges.select(*cols, w.alias("w"), (w.isNull() | (w <= 0)).alias("bad")) \
+        .filter(F.col("src") != F.col("dst")) \
+        .groupBy("src", "dst").agg(F.sum("w").alias("w"), F.max("bad").alias("bad")) \
+        .select("src", "dst", F.when(F.col("bad"), F.raise_error(F.lit(_BAD_WEIGHT)))
+                .otherwise(F.col("w")).alias("w"))
+    try:
+        return e.localCheckpoint(eager=True)
+    except Exception as err:
+        if _BAD_WEIGHT in str(err):
+            raise ValueError(f"pagerank_weighted: {_BAD_WEIGHT}") from None
+        raise
 
 
 def _node_set(e: DataFrame, extra: DataFrame | None = None) -> DataFrame:

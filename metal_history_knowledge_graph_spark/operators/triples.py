@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.patterns import SINGULAR
 from ..functions.plan_hints import drop_pin, hash_agg_pin
 from .canonicalize import provenance_pools
 
@@ -56,26 +57,37 @@ PREDICATE_ALIASES = {
     "produced": "PRODUCED", "recorded_at": "RECORDED_AT",
 }
 
-#: relationship endpoint types are singular (extraction contract);
-#: entity tables use the plural extraction types.
-SINGULAR_TO_PLURAL = {
-    "band": "bands", "person": "people", "album": "albums", "song": "songs",
-    "subgenre": "subgenres", "genre": "subgenres", "location": "locations",
-    "event": "events", "equipment": "equipment", "studio": "studios",
-    "label": "labels", "movement": "movements", "venue": "venues",
-    "platform": "platforms", "production_style": "production_styles",
-    "era": "eras", "media_outlet": "media_outlets",
-    "characteristic": "characteristics",
-    "viral_phenomenon": "viral_phenomena",
-}
+#: relationship endpoint type (singular, the extraction contract) →
+#: entity table type (plural): the extractor's ``SINGULAR`` inverted,
+#: plus the ``genre`` alias.
+SINGULAR_TO_PLURAL = {s: p for p, s in SINGULAR.items()} | {"genre": "subgenres"}
+
+
+def _inferred(rows: DataFrame, rel_type: str, from_type: str, from_name,
+              to_type: str, to_name, context: str, year=None, role=None) -> DataFrame:
+    """One inferred-rule select: the relationship-candidate columns of
+    ``rel_type`` rows ``from_name → to_name``, ordered by the entity's
+    ``first_seen``."""
+    return rows.select(
+        F.lit(rel_type).alias("rel_type"),
+        F.lit(from_type).alias("from_entity_type"), from_name.alias("from_entity_name"),
+        F.lit(to_type).alias("to_entity_type"), to_name.alias("to_entity_name"),
+        (F.lit(None) if year is None else year).cast("int").alias("rel_year"),
+        (F.lit(None) if role is None else role).cast("string").alias("rel_role"),
+        F.lit(context).alias("rel_context"),
+        F.col("first_seen").alias("order_key"),
+        F.lit(None).cast("string").alias("url"),
+    )
 
 
 def infer_relationships(entities: DataFrame) -> DataFrame:
     """Inferred rels from canonical entity attrs
     (03_deduplicate_entities.sh:223-259): person.associated_bands ⇒
     MEMBER_OF (role = first instrument, default 'member'); album.artist
-    ⇒ RELEASED (year = release_year). Emitted in the canonical
-    entity's first_seen order slot so dedup stays deterministic."""
+    ⇒ RELEASED (year = release_year); song.album ⇒ CONTAINS_TRACK (the
+    reference's _create_contains_track_relationships,
+    load_to_kuzu.py:765-791). Emitted in the canonical entity's
+    first_seen order slot so dedup stays deterministic."""
     attrs = F.from_json(
         "attrs_json",
         "struct<associated_bands:array<string>, instruments:array<string>, "
@@ -83,58 +95,21 @@ def infer_relationships(entities: DataFrame) -> DataFrame:
         "album:string, track_number:int>",
     )
     e = entities.withColumn("a", attrs)
-
-    member_of = (
-        e.filter(F.col("entity_type") == "people")
-        .select(
-            F.col("canonical_name").alias("from_entity_name"),
-            F.explode("a.associated_bands").alias("to_entity_name"),
-            F.coalesce(F.element_at("a.instruments", 1), F.lit("member")).alias("rel_role"),
-            F.col("first_seen").alias("order_key"),
-        )
-        .select(
-            F.lit("MEMBER_OF").alias("rel_type"),
-            F.lit("person").alias("from_entity_type"), "from_entity_name",
-            F.lit("band").alias("to_entity_type"), "to_entity_name",
-            F.lit(None).cast("int").alias("rel_year"), "rel_role",
-            F.lit("Inferred from associated_bands").alias("rel_context"),
-            "order_key",
-            F.lit(None).cast("string").alias("url"),
-        )
+    canonical = F.col("canonical_name")
+    people = e.filter(F.col("entity_type") == "people") \
+        .withColumn("band", F.explode("a.associated_bands"))
+    albums = e.filter((F.col("entity_type") == "albums") & F.col("a.artist").isNotNull())
+    songs = e.filter((F.col("entity_type") == "songs") & F.col("a.album").isNotNull())
+    return (
+        _inferred(people, "MEMBER_OF", "person", canonical, "band", F.col("band"),
+                  "Inferred from associated_bands",
+                  role=F.coalesce(F.element_at("a.instruments", 1), F.lit("member")))
+        .unionByName(_inferred(albums, "RELEASED", "band", F.col("a.artist"), "album",
+                               canonical, "Inferred from album data",
+                               year=F.col("a.release_year")))
+        .unionByName(_inferred(songs, "CONTAINS_TRACK", "album", F.col("a.album"), "song",
+                               canonical, "Inferred from song data"))
     )
-    released = (
-        e.filter((F.col("entity_type") == "albums") & F.col("a.artist").isNotNull())
-        .select(
-            F.lit("RELEASED").alias("rel_type"),
-            F.lit("band").alias("from_entity_type"),
-            F.col("a.artist").alias("from_entity_name"),
-            F.lit("album").alias("to_entity_type"),
-            F.col("canonical_name").alias("to_entity_name"),
-            F.col("a.release_year").alias("rel_year"),
-            F.lit(None).cast("string").alias("rel_role"),
-            F.lit("Inferred from album data").alias("rel_context"),
-            F.col("first_seen").alias("order_key"),
-            F.lit(None).cast("string").alias("url"),
-        )
-    )
-    # song.album ⇒ CONTAINS_TRACK (the reference's
-    # _create_contains_track_relationships, load_to_kuzu.py:765-791)
-    contains_track = (
-        e.filter((F.col("entity_type") == "songs") & F.col("a.album").isNotNull())
-        .select(
-            F.lit("CONTAINS_TRACK").alias("rel_type"),
-            F.lit("album").alias("from_entity_type"),
-            F.col("a.album").alias("from_entity_name"),
-            F.lit("song").alias("to_entity_type"),
-            F.col("canonical_name").alias("to_entity_name"),
-            F.lit(None).cast("int").alias("rel_year"),
-            F.lit(None).cast("string").alias("rel_role"),
-            F.lit("Inferred from song data").alias("rel_context"),
-            F.col("first_seen").alias("order_key"),
-            F.lit(None).cast("string").alias("url"),
-        )
-    )
-    return member_of.unionByName(released).unionByName(contains_track)
 
 
 def normalize_predicates(rels: DataFrame) -> DataFrame:

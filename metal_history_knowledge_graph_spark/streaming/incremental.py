@@ -40,11 +40,13 @@ def ingest_batch(store: TableStore, batch_df: DataFrame, run_id: str, batch_id: 
     chunks table — the anti-join's build side stays O(distinct urls ×
     one column) instead of growing with full chunk history. Crash
     semantics: the streaming checkpoint already prevents re-running a
-    completed foreachBatch; if a crash lands between the chunks append
-    and the url append, the replayed batch re-appends that batch's
-    chunks (parquet mode). On Iceberg both appends are snapshot
-    commits and a single transaction closes that window — which is the
-    production deployment this engine targets."""
+    completed foreachBatch. The batch is three separate appends —
+    chunks, extracted rows, processed urls — in parquet mode and on
+    Iceberg alike (there each is its own snapshot commit; no
+    transaction spans them). A crash after the first and before the
+    last leaves the batch's urls out of ``processed_urls``, so the
+    replay appends its chunks again. One commit for the multi-table
+    append is ROADMAP direction 2 (crash-consistent commits)."""
     n = append_new_pages(store, batch_df)
     if n:
         commit_stage(store, run_id, f"stream-batch-{batch_id}", n)

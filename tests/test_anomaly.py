@@ -98,3 +98,23 @@ def test_double_valued_column_rejected(spark):
     rows = mad_outliers(micro, "v_micro", sample_rate=1.0).collect()
     flagged = {r["k"] for r in rows if r["is_outlier"]}
     assert flagged == {99}
+
+
+def test_scale_zero_decimal_column_accepted(spark):
+    # DECIMAL(p, 0) with p <= 18 is exact under the long cast, so it
+    # flags exactly as the same values held as longs; a fractional
+    # decimal is rejected like a double
+    vals = [8 + (i % 5) for i in range(40)] + [5000]
+    as_long = _df(spark, vals)
+    as_dec = as_long.withColumn("v", F.col("v").cast("decimal(12,0)"))
+    flags = [
+        sorted((r["k"], r["is_outlier"], r["robust_z_milli"]) for r in
+               mad_outliers(df, "v", sample_rate=1.0).collect())
+        for df in (as_long, as_dec)
+    ]
+    assert flags[0] == flags[1]
+    assert {k for k, flagged, _ in flags[1] if flagged} == {40}
+    with pytest.raises(TypeError, match="integral"):
+        mad_outliers(as_long.withColumn("v", F.col("v").cast("decimal(12,2)")), "v")
+    with pytest.raises(TypeError, match="integral"):
+        mad_outliers(as_long.withColumn("v", F.col("v").cast("decimal(20,0)")), "v")

@@ -47,3 +47,27 @@ def test_exports_removed_at_exit():
     root = out.stdout.strip().splitlines()[-1]
     assert os.path.basename(root).startswith("kg_entry_")
     assert not os.path.exists(root)
+
+
+def test_cache_root_keyed_by_code_version():
+    """The shared KG store and LSH index caches are resumed across
+    processes: a store built by other code must get another root."""
+    a = entry._cache_root("kg_entry_store_sf0.01_x", "a" * 40)
+    b = entry._cache_root("kg_entry_store_sf0.01_x", "b" * 40)
+    assert a != b
+    assert entry._cache_root("kg_entry_store_sf0.01_x", "a" * 40) == a
+    assert len(entry._package_digest()) == 40
+
+
+def test_current_cache_root_removes_other_versions(tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(entry, "_package_digest", lambda: "c" * 40)
+    old = entry._cache_root("kg_lsh_index_d_sf0.01", "d" * 40)
+    for path in (old, str(tmp_path / "kg_lsh_index_d_sf0.01"),
+                 str(tmp_path / "kg_lsh_index_d_sf0.1")):
+        os.makedirs(path)
+    root = entry._current_cache_root("kg_lsh_index_d_sf0.01")
+    assert root == entry._cache_root("kg_lsh_index_d_sf0.01", "c" * 40)
+    assert sorted(os.listdir(tmp_path)) == ["kg_lsh_index_d_sf0.1"]

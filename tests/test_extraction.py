@@ -199,18 +199,21 @@ def test_full_base_whitelist_extraction():
 
 
 def test_all_base_predicates_emittable():
-    """The pattern bank covers the reference's full 27-predicate base
-    whitelist (load_to_kuzu.py:813-821)."""
+    """Every rule of the pattern bank fires on the default corpus: the
+    chunks of its first 50 pages carry every predicate of the
+    reference's 27-predicate base whitelist (load_to_kuzu.py:813-821)
+    and every enhanced-schema predicate the engine emits."""
+    from metal_history_knowledge_graph_spark.functions.chunker import split_text
     from metal_history_knowledge_graph_spark.operators.triples import (
         BASE_PREDICATES,
+        ENHANCED_PREDICATES,
     )
-
-    import metal_history_knowledge_graph_spark.functions.patterns as P
+    from metal_history_knowledge_graph_spark.sources.corpus import build_page
 
     emitted = set()
-    import re as _re
-    src = open(P.__file__).read()
-    for m in _re.finditer(r'acc\.rel\(\s*"([A-Z_]+)"', src):
-        emitted.add(m.group(1))
-    missing = set(BASE_PREDICATES) - emitted
-    assert not missing, f"base predicates with no extraction pattern: {missing}"
+    for i in range(50):
+        page = build_page(i, 42, "default")
+        for chunk in split_text(page["text"], page["url"]):
+            emitted |= {r["type"] for r in extract_from_text(chunk["text"])[1]}
+    missing = set(BASE_PREDICATES + ENHANCED_PREDICATES) - emitted
+    assert not missing, f"predicates no extraction rule emitted: {missing}"

@@ -437,6 +437,23 @@ def test_pagerank_weighted_degenerates_and_shifts_mass(spark):
         pagerank_weighted(bad_null)
 
 
+
+def test_weighted_edge_set_runs_its_input_once(spark, jobs_started):
+    # the bad-weight check rides in the one checkpointed aggregate: the
+    # weighted edge set starts no more jobs than the unweighted one
+    # (a separate check action would run the input lineage again)
+    from metal_history_knowledge_graph_spark.operators.graph_algos import _directed_edges
+
+    edges = spark.range(40).select(
+        (F.col("id") % 7).alias("subj_id"), (F.col("id") % 5).alias("obj_id"),
+        (F.col("id") % 3 + 1).alias("weight"),
+    )
+    weighted, jobs = jobs_started(lambda: _directed_edges(edges, weighted=True))
+    _, unweighted_jobs = jobs_started(lambda: _directed_edges(edges))
+    assert jobs == unweighted_jobs
+    assert weighted.agg(F.sum("w")).first()[0] == edges.filter(
+        F.col("subj_id") != F.col("obj_id")).agg(F.sum("weight")).first()[0]
+
 # ---- funnel analysis (funnel_steps / funnel_counts) ----
 
 
